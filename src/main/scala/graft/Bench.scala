@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.Tuning
 
 /** Benchmark main. Robustness against environment pressure (the round-1
   * record was a 10× environmental outlier vs the same code re-run):
@@ -18,9 +18,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def clearSessionDebris(spark: SparkSession): Unit =
-    SessionHygiene.clear(spark)
-
   /** Evaluate EVERY output column of the frame without collecting it.
     * `count()` is not a benchmark action: Catalyst prunes columns the
     * count doesn't need, which drops whole Project pipelines and even
@@ -32,33 +29,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 3 iterations: the per-query MIN converges even when one full pass
     // lands under transient co-located load (observed 26-38s run-to-run
     // band for an identical binary at 2 iterations)
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the shipped session shape: custom functions + TVFs + optimizer
-      // rule installed the cluster way (q281 routes through its TVF)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // The generated-class cache defaults to 100 entries; an 80+-query
-      // suite compiles far more codegen stages than that per pass, so
-      // every query would LRU-evict and Janino-recompile every iteration
-      // (q47's ~8 sequential jobs re-paid ~8s of compile per pass in the
-      // round-2 record: 10.5s recorded vs 2.6s isolated). Static conf —
-      // must be set before the first session in the JVM.
-      // r11: 4096 → 16384 — the 302-query suite compiles >4096 distinct
-      // stages per pass, so the LRU cycled completely every pass and the
-      // whole suite re-paid Janino each iteration (measured: 153.0 →
-      // 145.3 s solo, same tree, only this conf changed).
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    val cpus = GraftSession.cpus
     // JIT/codegen warmup OUTSIDE the timed region: run every query once
     // at the tiny scale factor so Janino compilation of the generated
     // code (dominant for the wide custom expressions — LSH keys, minhash
@@ -86,13 +62,15 @@ object Bench {
     // the fixture inputs; the subset's own first pass warms it).
     if (only.isEmpty) {
       try {
+        // the fixtures' operators ran under their queries' tuning
+        Tuning.cpuBound.applyTo(spark)
         graft.ops.Similarity.prebuildFixtures(spark, sfDir)
         graft.ops.Corpus.prebuildFixtures(spark, sfDir)
         graft.ops.Chunking.prebuildFixtures(spark, sfDir)
         graft.ops.TextStats.clfScoredPersisted(spark, sfDir)
       } catch { case _: Throwable => () }
     }
-    clearSessionDebris(spark)
+    SessionHygiene.clear(spark)
 
     val best = scala.collection.mutable.Map[String, Double]()
     val fails = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
@@ -111,7 +89,7 @@ object Bench {
         System.err.println(f"[trace] iter=$iter $name%s $sec%.3f")
       // Hygiene runs OUTSIDE the timed region: the next query should not
       // pay for (or benefit from) this one's cache/checkpoint leftovers.
-      clearSessionDebris(spark)
+      SessionHygiene.clear(spark)
       // Settle between full passes (GC + a short cooldown): the round-3
       // record showed whole-pass degradation — all three iterations of a
       // query can run under the same sustained pressure, which min-of-N

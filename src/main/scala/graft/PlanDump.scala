@@ -2,12 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries — the r13 plan
   * evidence (`plans/r13/<query>_{before,after}.txt`). Session config
-  * matches Bench exactly so the dumped plan is the one the bench runs
-  * (same extensions, same shuffle partitions, AQE on).
+  * is Bench's ([[GraftSession]]), so the dumped plan is the one the bench
+  * runs.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [query ...]
   *   - suffix: "before" | "after" (file name tag)
@@ -20,31 +18,18 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix) = args.take(3)
     val only = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        // r14 fix: the noop write used here before wraps the frame in a
-        // NEW QueryExecution, so `df.queryExecution` stayed un-executed
-        // and the dump showed the INITIAL adaptive plan
-        // (isFinalPlan=false) — AQE's runtime decisions (join-strategy
-        // conversion, AQEShuffleRead coalescing) never appeared.
-        // collect() drives THIS Dataset's own QueryExecution to the
-        // final plan (dump tool only — Bench keeps the noop sink).
-        df.collect()
+        // Drive THIS Dataset's QueryExecution to AQE's final plan (a noop
+        // write would plan a new one and leave this dump at
+        // isFinalPlan=false) without buffering the result on the driver:
+        // toLocalIterator holds at most one partition at a time.
+        df.toLocalIterator().forEachRemaining(_ => ())
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)

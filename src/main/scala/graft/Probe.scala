@@ -3,12 +3,12 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profiler for declared queries — the "open the Stages tab"
-  * loop from the optimization guide, headless. Runs a named query with
-  * the Bench session shape and prints, per stage: task count, total task
-  * time, max task time (straggler/serial signal), input/shuffle bytes.
+  * loop from the optimization guide, headless. Runs a named query in the
+  * Bench session ([[GraftSession]]) and prints, per stage: task count,
+  * total task time, max task time (straggler/serial signal),
+  * input/shuffle bytes.
   * A stage whose `tasks=1` but carries most of the task time is a
   * serial head; a stage with max >> avg is skew.
   *
@@ -19,17 +19,7 @@ object Probe {
     val sfDir = args(0)
     val name = args(1)
     val iters = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     case class St(stage: Int, name: String, tasks: Int, taskMs: Long,
         maxMs: Long, inputMB: Double, shReadMB: Double, shWriteMB: Double,

@@ -21,22 +21,15 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionHygiene {
   /** Drop cached relations and every pinned RDD block (blocking, so the
-    * memory is actually free before the next query starts). */
+    * memory is actually free before the next query starts), and reset
+    * every key a query's [[graft.queries.Tuning]] may have set. */
   def clear(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    // r13: drop per-query session tuning (QueryDef.cpuBound) so it cannot
-    // leak into the NEXT query's plan. The leaked minPartitionSize=1b
-    // disabled AQE partition coalescing for every query that ran after the
-    // first similarity/dedup query — at local[32] that is 32 near-empty
-    // tasks per exchange suite-wide (measured ~+0.1 s on q290 immediately
-    // after one leaked query; compounding across a 311-query session).
-    // Queries that need the tuning re-apply it in their own builders
-    // (every cpuBound caller runs it per invocation), so resetting here
-    // restores the intended per-query session shape.
-    spark.conf.unset("spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    spark.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-    spark.conf.unset("spark.sql.join.preferSortMergeJoin")
-    spark.conf.unset("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")
+    // Undo any query's declared tuning so it cannot leak into the next
+    // query's plan (a leaked coalesce floor once disabled AQE partition
+    // coalescing for every later query). The keys come from the one
+    // inventory queries declare from, so the two cannot drift apart.
+    graft.queries.Tuning.keys.foreach(spark.conf.unset)
   }
 }

@@ -24,7 +24,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(q => q.name -> q.fn).toMap
+    modules.map(q => q.name -> (q.fn _)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted only for non-SQL-expressible ops. */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,20 +8,7 @@ object Verify {
     // iteration); the driver always passes exactly two.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the shipped session shape: custom functions + TVFs + optimizer
-      // rule installed the cluster way (q281 routes through its TVF)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // see Bench: default 100-entry codegen cache thrashes on a
-      // 80+-query suite, recompiling every stage every query
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -3,6 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -150,18 +151,6 @@ object Md5Pool {
     * other Md5Pool use on the thread. */
   def acquire(): MessageDigest = {
     val md = tl.get(); md.reset(); md
-  }
-  private val HexChars = "0123456789abcdef".toCharArray
-  def toHex(bytes: Array[Byte]): String = {
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xff
-      out(2 * i) = HexChars(b >> 4)
-      out(2 * i + 1) = HexChars(b & 0xf)
-      i += 1
-    }
-    new String(out)
   }
 }
 
@@ -895,11 +884,13 @@ object GraftFunctions {
     "might_contain" -> (es => BloomFilterMightContain(es.head, es(1))))
 
   /** Session-scoped registration so `expr("quantized_dot(a, b)")` etc.
-    * resolve; idempotent. */
+    * resolve; idempotent. Names the registry already holds (an earlier
+    * call, or [[graft.GraftExtensions]]) are left as they are. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, b, "scala_udf")
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.queries.QueryDef
+import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
 
 /** Corpus-level token statistics over `documents` (★ SURVEY §2c — the
@@ -2169,7 +2169,7 @@ object Corpus {
 
     QueryDef("q123_hybrid_search",
       (s, d) => hybridSearch(s, d),
-      Some(hybridSearchSql)),
+      Some(hybridSearchSql), Tuning.cpuBound),
 
     QueryDef("q112_length_histogram",
       (s, d) => lengthHistogram(s, d),

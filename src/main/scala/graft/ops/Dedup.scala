@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.queries.QueryDef
+import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
 
 /** Deduplication over `documents` (★ SURVEY §2c): exact, n-gram Jaccard,
@@ -152,7 +152,6 @@ object Dedup {
       orderByDocFreq: Boolean = false, maxDocFreq: Option[Long] = None): DataFrame = {
     require(threshold == 0.8, "integer-exact prefix filter is derived for t=0.8")
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.cpuBound(docs.sparkSession)
     val base = maxDocFreq.foldLeft(shingled(docs))((b, cap) => capGrams(b, cap))
     val withSorted = canonicalSorted(base, orderByDocFreq)
     // materialize shingle+sort once: the table feeds four subtrees
@@ -199,7 +198,6 @@ object Dedup {
     * identical to `ngramJaccardPairs` whenever LSH recall holds. */
   def minhashLshPairs(docs: DataFrame, threshold: Double): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.cpuBound(docs.sparkSession)
     // checkpoint shingles (feeds bands + both verify sides) and bands
     // (both candidate join sides) so signatures are computed exactly once
     val sh = shingled(docs).withColumn("sorted", sort_array(col("grams"))).localCheckpoint()
@@ -251,7 +249,6 @@ object Dedup {
   def decontaminate(docs: DataFrame, threshold: Double,
       dedupFirst: Boolean = false): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.cpuBound(docs.sparkSession)
     val base =
       if (!dedupFirst) docs
       // one shuffle on doc_id; reps is corpus-keyed, so no broadcast
@@ -320,7 +317,6 @@ object Dedup {
   private[graft] def bloomTrainSurvivors(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(spark)
-    QueryDef.cpuBound(spark)
     val sh = shingled(t(spark, dir, "documents"))
       .withColumn("split", expr(Sampling.splitCase("doc_id")))
       .localCheckpoint() // feeds the bloom build, the verify join AND the train stream
@@ -629,7 +625,6 @@ object Dedup {
   /** The chunk stream: one row per chunk, (doc_id, source, fp, len). */
   def cdcChunks(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.cpuBound(docs.sparkSession)
     val p = 1000000007L
     val mask = (1 << CdcMaskBits) - 1
     val pows = CdcPows.mkString("array(", "L, ", "L)")
@@ -733,7 +728,6 @@ object Dedup {
     * / WinW), no pair output. */
   def winnowing(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.cpuBound(docs.sparkSession)
     val sel = QueryDef.spread(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("m", greatest(size(col("toks")) - lit(WinK - 1), lit(0)).cast("long"))
@@ -1189,7 +1183,6 @@ object Dedup {
 
   def simhash(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.cpuBound(docs.sparkSession)
     // r13: spread before the per-token md5 fold — the [[shingled]]
     // discipline, but CONDITIONAL: a bare-scan input is one task (3x on
     // q48's fingerprint pass at local[32]); a post-join input is already
@@ -1246,7 +1239,6 @@ object Dedup {
     * 0..32-bounded rollup over distinct candidate pairs. */
   def simhashDistanceHistogram(docs: DataFrame, nBands: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.cpuBound(docs.sparkSession)
     val width = SimhashBits / nBands
     val reps = exact(docs).select(col("keep_id").as("doc_id"))
     val fp = simhash(docs.join(reps, "doc_id")).localCheckpoint()
@@ -1642,9 +1634,8 @@ object Dedup {
   /** The reps-first LSH candidate mine with per-pair signatures and the
     * exact integer-micro Jaccard — q218's and q227's shared front end
     * (one shingle/signature pass, one band join, checkpointed). */
-  private def repCalibrationPairs(docs: DataFrame): DataFrame = {
+  private[graft] def repCalibrationPairs(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.cpuBound(docs.sparkSession)
     val reps = docs.join(exact(docs).select(col("keep_id").as("doc_id")), "doc_id")
     val sh = shingled(reps)
       .withColumn("sorted", sort_array(col("grams")))
@@ -1881,7 +1872,7 @@ object Dedup {
             CAST(len(list_intersect(sa.grams, sb.grams)) AS BIGINT) AS inter, sa.n AS na, sb.n AS nb
           FROM cand c JOIN s2 sa ON sa.doc_id = c.id_a JOIN s2 sb ON sb.doc_id = c.id_b)
         SELECT id_a, id_b, CAST(inter AS DOUBLE) / (na + nb - inter) AS jaccard
-        FROM v WHERE inter * 5 >= (na + nb - inter) * 4""")),
+        FROM v WHERE inter * 5 >= (na + nb - inter) * 4"""), Tuning.cpuBound),
 
     QueryDef("q49_dedup_jaccard_capped",
       (s, d) => ngramJaccardPairs(t(s, d, "documents"), 0.8, maxDocFreq = Some(4)),
@@ -1899,7 +1890,7 @@ object Dedup {
             CAST(len(list_intersect(sa.grams, sb.grams)) AS BIGINT) AS inter, sa.n AS na, sb.n AS nb
           FROM cand c JOIN s2 sa ON sa.doc_id = c.id_a JOIN s2 sb ON sb.doc_id = c.id_b)
         SELECT id_a, id_b, CAST(inter AS DOUBLE) / (na + nb - inter) AS jaccard
-        FROM v WHERE inter * 5 >= (na + nb - inter) * 4""")),
+        FROM v WHERE inter * 5 >= (na + nb - inter) * 4"""), Tuning.cpuBound),
 
     QueryDef("q42_dedup_minhash_lsh",
       // routed through its TVF form (r12 — the q281 discipline: the TVF
@@ -1907,7 +1898,7 @@ object Dedup {
       (s, d) => s.sql(
         s"SELECT * FROM dedup_near_pairs('$d/documents.parquet', 0.8)"),
       Some(s"""WITH $minhashPairsCtes
-        SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.8""")),
+        SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.8"""), Tuning.cpuBound),
 
     QueryDef("q53_dedup_clusters",
       (s, d) => nearDupClusters(t(s, d, "documents"), 0.8),
@@ -1924,14 +1915,14 @@ object Dedup {
           SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.node
         )
         SELECT node AS doc_id, CAST(MIN(lbl) AS BIGINT) AS cluster_id
-        FROM walk GROUP BY node""")),
+        FROM walk GROUP BY node"""), Tuning.cpuBound),
 
     QueryDef("q74_decontaminate",
       // routed through its TVF form (r13 — the q42 discipline: same
       // analyzed plan, the oracle hash keeps the SQL surface honest)
       (s, d) => s.sql(
         s"SELECT * FROM decontaminate('$d/documents.parquet', 0.8)"),
-      Some(decontaminateSql(0.8))),
+      Some(decontaminateSql(0.8)), Tuning.cpuBound),
 
     // the corpus has no organic character-level near-dups, so the query
     // injects a deterministic 1-edit variant of every 50th doc (the
@@ -1944,25 +1935,25 @@ object Dedup {
             col("source"), expr("substr(text, 2)").as("text"))
         editNearDupPairs(docs.unionByName(inj))
       },
-      Some(editNearDupPairsSql())),
+      Some(editNearDupPairsSql()), Tuning.cpuBound),
 
     QueryDef("q158_leakage_safe_folds",
       (s, d) => leakageSafeFolds(t(s, d, "documents")),
-      Some(leakageSafeFoldsSql())),
+      Some(leakageSafeFoldsSql()), Tuning.cpuBound),
 
     QueryDef("q159_cluster_size_histogram",
       (s, d) => clusterSizeHistogram(t(s, d, "documents")),
-      Some(clusterSizeHistogramSql())),
+      Some(clusterSizeHistogramSql()), Tuning.cpuBound),
 
     // gated against q159's UNCHANGED naive oracle — the q126 discipline:
     // the composed form must return the identical histogram
     QueryDef("q162_cluster_histogram_reps",
       (s, d) => clusterSizeHistogramDeduped(t(s, d, "documents")),
-      Some(clusterSizeHistogramSql())),
+      Some(clusterSizeHistogramSql()), Tuning.cpuBound),
 
     QueryDef("q163_leakage_folds_reps",
       (s, d) => leakageSafeFoldsDeduped(t(s, d, "documents")),
-      Some(leakageSafeFoldsSql())),
+      Some(leakageSafeFoldsSql()), Tuning.cpuBound),
 
     QueryDef("q175_dedup_savings",
       (s, d) => dedupSavings(t(s, d, "documents")),
@@ -1989,19 +1980,19 @@ object Dedup {
             .select((col("doc_id") + lit(EditInjOffset)).as("doc_id"),
               lit("mirror").as("source"), col("text"))))
       },
-      Some(clusterSourceMixSql)),
+      Some(clusterSourceMixSql), Tuning.cpuBound),
 
     QueryDef("q218_minhash_calibration",
       (s, d) => minhashCalibration(t(s, d, "documents")),
-      Some(minhashCalibrationSql)),
+      Some(minhashCalibrationSql), Tuning.cpuBound),
 
     QueryDef("q227_threshold_sweep",
       (s, d) => thresholdSweep(t(s, d, "documents")),
-      Some(thresholdSweepSql)),
+      Some(thresholdSweepSql), Tuning.cpuBound),
 
     QueryDef("q239_simhash_histogram",
       (s, d) => simhashDistanceHistogram(t(s, d, "documents")),
-      Some(simhashDistanceHistogramSql())),
+      Some(simhashDistanceHistogramSql()), Tuning.cpuBound),
 
     QueryDef("q216_source_dup_matrix",
       (s, d) => {
@@ -2024,7 +2015,7 @@ object Dedup {
 
     QueryDef("q131_bloom_decontaminate",
       (s, d) => bloomDecontaminate(s, d),
-      Some(bloomDecontaminateSql())),
+      Some(bloomDecontaminateSql()), Tuning.cpuBound),
 
     QueryDef("q89_dup_spans",
       (s, d) => dupSpans(t(s, d, "documents")),
@@ -2032,7 +2023,7 @@ object Dedup {
 
     QueryDef("q141_winnowing",
       (s, d) => winnowing(t(s, d, "documents")),
-      Some(winnowingSql())),
+      Some(winnowingSql()), Tuning.cpuBound),
 
     QueryDef("q90_span_contamination",
       (s, d) => spanContamination(t(s, d, "documents")),
@@ -2044,7 +2035,7 @@ object Dedup {
 
     QueryDef("q120_near_dup_rates",
       (s, d) => nearDupRates(s, d),
-      Some(nearDupRatesSql())),
+      Some(nearDupRatesSql()), Tuning.cpuBound),
 
     QueryDef("q125_dedup_minhash_reps",
       (s, d) => minhashLshPairsDeduped(t(s, d, "documents"), 0.8),
@@ -2052,43 +2043,44 @@ object Dedup {
         """(SELECT d.* FROM documents d
             JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) r
             USING (doc_id))""")}
-        SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.8""")),
+        SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.8"""), Tuning.cpuBound),
 
     // the reps-composed rate report is gated against q120's UNCHANGED
     // oracle: the whole point is output equality with the naive form
     QueryDef("q126_near_dup_rates_reps",
       (s, d) => nearDupRatesDeduped(s, d),
-      Some(nearDupRatesSql())),
+      Some(nearDupRatesSql()), Tuning.cpuBound),
 
     QueryDef("q128_cdc_chunks",
       (s, d) => cdcChunkStats(t(s, d, "documents")),
-      Some(cdcChunkStatsSql)),
+      Some(cdcChunkStatsSql), Tuning.cpuBound),
 
     QueryDef("q130_cdc_containment",
       (s, d) => cdcContainmentPairs(t(s, d, "documents")),
-      Some(cdcContainmentPairsSql())),
+      Some(cdcContainmentPairsSql()), Tuning.cpuBound),
 
     QueryDef("q88_decontaminate_reps",
       (s, d) => decontaminate(t(s, d, "documents"), 0.8, dedupFirst = true),
       Some(decontaminateSql(0.8,
         """(SELECT d.* FROM documents d
             JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) r
-            USING (doc_id))"""))),
+            USING (doc_id))""")), Tuning.cpuBound),
 
     QueryDef("q48_dedup_simhash_pairs",
       (s, d) => simhashPairs(t(s, d, "documents"), maxHamming = 3),
-      Some(simhashPairsSql("documents"))),
+      Some(simhashPairsSql("documents")), Tuning.cpuBound),
 
     QueryDef("q52_dedup_simhash_reps",
       (s, d) => simhashPairsDeduped(t(s, d, "documents"), maxHamming = 3),
       Some(simhashPairsSql(
         """(SELECT d.* FROM documents d
             JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) r
-            USING (doc_id))"""))),
+            USING (doc_id))""")), Tuning.cpuBound),
 
     QueryDef("q43_dedup_simhash",
       (s, d) => simhash(t(s, d, "documents")),
       Some(s"""SELECT doc_id, ${simhashExprs._2} AS simhash
-        FROM (SELECT doc_id, list_transform(string_split(text, ' '), t -> md5(t)) AS hs FROM documents)"""))
+        FROM (SELECT doc_id, list_transform(string_split(text, ' '), t -> md5(t)) AS hs FROM documents)"""),
+      Tuning.cpuBound)
   )
 }

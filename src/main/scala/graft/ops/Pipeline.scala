@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.queries.QueryDef
+import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
 
 /** The end-to-end training-corpus preparation pipelines (★ SURVEY §2c —
@@ -72,7 +72,6 @@ object Pipeline {
   private[graft] def cleanTrainStages(docs: DataFrame,
       w: Int = Dedup.SpanWidth): (DataFrame, DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    QueryDef.hashJoins(docs.sparkSession) // fp/id joins vs bounded sides (§3.1)
     // 1. quality cut, as a semi-join on the gated operator's survivors.
     // LAZY checkpoint: with one consumer (deduped, below) it adds only the
     // persist-while-passing cost; when the funnel also reads `kept` the
@@ -702,18 +701,18 @@ object Pipeline {
 
     QueryDef("q212_release_report",
       (s, d) => releaseReport(s, d),
-      Some(releaseReportSql)),
+      Some(releaseReportSql), Tuning.cpuBound),
 
     QueryDef("q91_train_shard",
       (s, d) => prepareTrainShard(t(s, d, "documents")),
-      Some(prepareTrainShardSql(Dedup.SpanWidth))),
+      Some(prepareTrainShardSql(Dedup.SpanWidth)), Tuning.hashJoins),
 
     QueryDef("q104_pretrain_corpus",
       (s, d) => preparePretrainCorpus(t(s, d, "documents"),
         weight = Sampling.srcNameWeight, delim = Cleaning.LineDelim,
         lineBlockToken = Cleaning.LineBlockToken,
         docBlockPhrase = Cleaning.DocBlockPhrase),
-      Some(preparePretrainCorpusSql(3L, Dedup.SpanWidth))),
+      Some(preparePretrainCorpusSql(3L, Dedup.SpanWidth)), Tuning.hashJoins),
 
     QueryDef("q134_jsonl_roundtrip",
       (s, d) => jsonlRoundtrip(s, d),
@@ -721,11 +720,11 @@ object Pipeline {
 
     QueryDef("q139_contamination_report",
       (s, d) => contaminationReport(s, d),
-      Some(contaminationReportSql)),
+      Some(contaminationReportSql), Tuning.cpuBound),
 
     QueryDef("q148_token_yield_funnel",
       (s, d) => tokenYieldFunnel(t(s, d, "documents")),
-      Some(tokenYieldFunnelSql())),
+      Some(tokenYieldFunnelSql()), Tuning.hashJoins),
 
     QueryDef("q184_quality_drift",
       (s, d) => {

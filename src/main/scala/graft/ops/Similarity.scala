@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.queries.QueryDef
+import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
 
 /** Similarity search over `embeddings` (★ SURVEY §2c): cosine top-k —
@@ -42,7 +42,6 @@ object Similarity {
     * and was ~50x slower on the O(n²) join hot path. */
   def quantized(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    QueryDef.cpuBound(spark)
     // spread the (often single-file) vector table before the O(n²) work
     QueryDef.spread(t(spark, dir, "embeddings"))
       .select(col("vec_id"), expr(quantExpr).as("qv"), col("label"))
@@ -1076,7 +1075,6 @@ object Similarity {
   private[graft] def ivfScoredPairsOn(spark: SparkSession, ranked: DataFrame,
       nprobe: Int = IvfNprobe, memberCap: Int = Int.MaxValue): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    QueryDef.cpuBound(spark)
     val membersAll = ranked.filter(col("rn") === 1)
       .select(col("vec_id").as("id_b"), col("qv").as("qb"),
         col("nrm").as("nb"), col("cent_id").as("cell"))
@@ -1129,7 +1127,6 @@ object Similarity {
   private[graft] def ivfScoredPairsSplit(spark: SparkSession, base: DataFrame,
       appends: DataFrame, nprobe: Int = IvfNprobe): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    QueryDef.cpuBound(spark)
     def members(df: DataFrame) = df.filter(col("rn") === 1)
       .select(col("vec_id").as("id_b"), col("qv").as("qb"),
         col("nrm").as("nb"), col("cent_id").as("cell"))
@@ -1186,7 +1183,6 @@ object Similarity {
       base: DataFrame, appends: DataFrame, nprobe: Int = IvfNprobe,
       cap: Int = IvfMemberCap): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    QueryDef.cpuBound(spark)
     def members(df: DataFrame) = df.filter(col("rn") === 1)
       .select(col("vec_id").as("id_b"), col("qv").as("qb"),
         col("nrm").as("nb"), col("cent_id").as("cell"),
@@ -3338,7 +3334,7 @@ object Similarity {
   val queries: Seq[QueryDef] = Seq(
     QueryDef("q271_cross_modal_alignment",
       (s, d) => crossModalAlignment(s, d),
-      Some(crossModalAlignmentSql)),
+      Some(crossModalAlignmentSql), Tuning.cpuBound),
 
     // The driver's pandas compare can't sort ARRAY columns, so the query
     // projects the centroid through array_join; labelCentroids keeps the
@@ -3352,26 +3348,26 @@ object Similarity {
         s AS (SELECT label, pos, SUM(x) AS s, COUNT(*) AS cnt FROM m GROUP BY 1, 2)
         SELECT label, array_to_string(list(s // cnt ORDER BY pos), ',') AS centroid,
           max(cnt) AS n_vecs
-        FROM s GROUP BY label""")),
+        FROM s GROUP BY label"""), Tuning.cpuBound),
 
     QueryDef("q122_label_outliers",
       (s, d) => labelOutliers(s, d),
-      Some(labelOutliersSql())),
+      Some(labelOutliersSql()), Tuning.cpuBound),
 
     QueryDef("q196_label_silhouette",
       (s, d) => labelSilhouette(s, d),
-      Some(labelSilhouetteSql)),
+      Some(labelSilhouetteSql), Tuning.cpuBound),
 
     QueryDef("q286_label_confusion",
       (s, d) => labelConfusion(s, d),
-      Some(labelConfusionSql)),
+      Some(labelConfusionSql), Tuning.cpuBound),
 
     QueryDef("q44_embed_near_dup",
       (s, d) => nearDupPairs(s, d, 0.4),
       Some(s"""WITH $quantCte
         SELECT a.vec_id AS id_a, b.vec_id AS id_b, $simSql AS sim
         FROM n a JOIN n b ON a.vec_id < b.vec_id
-        WHERE $simSql >= 0.4""")),
+        WHERE $simSql >= 0.4"""), Tuning.cpuBound),
 
     QueryDef("q45_knn_brute",
       (s, d) => knnBrute(s, d, 5),
@@ -3380,23 +3376,23 @@ object Similarity {
               FROM n a JOIN n b ON a.vec_id <> b.vec_id),
         r AS (SELECT vec_id, neighbor_id, sim,
               row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rank FROM p)
-        SELECT vec_id, rank, neighbor_id, sim FROM r WHERE rank <= 5""")),
+        SELECT vec_id, rank, neighbor_id, sim FROM r WHERE rank <= 5"""), Tuning.cpuBound),
 
     QueryDef("q136_semantic_decontaminate",
       (s, d) => semanticDecontaminate(s, d, 0.4),
-      Some(semanticDecontaminateSql(0.4))),
+      Some(semanticDecontaminateSql(0.4)), Tuning.cpuBound),
 
     QueryDef("q138_hard_triplets",
       (s, d) => hardTriplets(s, d),
-      Some(hardTripletsSql)),
+      Some(hardTripletsSql), Tuning.cpuBound),
 
     QueryDef("q142_rp_distortion",
       (s, d) => rpDistortion(s, d),
-      Some(rpDistortionSql)),
+      Some(rpDistortionSql), Tuning.cpuBound),
 
     QueryDef("q143_embed_dim_stats",
       (s, d) => embedDimStats(s, d),
-      Some(embedDimStatsSql)),
+      Some(embedDimStatsSql), Tuning.cpuBound),
 
     QueryDef("q133_mutual_top1",
       (s, d) => mutualTop1(knnBrute(s, d, 1)),
@@ -3408,7 +3404,7 @@ object Similarity {
         t1 AS (SELECT vec_id, neighbor_id, sim FROM r WHERE rank = 1)
         SELECT x.vec_id AS id_a, x.neighbor_id AS id_b, x.sim AS sim
         FROM t1 x JOIN t1 y ON x.vec_id = y.neighbor_id AND x.neighbor_id = y.vec_id
-        WHERE x.vec_id < x.neighbor_id""")),
+        WHERE x.vec_id < x.neighbor_id"""), Tuning.cpuBound),
 
     QueryDef("q46_knn_lsh",
       (s, d) => knnLsh(s, d, 3),
@@ -3422,11 +3418,11 @@ object Similarity {
               UNION ALL SELECT id_b, id_a, sim FROM p),
         r AS (SELECT vec_id, neighbor_id, sim,
               row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rank FROM d)
-        SELECT vec_id, rank, neighbor_id, sim FROM r WHERE rank <= 3""")),
+        SELECT vec_id, rank, neighbor_id, sim FROM r WHERE rank <= 3"""), Tuning.cpuBound),
 
     QueryDef("q47_knn_ivf",
       (s, d) => knnIvf(s, d, 3),
-      Some(knnIvfOracleSql)),
+      Some(knnIvfOracleSql), Tuning.cpuBound),
 
     // the persisted index round-trips through parquet and MUST return the
     // exact same answer — gated against q47's identical oracle. The
@@ -3438,7 +3434,7 @@ object Similarity {
       // session queries the shared persisted index by path
       (s, d) => s.sql(
         s"SELECT * FROM knn_ivf_persisted('${persistedIvfIndexDir(s, d)}', 3)"),
-      Some(knnIvfOracleSql)),
+      Some(knnIvfOracleSql), Tuning.cpuBound),
 
     // the q125 discipline applied to the embedding family (VERDICT r6
     // ask #2): the three brute-pair audits re-composed over the
@@ -3447,20 +3443,20 @@ object Similarity {
     QueryDef("q153_rp_distortion_ivf",
       (s, d) => rpDistortionOn(s, d,
         ivfNearDupPairs(s, persistedIvfIndexDir(s, d), 0.4)),
-      Some(rpDistortionIvfSql)),
+      Some(rpDistortionIvfSql), Tuning.cpuBound),
 
     QueryDef("q154_mutual_top1_ivf",
       (s, d) => mutualTop1(knnIvfPersisted(s, persistedIvfIndexDir(s, d), 1)),
-      Some(mutualTop1IvfSql)),
+      Some(mutualTop1IvfSql), Tuning.cpuBound),
 
     QueryDef("q155_hard_triplets_ivf",
       (s, d) => hardTripletsOn(s, d,
         ivfScoredPairs(s, persistedIvfIndexDir(s, d))),
-      Some(hardTripletsIvfSql)),
+      Some(hardTripletsIvfSql), Tuning.cpuBound),
 
     QueryDef("q161_mmr_rerank",
       (s, d) => mmrRerank(s, d),
-      Some(mmrRerankSql())),
+      Some(mmrRerankSql()), Tuning.cpuBound),
 
     QueryDef("q171_ivf_cell_occupancy",
       (s, d) => ivfCellOccupancy(s, persistedIvfIndexDir(s, d)),
@@ -3474,7 +3470,7 @@ object Similarity {
 
     QueryDef("q174_contrastive_pairs",
       (s, d) => contrastivePairs(s, d),
-      Some(contrastivePairsSql)),
+      Some(contrastivePairsSql), Tuning.cpuBound),
 
     // incremental maintenance round-trip: build on the even half, append
     // the odd half with the centroids FROZEN, query the result — must
@@ -3488,34 +3484,34 @@ object Similarity {
         appendToIvfIndex(s, idx, q.filter(expr("vec_id % 2 = 1")))
         knnIvfPersisted(s, idx, 3)
       },
-      Some(knnIvfIncrementalSql)),
+      Some(knnIvfIncrementalSql), Tuning.cpuBound),
 
     QueryDef("q206_pq_reconstruction",
       (s, d) => pqReconstructionAudit(s, d),
-      Some(pqReconstructionAuditSql)),
+      Some(pqReconstructionAuditSql), Tuning.cpuBound),
 
     QueryDef("q215_davies_bouldin",
       (s, d) => daviesBouldin(s, d),
-      Some(daviesBouldinSql)),
+      Some(daviesBouldinSql), Tuning.cpuBound),
 
     QueryDef("q222_embedding_norm_audit",
       (s, d) => embeddingNormAudit(s, d),
-      Some(embeddingNormAuditSql)),
+      Some(embeddingNormAuditSql), Tuning.cpuBound),
 
     QueryDef("q265_semantic_packing",
       (s, d) => semanticPacking(s, d),
-      Some(semanticPackingSql)),
+      Some(semanticPackingSql), Tuning.cpuBound),
 
     QueryDef("q256_embedding_version_drift",
       (s, d) => embeddingVersionDrift(s, d),
-      Some(embeddingVersionDriftSql)),
+      Some(embeddingVersionDriftSql), Tuning.cpuBound),
     QueryDef("q243_ivf_recall_curve",
       (s, d) => ivfRecallCurve(s, d),
-      Some(ivfRecallCurveSql())),
+      Some(ivfRecallCurveSql()), Tuning.cpuBound),
 
     QueryDef("q66_knn_ivf_pq",
       (s, d) => knnIvfPq(s, d, 3),
-      Some(knnIvfPqOracleSql(None))),
+      Some(knnIvfPqOracleSql(None)), Tuning.cpuBound),
 
     // capped-probe twins (SCALE.md lesson 4 answered in code): the same
     // trained indexes with the per-cell md5-draw member cap — candidate
@@ -3524,15 +3520,15 @@ object Similarity {
     // the recall the cap costs on q243's own truth axis.
     QueryDef("q296_knn_ivf_capped",
       (s, d) => knnIvfCapped(s, d, 3),
-      Some(knnIvfCappedOracleSql(IvfMemberCap))),
+      Some(knnIvfCappedOracleSql(IvfMemberCap)), Tuning.cpuBound),
 
     QueryDef("q297_knn_ivf_pq_capped",
       (s, d) => knnIvfPq(s, d, 3, memberCap = IvfMemberCap),
-      Some(knnIvfPqOracleSql(Some(IvfMemberCap)))),
+      Some(knnIvfPqOracleSql(Some(IvfMemberCap))), Tuning.cpuBound),
 
     QueryDef("q298_ivf_capped_recall",
       (s, d) => ivfCappedRecallCurve(s, d),
-      Some(ivfCappedRecallCurveSql())),
+      Some(ivfCappedRecallCurveSql()), Tuning.cpuBound),
 
     // r11: the q296 cap on the PRODUCTION index path — the persisted
     // index's cell join bounded per cell. Same oracle as q296: the
@@ -3541,7 +3537,7 @@ object Similarity {
     QueryDef("q303_knn_ivf_persisted_capped",
       (s, d) => knnIvfPersisted(s, persistedIvfIndexDir(s, d), 3,
         memberCap = IvfMemberCap),
-      Some(knnIvfCappedOracleSql(IvfMemberCap))),
+      Some(knnIvfCappedOracleSql(IvfMemberCap)), Tuning.cpuBound),
 
     // r11: the cap on the LSH family — band buckets are this path's hot
     // cells (duplicate clusters collapse into shared band keys; the
@@ -3563,7 +3559,7 @@ object Similarity {
               UNION ALL SELECT id_b, id_a, sim FROM p),
         r AS (SELECT vec_id, neighbor_id, sim,
               row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rank FROM d)
-        SELECT vec_id, rank, neighbor_id, sim FROM r WHERE rank <= 3""")),
+        SELECT vec_id, rank, neighbor_id, sim FROM r WHERE rank <= 3"""), Tuning.cpuBound),
 
     // r12 (VERDICT ask 4): the member cap on the STREAMED-index query
     // surface with the quadrant split kept — base on the even half,
@@ -3576,7 +3572,7 @@ object Similarity {
       // same analyzed plan as IndexStream.knn(..., cap), oracle-pinned)
       (s, d) => s.sql(s"SELECT * FROM knn_stream(" +
         s"'${streamedSplitIndexDir(s, d)}', 3, $IvfMemberCap)"),
-      Some(knnStreamedCappedSql)),
+      Some(knnStreamedCappedSql), Tuning.cpuBound),
 
     // r13: the maintain verdict on a STREAMED index — q308's advisor
     // over the base ∪ appends live view (where drift actually shows),
@@ -3588,11 +3584,11 @@ object Similarity {
 
     QueryDef("q107_cluster_profile",
       (s, d) => clusterProfile(s, d),
-      Some(clusterProfileSql())),
+      Some(clusterProfileSql()), Tuning.cpuBound),
 
     QueryDef("q109_cluster_mix",
       (s, d) => clusterMix(s, d),
-      Some(clusterMixSql())),
+      Some(clusterMixSql()), Tuning.cpuBound),
 
     QueryDef("q95_semantic_dedup",
       (s, d) => semanticDedup(s, d),
@@ -3611,7 +3607,7 @@ object Similarity {
               WHERE $simSql >= $SemDedupThreshold)
         SELECT m.vec_id, m.cell, k.vec_id IS NULL AS kept
         FROM mem m LEFT JOIN blk k ON m.vec_id = k.vec_id"""
-      }),
+      }, Tuning.cpuBound),
 
     // r11: the cap on the ADMISSION side — q95's blocker self-join is
     // quadratic in cell size on exactly the duplicate-heavy corpora
@@ -3638,11 +3634,11 @@ object Similarity {
               WHERE $simSql >= $SemDedupThreshold)
         SELECT m.vec_id, m.cell, k.vec_id IS NULL AS kept
         FROM mem m LEFT JOIN blk k ON m.vec_id = k.vec_id"""
-      }),
+      }, Tuning.cpuBound),
 
     QueryDef("q197_embed_curation",
       (s, d) => embedCuration(s, d),
-      Some(embedCurationSql()))
+      Some(embedCurationSql()), Tuning.cpuBound)
   )
 
   /** q66's oracle (cap = None) and q297's (cap = Some): the PQ

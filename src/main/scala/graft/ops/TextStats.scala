@@ -491,12 +491,9 @@ object TextStats {
     * where the classifier's threshold (or its training data) disagrees
     * with the rules — the rows a human reviews. One stateless projection
     * computing BOTH verdicts per row (shared signal columns), one
-    * source-keyed partial-agg rollup. */
-  def classifierAgreement(docs: DataFrame): DataFrame =
-    classifierAgreementFrom(clfScored(docs))
-
-  /** q172 off the shared scored frame: both verdicts are arithmetic over
-    * (n_tokens, score_int, rules) — no token fold here at all. */
+    * source-keyed partial-agg rollup. Off the shared scored frame: both
+    * verdicts are arithmetic over (n_tokens, score_int, rules) — no token
+    * fold here at all. */
   private[graft] def classifierAgreementFrom(scored: DataFrame): DataFrame = {
     val sig = scored.withColumn("clf", col("score_int") * 5 >= col("n_tokens"))
     sig.groupBy("source").agg(
@@ -628,11 +625,8 @@ object TextStats {
     *
     * Scale shape: one stateless signal projection, ONE
     * (source × level)-keyed partial-agg exchange, then windows/rollups
-    * over distinct-level rows only — never a per-document rank. */
-  def classifierAuc(docs: DataFrame): DataFrame =
-    classifierAucFrom(clfScored(docs))
-
-  /** q195 off the shared scored frame. */
+    * over distinct-level rows only — never a per-document rank. Off the
+    * shared scored frame. */
   private[graft] def classifierAucFrom(scored: DataFrame): DataFrame =
     aucFromScored(scored.select(col("source"),
       expr("(score_int * 1000000L) div n_tokens").as("lvl"),
@@ -720,11 +714,8 @@ object TextStats {
     * report must not pay), with the rule-gate pass rate per bucket. Read
     * next to q172: agreement says IF the filters disagree, this says
     * WHERE on the score axis — i.e., where the keep threshold should
-    * sit. One stateless projection + one ≤10-key rollup. */
-  def classifierCalibration(docs: DataFrame): DataFrame =
-    classifierCalibrationFrom(clfScored(docs))
-
-  /** q179 off the shared scored frame. */
+    * sit. One stateless projection + one ≤10-key rollup. Off the shared
+    * scored frame. */
   private[graft] def classifierCalibrationFrom(scored: DataFrame): DataFrame = {
     val sig = scored
       .withColumn("mean_q", expr("(score_int * 1000000L) div n_tokens"))
@@ -1025,6 +1016,4 @@ object TextStats {
           (a, x) -> (a * 31 + x) % 1000000007) AS fp
         FROM documents"""))
   )
-
-  private def inSetSqlStops: String = inSet("w", Stopwords)
 }

@@ -7,74 +7,25 @@ import org.apache.spark.sql.types.DecimalType
 /** One engine query: the Spark plan builder plus (when SQL-expressible)
   * the equivalent DuckDB oracle SQL over the same parquet tables. Column
   * names MUST match between both — the driver sorts columns by name and
-  * hashes values. */
+  * hashes values. `tuning` is the session tuning the query needs; the
+  * operators it calls leave session conf alone. */
 case class QueryDef(
     name: String,
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String],
+    tuning: Tuning = Tuning.none) {
+  /** The query's frame, built after applying its tuning to `spark`. */
+  def fn(spark: SparkSession, dir: String): DataFrame = {
+    tuning.applyTo(spark)
+    build(spark, dir)
+  }
+}
 
 object QueryDef {
   /** Read one testdata table. Plain parquet scan: filters/projections above
     * it push down (verified via explain in BenchSpec). */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Tune the session for CPU-bound stages over byte-small data: AQE
-    * coalesces shuffle partitions by SIZE, which serializes stages whose
-    * cost is per-row compute (minhash, pairwise cosine) on few megabytes —
-    * observed as a 25s single-task broadcast-build stage. Dropping the
-    * coalesce floor keeps the requested parallelism; shuffle volume here
-    * is bounded so over-partitioning costs nothing. */
-  def cpuBound(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-    // ObjectHashAggregateExec (every typed-Aggregator rollup: TopKSim,
-    // MisraGries, KmvSketch) falls back to SORT-based aggregation once its
-    // per-task hash map passes this ROW-COUNT threshold — and Spark's
-    // default is 128, so any top-k over more than 128 queries per task
-    // abandoned hashing and sorted its ENTIRE input stream. That sort is
-    // what turned the IVF candidate stream into shuffle-scratch spill at
-    // 1000x (SCALE.md lesson 4): billions of pairs sorted to update
-    // bounded k-entry buffers. 1M keys × a ≤k-entry buffer (~300 B) is
-    // ~300 MB per task — comfortably in-heap at the shipped executor
-    // sizing, and the sort fallback still guards truly unbounded key
-    // spaces above it.
-    // BUFFER-SIZE ASSUMPTION (r10 ADVICE): the ~300 B/key sizing is
-    // TopKSim's (k≤3 entries). A KmvSketch buffer at k=256 is ~2 KB, so
-    // a KMV rollup over a 1M-cardinality key would hold ~2 GB per task
-    // before falling back — every SHIPPED KMV rollup groups by
-    // column/FD label (cardinality ≤ 10), far under the threshold, but
-    // a new high-cardinality sketch rollup must either lower this conf
-    // for its session or accept the heap math. */
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      (1 << 20).toString)
-    hashJoins(spark)
-  }
-
-  /** r14 (guide §3.1/§9): let the planner pick shuffled-hash over
-    * sort-merge when its size conditions hold. The operators that call
-    * this join candidate/verify streams against aggregate-bounded sides
-    * (distinct fps, band keys, reps, cluster rollups) whose
-    * per-partition build comfortably fits — SMJ was paying two full
-    * sorts per join for nothing. NOT a local-only tuning: the planner's
-    * canBuildLocalHashMap gate (build side < threshold × partitions)
-    * and AQE's runtime replan (real sizes, not estimates) keep big×big
-    * joins on sort-merge at any scale; measured −15% on the 14
-    * SMJ-bearing queries at sf0.1 (OPTIMIZATION_r14.md). Reset by
-    * SessionHygiene.clear between queries like cpuBound's confs.
-    * Separate from [[cpuBound]] because the coalesce floor there HURTS
-    * plans with many small exchanges (q104 measured +35% under it). */
-  def hashJoins(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    // Static planning can only pick SHJ when the build side's ESTIMATED
-    // stats pass the size gate — joins against localCheckpointed frames
-    // (ExistingRDD, unknown stats) always fall back to SMJ there. This
-    // AQE knob converts SMJ → SHJ at RUNTIME from the REAL post-shuffle
-    // partition sizes (guide §3.1), which is the safest form of the
-    // preference: at any scale the conversion fires only when the
-    // observed per-partition build fits the threshold (≤ the 64 MB
-    // advisory partition size, as AQE requires).
-    spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-  }
 
   /** Spread a byte-small, compute-heavy input across the cluster with a
     * REAL barrier. A plain `repartition(n)` is not enough: Catalyst pushes

@@ -211,17 +211,6 @@ object StreamState {
       .map(_.toLong).maxOption
   }
 
-  /** [[compact]] up to the checkpoint-committed horizon — the
-    * between-batches maintenance call a deployment crons: everything
-    * the checkpoint guarantees will never replay folds into the base;
-    * a no-op before the first commit. */
-  def compactCommitted(spark: SparkSession, stateDir: String,
-      checkpointDir: String, merge: DataFrame => DataFrame = identity,
-      numFiles: Int = 1): Unit =
-    lastCommittedBatch(spark, checkpointDir).foreach { n =>
-      compact(spark, stateDir, n + 1, merge, numFiles)
-    }
-
   /** Compact a batch-id-keyed SHARD OUTPUT directory — the admitted-data
     * twin of state compaction, [[compactShardsTiered]] since r12:
     * shards are CORPUS-scale where state is key-scale, so the full

@@ -65,16 +65,6 @@ object Datapoints {
       .filter(col("timestampMs").isNotNull)
   }
 
-  /** Per-series stats (S10/S11 analogs): one shuffle, partial aggregation
-    * map-side; holds at scale because cardinality = #series, not #points. */
-  def seriesStats(datapoints: DataFrame): DataFrame =
-    datapoints.groupBy("externalId").agg(
-      count(lit(1)).as("n_points"),
-      min("timestampMs").as("min_ts"),
-      max("timestampMs").as("max_ts"),
-      min("value").as("min_value"),
-      max("value").as("max_value"))
-
   /** Gap detection (★ §2b window row): per-series gaps strictly longer
     * than `maxGapMs` between consecutive datapoints. One shuffle+sort on
     * externalId; window cardinality = points per series. */
