@@ -145,13 +145,6 @@ object Md5Pool {
   def digest2(prefix: Array[Byte], body: Array[Byte]): Array[Byte] = {
     val md = tl.get(); md.reset(); md.update(prefix); md.digest(body)
   }
-  /** The thread-local digest itself (reset), for callers that fold many
-    * fragments incrementally (MinHashBands' band keys) — avoids a
-    * per-row getInstance. Callers must finish with digest() before any
-    * other Md5Pool use on the thread. */
-  def acquire(): MessageDigest = {
-    val md = tl.get(); md.reset(); md
-  }
 }
 
 /** MinHash signature of an ARRAY<STRING> shingle set: element j is
@@ -375,7 +368,7 @@ case class MinHashBands(child: Expression, numHashes: Int, rows: Int)
     }
     val bands = numHashes / rows
     val out = new Array[UTF8String](bands)
-    val md = Md5Pool.acquire() // thread-local, no per-row getInstance
+    val md = MinHashBands.digest.get() // its own, held across hex() calls
     var b = 0
     while (b < bands) {
       md.reset()
@@ -396,6 +389,15 @@ case class MinHashBands(child: Expression, numHashes: Int, rows: Int)
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object MinHashBands {
+  /** The band-key digest, private to MinHashBands: it folds many fragments
+    * per band, so it must not be Md5Pool's shared one, which any helper
+    * called between the fragments could reset. One per thread, no per-row
+    * getInstance. */
+  private val digest: ThreadLocal[MessageDigest] =
+    ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
 }
 
 /** 32-bit SimHash over an ARRAY<STRING> token list as a '0'/'1' string:

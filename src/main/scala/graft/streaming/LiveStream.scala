@@ -24,18 +24,32 @@ import graft.tebis.{TebisCsv, TebisFile}
   *    fully posted — deletion is the final step of the batch) instead of
   *    wedging the stream on FileNotFoundException.
   *  - 1 s mtime settle window   → closed executor-side (see settledBytes):
-  *    content is read only once the file's mtime is at least `settleMs`
-  *    old, so a file caught mid-write by the directory listing is parsed
-  *    from its SETTLED bytes. This is strictly stronger than the
-  *    reference's skip-young-files poll (csv_extractor.py:267), which
-  *    re-offers the file next poll; the streaming source offers a file
-  *    exactly once, so the wait must happen at read time.
+  *    content is read at the file's settle deadline, once its mtime is at
+  *    least `settleMs` old or has not moved for `settleMs`, so a file
+  *    caught mid-write by the directory listing is parsed from its SETTLED
+  *    bytes. This is strictly stronger than the reference's
+  *    skip-young-files poll (csv_extractor.py:267), which re-offers the
+  *    file next poll; the streaming source offers a file exactly once, so
+  *    the wait must happen at read time.
+  *  - post, then account         → one job per micro-batch: each task posts
+  *    its settled files and returns one status row per file; the driver
+  *    counts, dead-letters and deletes from those rows once every post
+  *    has returned.
   */
 object LiveStream {
   /** Error marker for a file that vanished between listing and read — a
     * replayed batch re-reading files its crashed attempt already deleted.
     * Excluded from failure accounting (the posts already happened). */
   val ReplayMissing = "source file missing (replay after delete-as-commit)"
+
+  /** What a micro-batch returns to the driver per file: its path, its
+    * parse or read error, and the counts the metrics need. */
+  case class FileOutcome(path: String, error: Option[String], datapoints: Long, series: Long)
+
+  object FileOutcome {
+    def apply(f: TebisFile): FileOutcome =
+      FileOutcome(f.path, f.error, f.datapointCount, f.seriesCount)
+  }
 
   case class Config(
       inputDir: String,
@@ -63,32 +77,35 @@ object LiveStream {
         * 1 s settle window). 0 disables the wait. */
       settleMs: Long = 1000L)
 
-  /** Read `path`'s bytes once its mtime has stopped moving for `settleMs`
-    * (bounded wait: a writer that never settles is read anyway after
-    * ~5 settle windows — best-effort, like any mtime heuristic). Runs in
-    * the executor task, so the wait costs trigger latency, not
-    * correctness: the listing snapshot's content is never used.
-    *
-    * Age alone (local clock minus storage mtime) is trusted only when it
-    * already clears the window — a storage server clock AHEAD of the
-    * executor would otherwise make settled files look forever-young and
-    * stall every batch to the deadline. The skew-immune path compares
-    * mtime across a settleMs sleep: unchanged mtime == no writes in the
-    * window, whatever either clock says. */
+  /** Read `path`'s bytes at its settle deadline: the earlier of
+    *  - mtime + `settleMs` by the local clock (the file is `settleMs` old);
+    *  - the local time this mtime was first observed + `settleMs` (no
+    *    write for a full window, whatever the storage clock says — a
+    *    storage clock AHEAD of the executor would otherwise make settled
+    *    files look forever-young). A changed mtime restarts this window.
+    * Either rule is confirmed by a fresh stat at the deadline. The wait is
+    * bounded: a writer that never settles is read anyway after
+    * max(5 settle windows, 5 s) — best-effort, like any mtime heuristic.
+    * Runs in the executor task, so the wait costs trigger latency, not
+    * correctness: the listing snapshot's content is never used. */
   private[streaming] def settledBytes(
       path: String, settleMs: Long, conf: org.apache.hadoop.conf.Configuration): Array[Byte] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     if (settleMs > 0) {
-      val deadline = System.currentTimeMillis + math.max(settleMs * 5, 5000L)
-      var st = fs.getFileStatus(p)
-      var settled = System.currentTimeMillis - st.getModificationTime >= settleMs
-      while (!settled && System.currentTimeMillis < deadline) {
-        Thread.sleep(math.max(settleMs, 10L))
-        val st2 = fs.getFileStatus(p)
-        settled = st2.getModificationTime == st.getModificationTime ||
-          System.currentTimeMillis - st2.getModificationTime >= settleMs
-        st = st2
+      val giveUp = System.currentTimeMillis + math.max(settleMs * 5, 5000L)
+      var mtime = Long.MinValue
+      var seenAt = 0L
+      var settled = false
+      while (!settled) {
+        // the clock is read BEFORE the stat and seenAt AFTER it, so both
+        // rules hold for the instant the stat actually observed
+        val now = System.currentTimeMillis
+        val m = fs.getFileStatus(p).getModificationTime
+        if (m != mtime) { mtime = m; seenAt = System.currentTimeMillis }
+        val due = math.min(mtime, seenAt) + settleMs
+        settled = now >= due || now >= giveUp
+        if (!settled) Thread.sleep(math.max(math.min(due, giveUp) - now, 1L))
       }
     }
     val in = fs.open(p)
@@ -151,82 +168,68 @@ object LiveStream {
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[TebisFile], batchId: Long) =>
-        val batchMax = cfg.batchMax
-        batch.persist()
-        try {
-          cfg.outputDir match {
-            case Some(out) =>
-              // lakehouse path: distributed parquet write, idempotent per
-              // batch; per-file accounting from a bounded metadata collect
+        val outcome = org.apache.spark.sql.Encoders.product[FileOutcome]
+        // ≤ maxFilesPerTrigger rows, paths and counts only, never contents
+        val rows = cfg.outputDir match {
+          case Some(out) =>
+            // lakehouse path: distributed parquet write, idempotent per
+            // batch; the status collect reads the same persisted parse
+            batch.persist()
+            try {
               val dps = batch.filter(_.error.isEmpty).flatMap(_.datapoints)(
                 org.apache.spark.sql.Encoders.product[graft.tebis.Datapoint])
               BatchedSink.writeParquetBatch(dps, out, batchId)
-              metrics.foreach { m =>
-                batch.filter(_.error.isEmpty)
-                  .map(f => (f.datapointCount, f.seriesCount))(
-                    org.apache.spark.sql.Encoders.product[(Long, Long)])
-                  .collect() // ≤ maxFilesPerTrigger rows
-                  .foreach { case (nPts, nSeries) =>
-                    m.processedFiles.add(1)
-                    m.postedDatapoints.add(nPts)
-                    m.postedTimeSeriesCount.set(nSeries)
-                  }
-              }
-            case None =>
-              // posts run distributed; the accumulators below merge back
-              // through Spark's accumulator framework. The GAUGE must be
-              // set on the DRIVER — a .set inside this closure would
-              // mutate a task-deserialized throwaway copy of Metrics.
-              batch.filter(_.error.isEmpty).foreach { file =>
-                BatchedSink.postFile(file, client, batchMax)
-                metrics.foreach { m =>
-                  m.processedFiles.add(1)
-                  m.postedDatapoints.add(file.datapointCount)
-                }
-              }
-              metrics.foreach { m =>
-                val series = batch.filter(_.error.isEmpty).map(_.seriesCount)(
-                  org.apache.spark.sql.Encoders.scalaLong).collect() // ≤ maxFilesPerTrigger
-                series.lastOption.foreach(m.postedTimeSeriesCount.set)
-              }
+              batch.map(FileOutcome(_))(outcome).collect()
+            } finally { batch.unpersist(); () }
+          case None =>
+            // one job: each task posts its good files and returns their
+            // status; nothing is counted in the task (an accumulator add
+            // inside a map is not exact-once under task retry)
+            val batchMax = cfg.batchMax
+            batch.map { f =>
+              if (f.error.isEmpty) BatchedSink.postFile(f, client, batchMax)
+              FileOutcome(f)
+            }(outcome).collect()
+        }
+        val ok = rows.filter(_.error.isEmpty)
+        // gauges and counters are DRIVER-set from the status rows (a .set
+        // inside a task closure would mutate a deserialized copy)
+        metrics.foreach { m =>
+          ok.foreach { r =>
+            m.processedFiles.add(1)
+            m.postedDatapoints.add(r.datapoints)
           }
-          // driver-side collect is bounded by maxFilesPerTrigger (20):
-          // paths only, never contents
-          val failedPaths = batch.filter(f => f.error.isDefined && !f.error.contains(ReplayMissing))
-            .map(_.path)(org.apache.spark.sql.Encoders.STRING).collect()
-          val lifecycle = new graft.tebis.Discovery.Lifecycle(
-            cfg.failedDir, cfg.archiveDir, spark.sparkContext.hadoopConfiguration)
-          failedPaths.foreach { p =>
-            metrics.foreach(_.failedFiles.add(1))
-            // dead-letter or leave in place; NEVER delete an uningested file
-            if (cfg.failedDir.isDefined) lifecycle.onFailure(p)
-          }
-          if (cfg.manageLifecycle) {
-            // delete-as-commit (or archive) for successfully posted files —
-            // the reference's E2 protocol, applied per micro-batch. Runs
-            // LAST, so a replay implies every post above completed;
-            // ignoreMissingFiles turns that replay into a skip. Bounded
-            // collect: ≤ maxFilesPerTrigger paths.
-            val okPaths = batch.filter(_.error.isEmpty).map(_.path)(
-              org.apache.spark.sql.Encoders.STRING).collect()
-            okPaths.foreach(lifecycle.onSuccess)
-            metrics.foreach(_.successfullyProcessedFiles.set(okPaths.length.toLong))
-          }
-          // per-poll folder gauges, after lifecycle moves (reference
-          // monitoring.py available_csv_files / unprocessed_files)
-          metrics.foreach { m =>
-            val in = new org.apache.hadoop.fs.Path(cfg.inputDir)
-            val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val remaining =
-              if (fs.exists(in))
-                fs.listStatus(in).count(s => s.isFile && s.getPath.getName.endsWith(".csv")).toLong
-              else 0L
-            m.availableCsvFiles.set(remaining)
-            m.unprocessedFiles.set(remaining)
-          }
-          // per-poll push, gauges freshly set (reference csv_extractor.py:41)
-          metrics.foreach(_.push())
-        } finally { batch.unpersist(); () }
+          ok.lastOption.foreach(r => m.postedTimeSeriesCount.set(r.series))
+        }
+        val lifecycle = new graft.tebis.Discovery.Lifecycle(
+          cfg.failedDir, cfg.archiveDir, spark.sparkContext.hadoopConfiguration)
+        rows.filter(r => r.error.isDefined && !r.error.contains(ReplayMissing)).foreach { r =>
+          metrics.foreach(_.failedFiles.add(1))
+          // dead-letter or leave in place; NEVER delete an uningested file
+          if (cfg.failedDir.isDefined) lifecycle.onFailure(r.path)
+        }
+        if (cfg.manageLifecycle) {
+          // delete-as-commit (or archive) for successfully posted files —
+          // the reference's E2 protocol, applied per micro-batch. Runs
+          // LAST, after the job above returned, so a replay implies every
+          // post completed; ignoreMissingFiles turns that replay into a skip.
+          ok.foreach(r => lifecycle.onSuccess(r.path))
+          metrics.foreach(_.successfullyProcessedFiles.set(ok.length.toLong))
+        }
+        // per-poll folder gauges, after lifecycle moves (reference
+        // monitoring.py available_csv_files / unprocessed_files)
+        metrics.foreach { m =>
+          val in = new org.apache.hadoop.fs.Path(cfg.inputDir)
+          val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val remaining =
+            if (fs.exists(in))
+              fs.listStatus(in).count(s => s.isFile && s.getPath.getName.endsWith(".csv")).toLong
+            else 0L
+          m.availableCsvFiles.set(remaining)
+          m.unprocessedFiles.set(remaining)
+        }
+        // per-poll push, gauges freshly set (reference csv_extractor.py:41)
+        metrics.foreach(_.push())
       }
       .start()
   }

@@ -1,6 +1,6 @@
 package graft.tebis
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Time-series catalog metadata (reference TimeSeries create,
@@ -20,9 +20,12 @@ case class TimeSeriesMeta(externalId: String, name: String, description: String)
 object Catalog {
   val AutoDescription = "Auto-generated time series, external ID not found"
 
+  /** Reads the catalog's columns by name with the declared schema, so no
+    * footer-inference job runs; column order and extra columns on disk do
+    * not matter. */
   def load(spark: SparkSession, path: String): Dataset[TimeSeriesMeta] = {
-    import spark.implicits._
-    spark.read.parquet(path).as[TimeSeriesMeta]
+    val enc = Encoders.product[TimeSeriesMeta]
+    spark.read.schema(enc.schema).parquet(path).as(enc)
   }
 
   /** The upserted catalog's plan usually still READS `path` (union with

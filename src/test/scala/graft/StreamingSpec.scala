@@ -63,6 +63,64 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("live stream: one job per micro-batch, mixed batch accounted on the driver") {
+    val dir = Files.createTempDirectory("live1-in")
+    val ckpt = Files.createTempDirectory("live1-ckpt")
+    writeTebis(dir, "TEBIS_A_100.csv", 1000, 5, "1")
+    writeTebis(dir, "TEBIS_B_200.csv", 2000, 3, "2")
+    Files.write(dir.resolve("broken_x_50.csv"),
+      ";9 : Z\nu;x\nBAD;1,0\n".getBytes(Charset.forName(TebisCsv.Encoding)))
+    RecordingClient.reset()
+    val sink = new MetricsSink.Recording
+    val metrics = Metrics(spark.sparkContext, "test_live1", sink)
+    // job counts per (query id, batch id), from the local properties the
+    // micro-batch execution sets on every job it runs
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { props =>
+          val query = props.getProperty("sql.streaming.queryId")
+          val batch = props.getProperty("streaming.sql.batchId")
+          if (query != null && batch != null) { jobs.merge((query, batch), 1, _ + _); () }
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = LiveStream.start(spark,
+      LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L,
+        failedDir = Some(dir.resolve("failed").toString)),
+      new RecordingClient, Some(metrics))
+    try {
+      q.processAllAvailable()
+      writeTebis(dir, "TEBIS_C_300.csv", 3000, 2, "3")
+      q.processAllAvailable()
+      val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSeq
+      assert(batches.size == 2)
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis + 10000
+      def counts = batches.map(b => Option(jobs.get((q.id.toString, b))).getOrElse(0))
+      while (counts.contains(0) && System.currentTimeMillis < deadline) Thread.sleep(20)
+      Thread.sleep(200)
+      assert(counts == Seq(1, 1), s"jobs per micro-batch: $counts")
+      // the first micro-batch held all three files: its snapshot
+      assert(sink.pushes.size == 2)
+      assert(sink.pushes.head == Map(
+        "test_live1.posted_data_points" -> 8L,
+        "test_live1.created_time_series" -> 0L,
+        "test_live1.failed_processing_files" -> 1L,
+        "test_live1.processed_files" -> 2L,
+        "test_live1.available_csv_files" -> 0L,
+        "test_live1.unprocessed_files" -> 0L,
+        "test_live1.successfully_processed_files" -> 2L,
+        "test_live1.posted_time_series_count" -> 1L))
+      assert(metrics.processedFiles.value == 3 && metrics.failedFiles.value == 1)
+      assert(metrics.postedDatapoints.value == 10 && metrics.postedTimeSeriesCount.get == 1)
+      assert(sink.last.get("test_live1.successfully_processed_files") == 1)
+      assert(RecordingClient.all.flatten.flatMap(_.datapoints).size == 10)
+      assert(Files.exists(dir.resolve("failed").resolve("broken_x_50.csv")))
+      assert(!Files.exists(dir.resolve("TEBIS_A_100.csv")) && !Files.exists(dir.resolve("TEBIS_C_300.csv")))
+    } finally { q.stop(); spark.sparkContext.removeSparkListener(listener) }
+  }
+
   test("live stream: settle window reads a slow writer's final bytes") {
     val dir = Files.createTempDirectory("settle-in")
     val ckpt = Files.createTempDirectory("settle-ckpt")

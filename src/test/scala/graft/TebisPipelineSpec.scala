@@ -191,6 +191,19 @@ class TebisPipelineSpec extends AnyFunSuite {
     assert(Catalog.missing(headers, after).count() == 0)
   }
 
+  test("catalog: load reads columns by name, whatever their order or extras on disk") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cat-load")
+    val rows = Seq(("d1", "n1", "1", 7L), ("d2", "n2", "2", 8L))
+    // reordered, with a column the catalog does not declare
+    val reordered = dir.resolve("reordered").toString
+    rows.toDF("description", "name", "externalId", "extra").write.parquet(reordered)
+    val got = Catalog.load(spark, reordered)
+    assert(got.schema == org.apache.spark.sql.Encoders.product[TimeSeriesMeta].schema)
+    assert(got.collect().sortBy(_.externalId).toSeq ==
+      Seq(TimeSeriesMeta("1", "n1", "d1"), TimeSeriesMeta("2", "n2", "d2")))
+  }
+
   test("postFile: <=1000 series per request, empty series skipped") {
     val cols = (1 to 2500).map(i =>
       SeriesColumn(s"id$i", s"n$i", i, Seq(DatapointValue(1000L, i.toDouble)))) :+
