@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sink.{BatchedSink, DatapointsClient, SeriesPayload}
+import graft.sink.{BatchedSink, DatapointsClient}
 import graft.streaming.LiveStream
 import graft.tebis._
 
@@ -16,7 +16,8 @@ import graft.tebis._
   * Engine-specific: `--output DIR` (day-partitioned datapoints parquet —
   * the standalone stand-in for the reference's CDF datapoints API),
   * `--catalog PATH` (time-series catalog parquet, lazily upserted like
-  * the reference's CDF catalog), `--checkpoint DIR` (live mode). */
+  * the reference's CDF catalog; historical mode only — `--live` with
+  * `--catalog` is rejected), `--checkpoint DIR` (live mode). */
 object Main {
   /** Credential wrapper whose every rendering is scrubbed — logging a
     * Config (reference main.py:85-86 zeroes args.api_key before logging)
@@ -67,6 +68,8 @@ object Main {
     }
     val cfg = loop(Config(), args.toList)
     require(cfg.input.nonEmpty, "--input is required")
+    // live mode creates no series: refuse the catalog rather than ignore it
+    require(!(cfg.live && cfg.catalog.isDefined), "--catalog is not supported with --live")
     // flag wins; else the env var (reference main.py:83-85)
     if (cfg.apiKey.isDefined) cfg
     else cfg.copy(apiKey = sys.env.get("GRAFT_EXTRACTOR_API_KEY").map(Secret))
@@ -191,33 +194,15 @@ object Main {
         Catalog.save(Catalog.upsert(existing, created), catPath)
       }
 
-      // Sink: parquet lakehouse when --output, else batched client posts.
-      cfg.output match {
-        case Some(out) =>
-          val dps = files.filter(_.error.isEmpty).flatMap(_.datapoints)
-          BatchedSink.writeParquet(dps, out)
-        case None =>
-          files.filter(_.error.isEmpty).foreach { f => BatchedSink.postFile(f, client) }
-      }
-
-      // Metrics + lifecycle (S17/S18/S21). Bounded driver-side collect:
-      // one (path, flag, count, count) tuple per input file — never
-      // contents; #files is the reference's own working set.
-      val results = files.map(f => (f.path, f.error.isDefined, f.datapointCount, f.seriesCount)).collect()
-      results.foreach { case (path, failed, nPoints, nSeries) =>
-        if (failed) { metrics.failedFiles.add(1); lifecycle.onFailure(path) }
-        else {
-          metrics.processedFiles.add(1); metrics.postedDatapoints.add(nPoints)
-          // gauge parity with the reference's sequential account
-          // (monitoring.py count_of_time_series_gauge set per file)
-          metrics.postedTimeSeriesCount.set(nSeries)
-          metrics.successfullyProcessedFiles.add(1)
-          lifecycle.onSuccess(path)
+      // Sink: parquet lakehouse when --output, else batched client posts;
+      // then the shared per-file account (S17/S18/S21) and a per-file
+      // push (reference csv_extractor.py:230)
+      BatchedSink.sinkFiles(files, client, cfg.output.map(out => BatchedSink.writeParquet(_, out)))
+        .foreach { r =>
+          BatchedSink.account(r, Some(metrics), lifecycle)
+          metrics.unprocessedFiles.add(-1)
+          metrics.push()
         }
-        metrics.unprocessedFiles.add(-1)
-        // per-file push (reference csv_extractor.py:230)
-        metrics.push()
-      }
       println(s"[graft] processed=${metrics.processedFiles.value} failed=${metrics.failedFiles.value} datapoints=${metrics.postedDatapoints.value} created_series=${metrics.createdTimeSeries.value}")
       // final push after the batch completes (reference csv_extractor.py:234)
       metrics.push()

@@ -1,11 +1,11 @@
 package graft.sink
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Dataset, SaveMode}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-import graft.tebis.{Datapoint, DatapointValue, TebisFile}
+import graft.Metrics
+import graft.tebis.{Datapoint, DatapointValue, Discovery, TebisFile}
 
 /** One insert-request payload: all buffered points of one series
   * (reference `{"externalId":…, "datapoints":[(ts,value)…]}`,
@@ -43,17 +43,22 @@ class StdoutDatapointsClient extends DatapointsClient with ApiKeyAuthed {
     println(s"[sink] insert_multiple${if (apiKey.isDefined) " (authed)" else ""}: ${batch.size} series, ${batch.map(_.datapoints.size).sum} datapoints")
 }
 
+/** What committing a parsed file returns to the driver: its path, its
+  * parse or read error, and the counts the metrics need — never contents. */
+case class FileOutcome(path: String, error: Option[String], datapoints: Long, series: Long)
+
+object FileOutcome {
+  def apply(f: TebisFile): FileOutcome =
+    FileOutcome(f.path, f.error, f.datapointCount, f.seriesCount)
+}
+
 /** Batched parallel sink (S15/S16, csv_extractor.py:22,137-146,162-196).
   *
-  * Reference constants preserved as configuration: at most `BatchMax`
-  * (1000) series per insert request; parallelism comes from Spark tasks
-  * (the reference's thread fan-out, but distributed and retried by
-  * `spark.task.maxFailures`).
-  *
-  * Scale: `write(ds)` shuffles once on externalId so each series lands in
-  * exactly one task, then streams a SORTED iterator — memory is bounded by
-  * one series' buffered points, never the partition. No collect, no
-  * driver-side loops.
+  * Reference constant: at most `BatchMax` (1000) series per insert
+  * request; parallelism comes from Spark tasks (the reference's thread
+  * fan-out, but distributed and retried by `spark.task.maxFailures`).
+  * Both modes commit parsed files through [[sinkFiles]], then [[account]]
+  * per file on the driver.
   */
 object BatchedSink {
   val BatchMax = 1000
@@ -62,35 +67,56 @@ object BatchedSink {
     * the reference's flush-at-1000 grouping (grouped == flush-then-rest
     * because the reference flushes exactly at 1000). Only series with >=1
     * surviving datapoint become payloads (csv_extractor.py:157-160). */
-  def postFile(file: TebisFile, client: DatapointsClient, batchMax: Int = BatchMax): Unit = {
+  def postFile(file: TebisFile, client: DatapointsClient): Unit = {
     val payloads = file.columns.iterator
       .filter(_.datapoints.nonEmpty)
       .map(c => SeriesPayload(c.externalId, c.datapoints))
-    payloads.grouped(batchMax).foreach(client.insertMultiple(_))
+    payloads.grouped(BatchMax).foreach(client.insertMultiple(_))
   }
 
-  /** Distributed datapoint sink: one shuffle on externalId, sorted
-    * streaming within each partition, <=batchMax series per request. */
-  def write(ds: Dataset[Datapoint], client: DatapointsClient, batchMax: Int = BatchMax): Unit = {
-    ds.repartition(col("externalId"))
-      .sortWithinPartitions("externalId", "timestampMs")
-      .foreachPartition { (it: Iterator[Datapoint]) =>
-        val batch = ArrayBuffer.empty[SeriesPayload]
-        var curId: String = null
-        var curPoints = ArrayBuffer.empty[DatapointValue]
-        def flushSeries(): Unit = if (curId != null && curPoints.nonEmpty) {
-          batch += SeriesPayload(curId, curPoints.toSeq)
-          curPoints = ArrayBuffer.empty[DatapointValue]
-          if (batch.length >= batchMax) { client.insertMultiple(batch.toSeq); batch.clear() }
-        }
-        it.foreach { dp =>
-          if (dp.externalId != curId) { flushSeries(); curId = dp.externalId }
-          curPoints += DatapointValue(dp.timestampMs, dp.value)
-        }
-        flushSeries()
-        if (batch.nonEmpty) client.insertMultiple(batch.toSeq)
-      }
+  /** Sink parsed files; one [[FileOutcome]] per file returns to the driver.
+    * Without `lake`, one job: each task posts its good files and returns
+    * their status (nothing is counted in the task: an accumulator add in a
+    * map is not exact-once under task retry). With `lake`, the caller's
+    * parquet write of the good files' datapoints, then one status collect
+    * over the same persisted parse (persisted here unless already cached). */
+  def sinkFiles(files: Dataset[TebisFile], client: DatapointsClient,
+      lake: Option[Dataset[Datapoint] => Unit]): Array[FileOutcome] = {
+    val outcome = Encoders.product[FileOutcome]
+    lake match {
+      case Some(write) =>
+        val cached = files.storageLevel != StorageLevel.NONE
+        if (!cached) files.persist()
+        try {
+          write(files.filter(_.error.isEmpty).flatMap(_.datapoints)(Encoders.product[Datapoint]))
+          files.map(FileOutcome(_))(outcome).collect()
+        } finally if (!cached) files.unpersist()
+      case None =>
+        files.map { f =>
+          if (f.error.isEmpty) postFile(f, client)
+          FileOutcome(f)
+        }(outcome).collect()
+    }
   }
+
+  /** The per-file account (S17/S18/S21), on the driver once every post of
+    * the batch has returned: a failed file is counted and dead-lettered,
+    * never deleted; a good file is counted, sets the series gauge (the
+    * reference's sequential count_of_time_series_gauge) and is deleted or
+    * archived. */
+  def account(r: FileOutcome, metrics: Option[Metrics], lifecycle: Discovery.Lifecycle): Unit =
+    if (r.error.isDefined) {
+      metrics.foreach(_.failedFiles.add(1))
+      lifecycle.onFailure(r.path)
+    } else {
+      metrics.foreach { m =>
+        m.processedFiles.add(1)
+        m.postedDatapoints.add(r.datapoints)
+        m.postedTimeSeriesCount.set(r.series)
+        m.successfullyProcessedFiles.add(1)
+      }
+      lifecycle.onSuccess(r.path)
+    }
 
   /** Shared lakehouse layout: one place defines the day partitioning and
     * in-file sort so the historical and streaming paths cannot diverge. */

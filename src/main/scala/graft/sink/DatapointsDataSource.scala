@@ -21,8 +21,8 @@ import graft.tebis.DatapointValue
   *
   * Schema: (externalId STRING, timestampMs LONG, value DOUBLE). Each task
   * buffers its partition's points per series and posts on commit, so
-  * repartition the frame by externalId first to keep any series in one
-  * request (BatchedSink.write does exactly that); at-least-once delivery —
+  * repartition the frame by externalId (and sort within partitions) first
+  * to keep any series in one request; at-least-once delivery —
   * the client must upsert on (externalId, timestamp) like the reference's
   * endpoint (SURVEY §3 E2).
   *
@@ -96,7 +96,7 @@ private class DatapointsWriterFactory(
 /** Memory is bounded by `batchMax` series: once the buffer holds batchMax
   * distinct series and a row for a NEW series arrives, the buffered
   * series are posted and dropped. With input repartitioned+sorted by
-  * externalId (BatchedSink.write's shape) every flushed series is
+  * externalId every flushed series is
   * complete, so series stay whole per request; unsorted input may split a
   * series across requests — harmless under the endpoint's
   * (externalId, timestamp) upsert. Flushing during write() also means a

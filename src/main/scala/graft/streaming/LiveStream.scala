@@ -9,14 +9,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Metrics
 import graft.sink.{BatchedSink, DatapointsClient}
-import graft.tebis.{TebisCsv, TebisFile}
+import graft.tebis.{Discovery, TebisCsv, TebisFile}
 
 /** Live micro-batch mode (reference E2, csv_extractor.py:25-50,265-280),
   * re-expressed as Structured Streaming over the binaryFile source.
   *
   * Reference constants → source/trigger configuration:
-  *  - poll every 8 s            → Trigger.ProcessingTime(8 s)
+  *  - poll every 8 s            → Trigger.ProcessingTime(8 s) (`triggerMs`)
   *  - 20 newest files per poll  → maxFilesPerTrigger=20 + latestFirst=true
+  *    (constants, like the reference's)
   *  - delete-as-commit          → checkpointed source offsets; at-least-once
   *    posts (a crash mid-batch replays the whole batch, like the
   *    reference's delete-after-post), with `ignoreMissingFiles` so a
@@ -31,10 +32,11 @@ import graft.tebis.{TebisCsv, TebisFile}
   *    skip-young-files poll (csv_extractor.py:267), which re-offers the
   *    file next poll; the streaming source offers a file exactly once, so
   *    the wait must happen at read time.
-  *  - post, then account         → one job per micro-batch: each task posts
-  *    its settled files and returns one status row per file; the driver
-  *    counts, dead-letters and deletes from those rows once every post
-  *    has returned.
+  *  - post, then account         → the commit step historical mode uses
+  *    too: [[graft.sink.BatchedSink.sinkFiles]] (one job per micro-batch:
+  *    each task posts its settled files and returns one status row per
+  *    file), then [[graft.sink.BatchedSink.account]] per row on the
+  *    driver — count, dead-letter, delete — once every post has returned.
   */
 object LiveStream {
   /** Error marker for a file that vanished between listing and read — a
@@ -42,29 +44,14 @@ object LiveStream {
     * Excluded from failure accounting (the posts already happened). */
   val ReplayMissing = "source file missing (replay after delete-as-commit)"
 
-  /** What a micro-batch returns to the driver per file: its path, its
-    * parse or read error, and the counts the metrics need. */
-  case class FileOutcome(path: String, error: Option[String], datapoints: Long, series: Long)
-
-  object FileOutcome {
-    def apply(f: TebisFile): FileOutcome =
-      FileOutcome(f.path, f.error, f.datapointCount, f.seriesCount)
-  }
+  /** Files per micro-batch, newest first (the reference's top-20 poll). */
+  val FilesPerTrigger = 20
 
   case class Config(
       inputDir: String,
       checkpointDir: String,
-      maxFilesPerTrigger: Int = 20,
       triggerMs: Long = 8000L,
-      latestFirst: Boolean = true,
-      /** When true (default), the micro-batch itself applies the
-        * reference's commit protocol: SUCCESSFUL files are deleted (or
-        * moved to archiveDir), failed files are dead-lettered to
-        * failedDir or left in place — never deleted. Spark's cleanSource
-        * would delete/archive failed files too (it cannot see parse
-        * outcomes), so it stays "off" when this is on. */
-      manageLifecycle: Boolean = true,
-      cleanSource: String = "off", // off | delete | archive (only when !manageLifecycle)
+      /** Successfully posted files are moved here instead of deleted. */
       archiveDir: Option[String] = None,
       failedDir: Option[String] = None, // dead-letter parse failures (--move-failed)
       /** When set, each micro-batch's datapoints land as day-partitioned
@@ -72,7 +59,6 @@ object LiveStream {
         * replay, so the lake is exactly-once at rest) instead of client
         * posts: the live twin of the historical `--output` path. */
       outputDir: Option[String] = None,
-      batchMax: Int = BatchedSink.BatchMax,
       /** Minimum mtime age before a file's content is trusted (reference's
         * 1 s settle window). 0 disables the wait. */
       settleMs: Long = 1000L)
@@ -129,19 +115,16 @@ object LiveStream {
     // binaryFile's fixed schema, required explicitly for streaming
     val binarySchema = org.apache.spark.sql.types.StructType.fromDDL(
       "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-    val cleanSource = if (cfg.manageLifecycle) "off" else cfg.cleanSource
     val reader = spark.readStream.format("binaryFile")
       .schema(binarySchema)
       .option("pathGlobFilter", "*.csv")
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .option("latestFirst", cfg.latestFirst)
-      .option("cleanSource", cleanSource)
+      .option("maxFilesPerTrigger", FilesPerTrigger)
+      .option("latestFirst", true)
       // replay-after-delete: a batch replayed after its (post-completing)
       // deletion step must skip, not crash — see the scaladoc
       .option("ignoreMissingFiles", "true")
-    if (!cfg.manageLifecycle) cfg.archiveDir.foreach(reader.option("sourceArchiveDir", _))
     // Hadoop Configuration is not java-serializable; ship its entries and
-    // rebuild per task (≤ maxFilesPerTrigger stats per batch — cheap)
+    // rebuild per task (≤ FilesPerTrigger stats per batch — cheap)
     val confEntries = spark.sparkContext.hadoopConfiguration.iterator().asScala
       .map(e => e.getKey -> e.getValue).toArray
     val settleMs = cfg.settleMs
@@ -168,54 +151,18 @@ object LiveStream {
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[TebisFile], batchId: Long) =>
-        val outcome = org.apache.spark.sql.Encoders.product[FileOutcome]
-        // ≤ maxFilesPerTrigger rows, paths and counts only, never contents
-        val rows = cfg.outputDir match {
-          case Some(out) =>
-            // lakehouse path: distributed parquet write, idempotent per
-            // batch; the status collect reads the same persisted parse
-            batch.persist()
-            try {
-              val dps = batch.filter(_.error.isEmpty).flatMap(_.datapoints)(
-                org.apache.spark.sql.Encoders.product[graft.tebis.Datapoint])
-              BatchedSink.writeParquetBatch(dps, out, batchId)
-              batch.map(FileOutcome(_))(outcome).collect()
-            } finally { batch.unpersist(); () }
-          case None =>
-            // one job: each task posts its good files and returns their
-            // status; nothing is counted in the task (an accumulator add
-            // inside a map is not exact-once under task retry)
-            val batchMax = cfg.batchMax
-            batch.map { f =>
-              if (f.error.isEmpty) BatchedSink.postFile(f, client, batchMax)
-              FileOutcome(f)
-            }(outcome).collect()
-        }
-        val ok = rows.filter(_.error.isEmpty)
-        // gauges and counters are DRIVER-set from the status rows (a .set
-        // inside a task closure would mutate a deserialized copy)
-        metrics.foreach { m =>
-          ok.foreach { r =>
-            m.processedFiles.add(1)
-            m.postedDatapoints.add(r.datapoints)
-          }
-          ok.lastOption.foreach(r => m.postedTimeSeriesCount.set(r.series))
-        }
-        val lifecycle = new graft.tebis.Discovery.Lifecycle(
+        // batch-scoped gauge: this poll's successful files
+        metrics.foreach(_.successfullyProcessedFiles.set(0))
+        val rows = BatchedSink.sinkFiles(batch, client,
+          cfg.outputDir.map(out => BatchedSink.writeParquetBatch(_, out, batchId)))
+        // delete-as-commit (or archive) runs after the job above returned,
+        // so a replay implies every post completed; ignoreMissingFiles
+        // turns that replay into a skip, and its vanished files (posted by
+        // the crashed attempt) are not accounted again
+        val lifecycle = new Discovery.Lifecycle(
           cfg.failedDir, cfg.archiveDir, spark.sparkContext.hadoopConfiguration)
-        rows.filter(r => r.error.isDefined && !r.error.contains(ReplayMissing)).foreach { r =>
-          metrics.foreach(_.failedFiles.add(1))
-          // dead-letter or leave in place; NEVER delete an uningested file
-          if (cfg.failedDir.isDefined) lifecycle.onFailure(r.path)
-        }
-        if (cfg.manageLifecycle) {
-          // delete-as-commit (or archive) for successfully posted files —
-          // the reference's E2 protocol, applied per micro-batch. Runs
-          // LAST, after the job above returned, so a replay implies every
-          // post completed; ignoreMissingFiles turns that replay into a skip.
-          ok.foreach(r => lifecycle.onSuccess(r.path))
-          metrics.foreach(_.successfullyProcessedFiles.set(ok.length.toLong))
-        }
+        rows.filterNot(_.error.contains(ReplayMissing))
+          .foreach(BatchedSink.account(_, metrics, lifecycle))
         // per-poll folder gauges, after lifecycle moves (reference
         // monitoring.py available_csv_files / unprocessed_files)
         metrics.foreach { m =>
@@ -223,7 +170,10 @@ object LiveStream {
           val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val remaining =
             if (fs.exists(in))
-              fs.listStatus(in).count(s => s.isFile && s.getPath.getName.endsWith(".csv")).toLong
+              fs.listStatus(in).count { s =>
+                val name = s.getPath.getName
+                s.isFile && name.endsWith(".csv") && !Discovery.isHidden(name)
+              }.toLong
             else 0L
           m.availableCsvFiles.set(remaining)
           m.unprocessedFiles.set(remaining)

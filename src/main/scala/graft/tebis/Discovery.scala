@@ -3,10 +3,12 @@ package graft.tebis
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** File discovery (reference S1/S2/S19/S20, csv_extractor.py:239-280).
-  * Driver-side path listing via the Hadoop FileSystem API so the same code
-  * targets local disk, HDFS or object stores; the listing is metadata-only
-  * (the partition-pruning analog — out-of-range files are never opened).
+/** Historical file discovery (reference S1/S20, csv_extractor.py:239-262)
+  * and the per-file lifecycle. Driver-side path listing via the Hadoop
+  * FileSystem API so the same code targets local disk, HDFS or object
+  * stores; the listing is metadata-only (the partition-pruning analog —
+  * out-of-range files are never opened). Live discovery (S2/S19) is the
+  * streaming source in [[graft.streaming.LiveStream]].
   */
 object Discovery {
 
@@ -14,8 +16,9 @@ object Discovery {
     * by Python's glob) and '_'-prefixed (a Spark data-source convention —
     * documented divergence: the reference WOULD process `_x.csv`, but
     * listing what the engine cannot load would strand the file in the
-    * input dir forever). */
-  private def isHidden(name: String): Boolean =
+    * input dir forever). Live mode's folder gauges count by the same
+    * rule, so they match what the streaming source reads. */
+  private[graft] def isHidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
   /** stem (filename minus last extension) split on "_", with the Python
@@ -66,27 +69,6 @@ object Discovery {
             s"invalid literal for int(): '${parts.last}' in ${st.getPath.getName}"))
       else 0L
     }(Ordering.Long).map(_.getPath.toString).toSeq
-  }
-
-  /** Live discovery (csv_extractor.py:265-280): `*.csv` files whose mtime is
-    * older than `nowMs - settleMs` (1 s settle window), newest first, top
-    * `maxFiles` (20). Stat races (file deleted by a concurrent extractor)
-    * are tolerated by the listing snapshot itself.
-    */
-  def findLiveFiles(
-      dir: String,
-      nowMs: Long = System.currentTimeMillis(),
-      settleMs: Long = 1000L,
-      maxFiles: Int = 20,
-      conf: Configuration = new Configuration()): Seq[String] = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    val all = Option(fs.globStatus(new Path(dirPath, "*.csv"))).getOrElse(Array.empty)
-      .filter(st => !isHidden(st.getPath.getName))
-    all.filter(_.getModificationTime < nowMs - settleMs)
-      .sortBy(-_.getModificationTime)
-      .take(maxFiles)
-      .map(_.getPath.toString).toSeq
   }
 
   /** Post-commit file lifecycle (S17/S18, csv_extractor.py:78-89,184-192):

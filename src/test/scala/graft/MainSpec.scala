@@ -24,6 +24,10 @@ class MainSpec extends AnyFunSuite {
     assert(c.moveFailed && c.keepFinished && c.output.contains("/out") && c.catalog.contains("/cat"))
     assertThrows[IllegalArgumentException](Main.parseArgs(Array("--nope")))
     assertThrows[IllegalArgumentException](Main.parseArgs(Array("--live")))
+    // live mode creates no series, so a catalog is refused, not ignored
+    val e = intercept[IllegalArgumentException](
+      Main.parseArgs(Array("--input", "/in", "--live", "--catalog", "/cat")))
+    assert(e.getMessage.contains("--live") && e.getMessage.contains("--catalog"))
   }
 
   test("--log DIR (and the reference's -d alias) parse to the log4j2 mapping") {
@@ -149,6 +153,55 @@ class MainSpec extends AnyFunSuite {
       assert(reqs.last.body.contains(
         """csv_hist_processed_files_total{project_name="proj-e2e"} 1""" + "\n"))
     } finally server.stop(0)
+  }
+
+  test("historical run: client posts in one job, dead-letter, archive") {
+    val in = Files.createTempDirectory("main-post-in")
+    write(in, "TEBIS_A_100.csv", ";33 : T3\nu;bar\n1550092501;1,5\n1550092502;2,5\n")
+    write(in, "TEBIS_B_200.csv", ";34 : T4\nu;bar\n1550092501;3,5\n")
+    write(in, "broken_x_300.csv", ";9 : Z\nu;x\nBAD;1,0\n")
+    val cfg = Main.Config(input = in.toString, moveFailed = true, keepFinished = true)
+    val sink = new MetricsSink.Recording
+    val metrics = Metrics(spark.sparkContext, "test_post", sink)
+    val lifecycle = new graft.tebis.Discovery.Lifecycle(
+      Some(s"$in/failed"), Some(s"$in/finished"), spark.sparkContext.hadoopConfiguration)
+    // count the jobs this run starts: the test thread tags them with a
+    // local property, which every job it submits carries
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.run") == tag)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    RecordingClient.reset()
+    spark.sparkContext.setLocalProperty("graft.test.run", tag)
+    try Main.runHistorical(spark, cfg, metrics, lifecycle, new RecordingClient)
+    finally spark.sparkContext.setLocalProperty("graft.test.run", null)
+    try {
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis + 10000
+      while (jobs.get == 0 && System.currentTimeMillis < deadline) Thread.sleep(20)
+      Thread.sleep(200)
+      assert(jobs.get == 1, s"jobs per historical run: ${jobs.get}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    // each good file's series posted exactly once; the bad file posts nothing
+    val posted = RecordingClient.all.flatten
+    assert(posted.map(_.externalId).sorted == Seq("33", "34"))
+    assert(posted.find(_.externalId == "33").get.datapoints.map(_.value) == Seq(1.5, 2.5))
+    assert(posted.find(_.externalId == "34").get.datapoints.map(_.value) == Seq(3.5))
+    // lifecycle and accounting as on the parquet path
+    assert(Files.list(in.resolve("finished")).count() == 2)
+    assert(Files.exists(in.resolve("failed").resolve("broken_x_300.csv")))
+    assert(metrics.failedFiles.value == 1 && metrics.processedFiles.value == 2)
+    assert(metrics.postedDatapoints.value == 3 && metrics.createdTimeSeries.value == 0)
+    assert(metrics.availableCsvFiles.get == 3 && metrics.unprocessedFiles.get == 0)
+    assert(metrics.successfullyProcessedFiles.get == 2)
+    assert(metrics.postedTimeSeriesCount.get == 1)
+    assert(sink.pushes.size == 5) // discovery + 3 files + final
   }
 
   test("historical run: parquet sink, catalog upsert, dead-letter, archive") {

@@ -34,7 +34,7 @@ class StreamingSpec extends AnyFunSuite {
     val sink = new MetricsSink.Recording
     val metrics = Metrics(spark.sparkContext, "test_live", sink)
     val q = LiveStream.start(spark,
-      LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L, cleanSource = "off",
+      LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L,
         failedDir = Some(dir.resolve("failed").toString)),
       new RecordingClient, Some(metrics))
     try {
@@ -121,6 +121,27 @@ class StreamingSpec extends AnyFunSuite {
     } finally { q.stop(); spark.sparkContext.removeSparkListener(listener) }
   }
 
+  test("live stream: folder gauges skip the hidden files the source never reads") {
+    val dir = Files.createTempDirectory("hidden-in")
+    val ckpt = Files.createTempDirectory("hidden-ckpt")
+    writeTebis(dir, "TEBIS_H_100.csv", 1000, 2, "h1")
+    // '_'-prefixed: Spark's file index skips it, so it is never pending
+    writeTebis(dir, "_partial.csv", 2000, 2, "h2")
+    RecordingClient.reset()
+    val sink = new MetricsSink.Recording
+    val metrics = Metrics(spark.sparkContext, "test_hidden", sink)
+    val q = LiveStream.start(spark,
+      LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L),
+      new RecordingClient, Some(metrics))
+    try q.processAllAvailable() finally q.stop()
+    assert(RecordingClient.all.flatten.map(_.externalId) == Seq("h1"))
+    assert(Files.exists(dir.resolve("_partial.csv")))
+    val last = sink.last.get
+    assert(last("test_hidden.processed_files") == 1)
+    assert(last("test_hidden.available_csv_files") == 0)
+    assert(last("test_hidden.unprocessed_files") == 0)
+  }
+
   test("live stream: settle window reads a slow writer's final bytes") {
     val dir = Files.createTempDirectory("settle-in")
     val ckpt = Files.createTempDirectory("settle-ckpt")
@@ -139,8 +160,7 @@ class StreamingSpec extends AnyFunSuite {
     })
     writer.start()
     val q = LiveStream.start(spark,
-      LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L,
-        cleanSource = "off", settleMs = 1500L),
+      LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L, settleMs = 1500L),
       new RecordingClient)
     try { q.processAllAvailable(); writer.join() } finally q.stop()
     val pts = RecordingClient.all.flatten.flatMap(_.datapoints)
@@ -152,8 +172,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("lake-ckpt")
     val out = Files.createTempDirectory("lake-out").resolve("dp").toString
     writeTebis(dir, "TEBIS_P_100.csv", 1550092501L, 4, "p1")
-    val cfg = LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L,
-      cleanSource = "off", outputDir = Some(out))
+    val cfg = LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L, outputDir = Some(out))
     val q1 = LiveStream.start(spark, cfg, new RecordingClient)
     try { q1.processAllAvailable() } finally q1.stop()
     assert(spark.read.parquet(out).count() == 4)
@@ -996,7 +1015,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("rec-ckpt")
     writeTebis(dir, "TEBIS_R_100.csv", 1000, 4, "r1")
     RecordingClient.reset()
-    val cfg = LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L, cleanSource = "off")
+    val cfg = LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L)
     val q1 = LiveStream.start(spark, cfg, new RecordingClient)
     try { q1.processAllAvailable() } finally q1.stop()
     assert(RecordingClient.all.flatten.flatMap(_.datapoints).size == 4)

@@ -77,20 +77,6 @@ class TebisPipelineSpec extends AnyFunSuite {
     assert(skipped == Seq("TEBIS_FK_200.csv", "TEBIS_FK_300.csv"))
   }
 
-  test("discovery: live top-k newest with settle window") {
-    val dir = Files.createTempDirectory("live")
-    val now = System.currentTimeMillis()
-    (1 to 5).foreach { i =>
-      val p = writeFile(dir, s"f$i.csv", "x")
-      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(now - i * 10000))
-    }
-    val fresh = writeFile(dir, "fresh.csv", "x") // inside settle window
-    Files.setLastModifiedTime(fresh, java.nio.file.attribute.FileTime.fromMillis(now))
-    val live = Discovery.findLiveFiles(dir.toString, nowMs = now, maxFiles = 3)
-      .map(p => Paths.get(p).getFileName.toString)
-    assert(live == Seq("f1.csv", "f2.csv", "f3.csv"))
-  }
-
   test("unpivotWide matches parseContent on clean data") {
     import spark.implicits._
     val wide = Seq(
@@ -255,19 +241,5 @@ class TebisPipelineSpec extends AnyFunSuite {
     assert(all.flatten.map(_.externalId).distinct.size == 10)
     // more than one request before commit proves the incremental flush ran
     assert(all.size > (10 + 2) / 3)
-  }
-
-  test("distributed write: series kept whole, batch cap respected") {
-    import spark.implicits._
-    val dps = (1 to 50).flatMap(s => (1 to 10).map(i => Datapoint(s"s$s", i * 1000L, i.toDouble)))
-    val client = new RecordingClient
-    RecordingClient.reset()
-    // RecordingClient records into a JVM-static buffer; local mode shares the JVM.
-    BatchedSink.write(dps.toDS(), client, batchMax = 7)
-    val all = client.batches.flatten
-    assert(all.map(_.externalId).distinct.size == 50)
-    assert(all.forall(_.datapoints.size == 10)) // each series intact in one payload
-    assert(client.batches.forall(_.size <= 7))
-    assert(all.flatMap(_.datapoints).size == 500)
   }
 }
