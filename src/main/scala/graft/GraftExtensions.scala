@@ -7,15 +7,16 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Spark-idiomatic installation of the graft surface: pass
+/** Spark-idiomatic installation of the graft SQL surface: pass
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
   * `SparkSession.builder().withExtensions(new GraftExtensions)`) and every
-  * custom expression resolves in plain `spark.sql(...)` on any session of
-  * that context — no per-session `register` call, and the functions are
-  * catalog-visible (`SHOW FUNCTIONS`, `DESCRIBE FUNCTION`) like
-  * built-ins. The expression inventory is shared with the session-scoped
-  * [[graft.functions.GraftFunctions.register]] route so the two can never
-  * drift. Also injects [[graft.plans.BandedRangeJoinRule]], which re-plans
+  * custom expression resolves by name in plain `spark.sql(...)` on any
+  * session of that context — no per-session `register` call, and the
+  * functions are catalog-visible (`SHOW FUNCTIONS`, `DESCRIBE FUNCTION`)
+  * like built-ins. The library's operators do not need this: they build
+  * the expressions as typed Columns. The name inventory is shared with
+  * the session-scoped [[graft.functions.GraftFunctions.register]] route
+  * so the two can never drift. Also injects [[graft.plans.BandedRangeJoinRule]], which re-plans
   * bounded range (theta) joins from BroadcastNestedLoopJoin into banded
   * shuffled equi-joins, and the `tebis_scan('/dir')` table-valued
   * function, so SQL-only users read TEBIS trees without touching the

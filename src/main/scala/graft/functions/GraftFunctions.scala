@@ -2,12 +2,14 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -155,6 +157,7 @@ object Md5Pool {
   * Dedup.minhashSigExpr; ~20x faster (no interpreted lambda per hash). */
 case class MinHashSig(child: Expression, numHashes: Int)
     extends UnaryExpression with CodegenFallback {
+  require(numHashes >= 1, s"minhash_sig: numHashes must be >= 1, got $numHashes")
   override def dataType: DataType = ArrayType(StringType)
 
   override def nullSafeEval(v: Any): Any = {
@@ -217,6 +220,7 @@ object MinHashCore {
   * across plan subtrees. */
 case class WordShingles(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
+  require(n >= 1, s"word_shingles: n must be >= 1, got $n")
   override def dataType: DataType = ArrayType(StringType)
 
   override def nullSafeEval(v: Any): Any = {
@@ -276,6 +280,8 @@ case class WordShingles(child: Expression, n: Int)
   * exists. */
 case class WinnowSelect(child: Expression, k: Int, w: Int, packBase: Long)
     extends UnaryExpression with CodegenFallback {
+  require(k >= 1 && w >= 1 && packBase >= 1,
+    s"winnow_select: k, w and packBase must be >= 1, got $k, $w, $packBase")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(v: Any): Any = {
@@ -352,6 +358,8 @@ case class WinnowSelect(child: Expression, k: Int, w: Int, packBase: Long)
   * whole signature computation once per band slot (32x). */
 case class MinHashBands(child: Expression, numHashes: Int, rows: Int)
     extends UnaryExpression with CodegenFallback {
+  require(numHashes >= 1 && rows >= 1 && rows <= numHashes,
+    s"minhash_bands: need 1 <= rows <= numHashes, got numHashes $numHashes, rows $rows")
   override def dataType: DataType = ArrayType(StringType)
 
   override def nullSafeEval(v: Any): Any = {
@@ -454,6 +462,7 @@ case class SimHash32(child: Expression)
   * measured 41.8 s → 17.9 s at 100x, 2.3x). */
 case class WordGramMd5(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
+  require(n >= 1, s"word_gram_md5: n must be >= 1, got $n")
   override def dataType: DataType = ArrayType(StringType)
 
   override def nullSafeEval(v: Any): Any = {
@@ -504,6 +513,7 @@ case class WordGramMd5(child: Expression, n: Int)
   * is unchanged — GraftFunctionsSpec locks equality on both paths. */
 case class AnyWordGramInBloom(child: Expression, n: Int, bloomB64: String)
     extends UnaryExpression with CodegenFallback {
+  require(n >= 1, s"any_word_gram_in_bloom: n must be >= 1, got $n")
   override def dataType: DataType = BooleanType
 
   @transient private lazy val bloom =
@@ -703,6 +713,8 @@ object Hyperplanes {
   * the oracle bucket-identical on any input. */
 case class HyperplaneKeys(child: Expression, seed: Int, tables: Int, bits: Int, dim: Int)
     extends UnaryExpression with CodegenFallback {
+  require(tables >= 1 && bits >= 1 && dim >= 1,
+    s"lsh_keys: tables, bits and dim must be >= 1, got $tables, $bits, $dim")
   override def dataType: DataType = ArrayType(StringType)
   override def nullable: Boolean = false
 
@@ -801,7 +813,7 @@ object SpaceTokenCount {
   * in Md5PrefixRuleSpec. */
 case class Md5PrefixLong(child: Expression, nHex: Int)
     extends UnaryExpression {
-  require(nHex >= 1 && nHex <= 15, s"nHex must be in [1, 15], got $nHex")
+  require(nHex >= 1 && nHex <= 15, s"md5_prefix_long: nHex must be in [1, 15], got $nHex")
   override def dataType: DataType = LongType
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -847,47 +859,97 @@ object Md5PrefixLong {
   }
 }
 
-/** The custom expressions, name -> builder: the single inventory behind
-  * BOTH registration routes (session-scoped [[GraftFunctions.register]]
+/** The custom expressions: typed constructors for Scala callers, and
+  * name -> builder for SQL. Operators build each expression as a typed
+  * `Column` through the constructors, so nothing has to be registered
+  * before they run. The builders are the single inventory behind BOTH
+  * SQL registration routes (session-scoped [[GraftFunctions.register]]
   * and the `spark.sql.extensions`-injected [[graft.GraftExtensions]]). */
 object GraftFunctions {
-  private def intArg(es: Seq[Expression], i: Int): Int =
-    es(i).eval().asInstanceOf[Int]
+  def quantizedDot(a: Column, b: Column): Column =
+    column(QuantizedDot(expression(a), expression(b)))
+  def pqAdcSum(flat: Column, codes: Column): Column =
+    column(PqAdcSum(expression(flat), expression(codes)))
+  def minhashSig(grams: Column, numHashes: Int): Column =
+    column(MinHashSig(expression(grams), numHashes))
+  def minhashBands(grams: Column, numHashes: Int, rows: Int): Column =
+    column(MinHashBands(expression(grams), numHashes, rows))
+  def simHash32(toks: Column): Column = column(SimHash32(expression(toks)))
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    column(SortedIntersectCount(expression(a), expression(b)))
+  def hammingStr(a: Column, b: Column): Column =
+    column(HammingDistance(expression(a), expression(b)))
+  def wordShingles(toks: Column, n: Int): Column = column(WordShingles(expression(toks), n))
+  def wordGramMd5(toks: Column, n: Int): Column = column(WordGramMd5(expression(toks), n))
+  def anyWordGramInBloom(text: Column, n: Int, bloomB64: String): Column =
+    column(AnyWordGramInBloom(expression(text), n, bloomB64))
+  def winnowSelect(toks: Column, k: Int, w: Int, packBase: Long): Column =
+    column(WinnowSelect(expression(toks), k, w, packBase))
+  def lshKeys(qv: Column, seed: Int, tables: Int, bits: Int, dim: Int): Column =
+    column(HyperplaneKeys(expression(qv), seed, tables, bits, dim))
+  def rollingHash(s: Column): Column = column(RollingHash(expression(s)))
+  /** Spark's own bloom aggregate (kept out of its public registry). */
+  def bloomFilterAgg(x: Column, expectedItems: Long, numBits: Long): Column =
+    column(new BloomFilterAggregate(expression(x), Literal(expectedItems), Literal(numBits))
+      .toAggregateExpression())
+  def mightContain(bloom: Column, x: Column): Column =
+    column(BloomFilterMightContain(expression(bloom), expression(x)))
+
+  /** A SQL call's integer argument, checked while the call is analyzed:
+    * anything but an INT literal fails there, naming the function. */
+  private def intArg(fn: String, es: Seq[Expression], i: Int): Int = es(i) match {
+    case Literal(v: Int, IntegerType) => v
+    case e => throw new IllegalArgumentException(
+      s"$fn: argument ${i + 1} must be an INT literal, got $e")
+  }
+
+  private def longArg(fn: String, es: Seq[Expression], i: Int): Long = es(i) match {
+    case Literal(v: Int, IntegerType) => v.toLong
+    case Literal(v: Long, LongType) => v
+    case e => throw new IllegalArgumentException(
+      s"$fn: argument ${i + 1} must be an integer literal, got $e")
+  }
+
+  private def stringArg(fn: String, es: Seq[Expression], i: Int): String = es(i) match {
+    case Literal(v: UTF8String, _: StringType) => v.toString
+    case e => throw new IllegalArgumentException(
+      s"$fn: argument ${i + 1} must be a STRING literal, got $e")
+  }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "quantized_dot" -> (es => QuantizedDot(es.head, es(1))),
-    "minhash_sig" -> (es => MinHashSig(es.head, intArg(es, 1))),
+    "minhash_sig" -> (es => MinHashSig(es.head, intArg("minhash_sig", es, 1))),
     "simhash32" -> (es => SimHash32(es.head)),
     "sorted_intersect_count" -> (es => SortedIntersectCount(es.head, es(1))),
-    "word_shingles" -> (es => WordShingles(es.head, intArg(es, 1))),
-    "word_gram_md5" -> (es => WordGramMd5(es.head, intArg(es, 1))),
+    "word_shingles" -> (es => WordShingles(es.head, intArg("word_shingles", es, 1))),
+    "word_gram_md5" -> (es => WordGramMd5(es.head, intArg("word_gram_md5", es, 1))),
     "any_word_gram_in_bloom" -> (es => AnyWordGramInBloom(es.head,
-      intArg(es, 1), es(2).eval().asInstanceOf[UTF8String].toString)),
+      intArg("any_word_gram_in_bloom", es, 1), stringArg("any_word_gram_in_bloom", es, 2))),
     "hamming_str" -> (es => HammingDistance(es.head, es(1))),
-    "minhash_bands" -> (es => MinHashBands(es.head, intArg(es, 1), intArg(es, 2))),
-    "lsh_keys" -> (es => HyperplaneKeys(es.head,
-      intArg(es, 1), intArg(es, 2), intArg(es, 3), intArg(es, 4))),
+    "minhash_bands" -> (es => MinHashBands(es.head,
+      intArg("minhash_bands", es, 1), intArg("minhash_bands", es, 2))),
+    "lsh_keys" -> (es => HyperplaneKeys(es.head, intArg("lsh_keys", es, 1),
+      intArg("lsh_keys", es, 2), intArg("lsh_keys", es, 3), intArg("lsh_keys", es, 4))),
     "pq_adc_sum" -> (es => PqAdcSum(es.head, es(1))),
     "rolling_hash" -> (es => RollingHash(es.head)),
     "space_token_count" -> (es => SpaceTokenCount(es.head)),
-    "md5_prefix_long" -> (es => Md5PrefixLong(es.head, intArg(es, 1))),
+    "md5_prefix_long" -> (es => Md5PrefixLong(es.head, intArg("md5_prefix_long", es, 1))),
+    "winnow_select" -> (es => WinnowSelect(es.head, intArg("winnow_select", es, 1),
+      intArg("winnow_select", es, 2), longArg("winnow_select", es, 3))),
     // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
     // own runtime-filter injection but keeps both out of the public
-    // FunctionRegistry; registering them here lets the bloom
-    // decontamination path build the filter with a plain aggregate and
-    // consume it via a scalar subquery — the only shapes might_contain
-    // accepts. (The bare AggregateFunction is wrapped into an
-    // AggregateExpression by the analyzer, same as built-in aggregates.)
-    "winnow_select" -> (es => WinnowSelect(es.head,
-      intArg(es, 1), intArg(es, 2), es(3).eval().asInstanceOf[Long])),
-    "bloom_filter_agg" -> (es =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es.head, es(1), es(2))),
+    // FunctionRegistry; registering them here lets SQL build a filter
+    // with a plain aggregate and probe it (the bare AggregateFunction is
+    // wrapped into an AggregateExpression by the analyzer, same as
+    // built-in aggregates).
+    "bloom_filter_agg" -> (es => new BloomFilterAggregate(es.head, es(1), es(2))),
     "might_contain" -> (es => BloomFilterMightContain(es.head, es(1))))
 
-  /** Session-scoped registration so `expr("quantized_dot(a, b)")` etc.
-    * resolve; idempotent. Names the registry already holds (an earlier
-    * call, or [[graft.GraftExtensions]]) are left as they are. */
+  /** Makes the builder names resolve in `spark.sql` on a session built
+    * without [[graft.GraftExtensions]]; idempotent. Names the registry
+    * already holds (an earlier call, or the extensions) are left as they
+    * are. Scala callers need neither: the typed constructors above build
+    * the same expressions as `Column`s. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.wordGramMd5
 import graft.queries.QueryDef
 import graft.queries.QueryDef.t
 
@@ -253,7 +254,6 @@ object Chunking {
     * distinct query-fp set (corpus_docs / [[QueryDocMod]] rows), then
     * one query-keyed rollup. No substring scans, no pair explosion. */
   def retrievalContainment(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val cw = WordChunk; val cs = WordStride; val g = QueryGramWords
     val toks = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("nw", size(col("w")).cast("long"))
@@ -267,7 +267,7 @@ object Chunking {
     val grams = toks
       .filter(col("nw") >= g)
       .select(col("doc_id"), col("nw"), col("w"),
-        posexplode(expr(s"word_gram_md5(w, $g)")).as(Seq("i0", "fp")))
+        posexplode(wordGramMd5(col("w"), g)).as(Seq("i0", "fp")))
       .withColumn("i", col("i0").cast("long") + 1L)
       .select(col("doc_id"), col("fp"),
         explode(expr(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.quantizedDot
 import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
 
@@ -403,7 +404,7 @@ object Corpus {
       .select(col("qv").as("qq"), col("nrm").as("nq")))
     val dense = q.filter(col("vec_id") =!= minId).crossJoin(qvec)
       .withColumn("sim", Similarity.cosine(
-        expr("CAST(quantized_dot(qv, qq) AS DOUBLE)"), col("nrm"), col("nq")))
+        quantizedDot(col("qv"), col("qq")).cast("double"), col("nrm"), col("nq")))
       .orderBy(col("sim").desc, col("vec_id").asc).limit(RrfPoolK)
       .withColumn("r_dense", row_number().over(
         Window.orderBy(col("sim").desc, col("vec_id").asc)))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{bloomFilterAgg, hammingStr, mightContain, minhashBands,
+  minhashSig, rollingHash, simHash32, sortedIntersectCount, winnowSelect, wordShingles}
 import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
 
@@ -54,10 +56,9 @@ object Dedup {
     * round-robin repartition costs one shuffle of raw text and buys full
     * parallelism for every downstream stage. */
   def shingled(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     QueryDef.spread(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), expr("word_shingles(toks, 3)").as("grams"))
+      .select(col("doc_id"), wordShingles(col("toks"), 3).as("grams"))
   }
 
   /** Lambda-only formulation of shingled() — the semantic spec for
@@ -151,7 +152,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, threshold: Double,
       orderByDocFreq: Boolean = false, maxDocFreq: Option[Long] = None): DataFrame = {
     require(threshold == 0.8, "integer-exact prefix filter is derived for t=0.8")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = maxDocFreq.foldLeft(shingled(docs))((b, cap) => capGrams(b, cap))
     val withSorted = canonicalSorted(base, orderByDocFreq)
     // materialize shingle+sort once: the table feeds four subtrees
@@ -166,7 +166,7 @@ object Dedup {
     prefixCandidates(sh)
       .join(sh.select(col("doc_id").as("id_a"), col("vsorted").as("ga"), col("n").as("na")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("vsorted").as("gb"), col("n").as("nb")), "id_b")
-      .withColumn("inter", expr("sorted_intersect_count(ga, gb)"))
+      .withColumn("inter", sortedIntersectCount(col("ga"), col("gb")))
       .filter(col("inter") * 5 >= (col("na") + col("nb") - col("inter")) * 4)
       .select(col("id_a"), col("id_b"),
         (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
@@ -197,12 +197,11 @@ object Dedup {
     * exact Jaccard re-rank (array_intersect on the shingle sets) — output
     * identical to `ngramJaccardPairs` whenever LSH recall holds. */
   def minhashLshPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // checkpoint shingles (feeds bands + both verify sides) and bands
     // (both candidate join sides) so signatures are computed exactly once
     val sh = shingled(docs).withColumn("sorted", sort_array(col("grams"))).localCheckpoint()
     val bands = sh
-      .select(col("doc_id"), explode(expr(s"minhash_bands(grams, $NumHashes, $Rows)")).as("bkey"))
+      .select(col("doc_id"), explode(minhashBands(col("grams"), NumHashes, Rows)).as("bkey"))
       .localCheckpoint()
     val cands = bands.as("a")
       .join(bands.as("b"), col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
@@ -211,7 +210,7 @@ object Dedup {
     cands
       .join(sh.select(col("doc_id").as("id_a"), col("sorted").as("ga"), size(col("grams")).cast("long").as("na")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("sorted").as("gb"), size(col("grams")).cast("long").as("nb")), "id_b")
-      .withColumn("inter", expr("sorted_intersect_count(ga, gb)"))
+      .withColumn("inter", sortedIntersectCount(col("ga"), col("gb")))
       .select(col("id_a"), col("id_b"),
         (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
@@ -248,7 +247,6 @@ object Dedup {
     *   doc_id). */
   def decontaminate(docs: DataFrame, threshold: Double,
       dedupFirst: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base =
       if (!dedupFirst) docs
       // one shuffle on doc_id; reps is corpus-keyed, so no broadcast
@@ -259,7 +257,7 @@ object Dedup {
       .localCheckpoint()
     val bands = sh
       .select(col("doc_id"), col("split"),
-        explode(expr(s"minhash_bands(grams, $NumHashes, $Rows)")).as("bkey"))
+        explode(minhashBands(col("grams"), NumHashes, Rows)).as("bkey"))
       .localCheckpoint()
     val cands = bands.filter(col("split") === "test").as("a")
       .join(bands.filter(col("split") === "train").as("b"), col("a.bkey") === col("b.bkey"))
@@ -270,7 +268,7 @@ object Dedup {
         size(col("grams")).cast("long").as("na")), "test_id")
       .join(sh.select(col("doc_id").as("train_id"), col("sorted").as("gb"),
         size(col("grams")).cast("long").as("nb")), "train_id")
-      .withColumn("inter", expr("sorted_intersect_count(ga, gb)"))
+      .withColumn("inter", sortedIntersectCount(col("ga"), col("gb")))
       .withColumn("jaccard", col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .groupBy("test_id")
@@ -311,25 +309,23 @@ object Dedup {
   val BloomExpectedGrams = 1000000L
   val BloomNumBits = 8000000L
 
-  /** (train gram stream, bloom-surviving slice of it) — split out of
-    * [[bloomDecontaminate]] so ScaleTechniquesSpec can gate the pruning
-    * ratio its scaladoc claims. */
+  /** (train gram stream, bloom-surviving slice of it, distinct test
+    * grams) — split out of [[bloomDecontaminate]] so ScaleTechniquesSpec
+    * can gate the pruning ratio its scaladoc claims. */
   private[graft] def bloomTrainSurvivors(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(spark)
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
     val sh = shingled(t(spark, dir, "documents"))
       .withColumn("split", expr(Sampling.splitCase("doc_id")))
       .localCheckpoint() // feeds the bloom build, the verify join AND the train stream
-    sh.filter(col("split") === "test")
+    val testGrams = sh.filter(col("split") === "test")
       .select(explode(col("grams")).as("gram")).distinct()
-      .createOrReplaceTempView("graft_test_grams")
     val trainGrams = sh.filter(col("split") === "train")
       .select(col("doc_id"), explode(col("grams")).as("gram"))
-    val survivors = trainGrams.filter(expr(
-      s"""might_contain((SELECT bloom_filter_agg(xxhash64(gram),
-            ${BloomExpectedGrams}L, ${BloomNumBits}L) FROM graft_test_grams),
-          xxhash64(gram))"""))
-    (trainGrams, survivors)
+    val bloom = testGrams
+      .agg(bloomFilterAgg(xxhash64(col("gram")), BloomExpectedGrams, BloomNumBits))
+      .scalar()
+    val survivors = trainGrams.filter(mightContain(bloom, xxhash64(col("gram"))))
+    (trainGrams, survivors, testGrams)
   }
 
   /** Exact-gram decontamination with a Bloom prefilter — the 100 TB
@@ -361,19 +357,18 @@ object Dedup {
     * k·dim-bounded collect discipline as the centroid caches. */
   def testGramBloomBytes(spark: SparkSession, dir: String,
       expected: Long = BloomExpectedGrams, numBits: Long = BloomNumBits): Array[Byte] = {
-    graft.functions.GraftFunctions.register(spark)
     shingled(t(spark, dir, "documents"))
       .withColumn("split", expr(Sampling.splitCase("doc_id")))
       .filter(col("split") === "test")
       .select(explode(col("grams")).as("gram"))
-      .agg(expr(s"bloom_filter_agg(xxhash64(gram), ${expected}L, ${numBits}L)").as("bf"))
+      .agg(bloomFilterAgg(xxhash64(col("gram")), expected, numBits).as("bf"))
       .head().getAs[Array[Byte]](0)
   }
 
   def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val (_, survivors) = bloomTrainSurvivors(spark, dir)
+    val (_, survivors, testGrams) = bloomTrainSurvivors(spark, dir)
     survivors
-      .join(spark.table("graft_test_grams"), "gram") // exact verify: survivors only
+      .join(testGrams, "gram") // exact verify: survivors only
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared"), min(col("gram")).as("first_gram"))
   }
@@ -624,7 +619,6 @@ object Dedup {
     * discipline with shift-robust boundaries. */
   /** The chunk stream: one row per chunk, (doc_id, source, fp, len). */
   def cdcChunks(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val p = 1000000007L
     val mask = (1 << CdcMaskBits) - 1
     val pows = CdcPows.mkString("array(", "L, ", "L)")
@@ -632,7 +626,7 @@ object Dedup {
       s"(a, k) -> a + element_at(th, i - k) * element_at($pows, k + 1) % $p) % $p"
     QueryDef.spread(docs.select(col("doc_id"), col("source"), col("text")))
       .withColumn("toks", split(col("text"), " "))
-      .withColumn("th", expr("transform(toks, t -> rolling_hash(t))"))
+      .withColumn("th", transform(col("toks"), rollingHash(_)))
       .withColumn("n", size(col("toks")))
       .withColumn("bounds", expr(
         s"""concat(array(0),
@@ -727,7 +721,6 @@ object Dedup {
     * df rollup + join-back over SELECTED rows only (≈ token volume
     * / WinW), no pair output. */
   def winnowing(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sel = QueryDef.spread(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("m", greatest(size(col("toks")) - lit(WinK - 1), lit(0)).cast("long"))
@@ -738,7 +731,7 @@ object Dedup {
       // list_distinct can't hash STRUCTs, and parity beats elegance.
       // GraftFunctionsSpec locks this against the lambda-composed
       // formulation ([[winnowSelLambdaExpr]]): 15.65 s -> 1.5 s at sf0.1.
-      .withColumn("sel", expr(s"winnow_select(toks, $WinK, $WinW, ${WinPack}L)"))
+      .withColumn("sel", winnowSelect(col("toks"), WinK, WinW, WinPack))
       .select(col("doc_id"), col("m"), explode(col("sel")).as("v"))
       .select(col("doc_id"), col("m"), (col("v") % lit(WinPack)).as("h"))
       .localCheckpoint() // feeds the df rollup AND the join-back
@@ -1182,7 +1175,6 @@ object Dedup {
   }
 
   def simhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // r13: spread before the per-token md5 fold — the [[shingled]]
     // discipline, but CONDITIONAL: a bare-scan input is one task (3x on
     // q48's fingerprint pass at local[32]); a post-join input is already
@@ -1192,7 +1184,7 @@ object Dedup {
     // repartition and stay serial.
     QueryDef.spreadIfNarrow(docs.select(col("doc_id"), col("text")),
         minBytes = 0L, barrier = true)
-      .select(col("doc_id"), expr("simhash32(split(text, ' '))").as("simhash"))
+      .select(col("doc_id"), simHash32(split(col("text"), " ")).as("simhash"))
   }
 
   /** Reference formulation via built-in higher-order functions only —
@@ -1223,7 +1215,7 @@ object Dedup {
     bands.as("a")
       .join(bands.as("b"), col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        expr("hamming_str(a.simhash, b.simhash)").as("hamming"))
+        hammingStr(col("a.simhash"), col("b.simhash")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -1238,7 +1230,6 @@ object Dedup {
     * pass, one band join, no distance cutoff; the histogram is a
     * 0..32-bounded rollup over distinct candidate pairs. */
   def simhashDistanceHistogram(docs: DataFrame, nBands: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val width = SimhashBits / nBands
     val reps = exact(docs).select(col("keep_id").as("doc_id"))
     val fp = simhash(docs.join(reps, "doc_id")).localCheckpoint()
@@ -1249,7 +1240,7 @@ object Dedup {
     bands.as("a")
       .join(bands.as("b"), col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        expr("hamming_str(a.simhash, b.simhash)").as("hamming"))
+        hammingStr(col("a.simhash"), col("b.simhash")).as("hamming"))
       .distinct()
       .groupBy("hamming").agg(count(lit(1)).as("n_pairs"))
   }
@@ -1635,14 +1626,13 @@ object Dedup {
     * exact integer-micro Jaccard — q218's and q227's shared front end
     * (one shingle/signature pass, one band join, checkpointed). */
   private[graft] def repCalibrationPairs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val reps = docs.join(exact(docs).select(col("keep_id").as("doc_id")), "doc_id")
     val sh = shingled(reps)
       .withColumn("sorted", sort_array(col("grams")))
-      .withColumn("sig", expr(s"minhash_sig(grams, $NumHashes)"))
+      .withColumn("sig", minhashSig(col("grams"), NumHashes))
       .localCheckpoint()
     val bands = sh
-      .select(col("doc_id"), explode(expr(s"minhash_bands(grams, $NumHashes, $Rows)")).as("bkey"))
+      .select(col("doc_id"), explode(minhashBands(col("grams"), NumHashes, Rows)).as("bkey"))
       .localCheckpoint()
     val cands = bands.as("a")
       .join(bands.as("b"), col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
@@ -1653,7 +1643,7 @@ object Dedup {
         size(col("grams")).cast("long").as("na"), col("sig").as("siga")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("sorted").as("gb"),
         size(col("grams")).cast("long").as("nb"), col("sig").as("sigb")), "id_b")
-      .withColumn("inter", expr("sorted_intersect_count(ga, gb)"))
+      .withColumn("inter", sortedIntersectCount(col("ga"), col("gb")))
       .withColumn("exact_micro", expr("(inter * 1000000L) div (na + nb - inter)"))
   }
 

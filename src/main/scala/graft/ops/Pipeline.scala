@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{bloomFilterAgg, mightContain}
 import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
 
@@ -71,7 +72,6 @@ object Pipeline {
     * probe as the dominant repeated stage of q91/q104/q148). */
   private[graft] def cleanTrainStages(docs: DataFrame,
       w: Int = Dedup.SpanWidth): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // 1. quality cut, as a semi-join on the gated operator's survivors.
     // LAZY checkpoint: with one consumer (deduped, below) it adds only the
     // persist-while-passing cost; when the funnel also reads `kept` the
@@ -94,10 +94,10 @@ object Pipeline {
     val testFps = spans.filter(col("split") === "test").select("fp").distinct()
       .localCheckpoint()
     val bloomB64 = java.util.Base64.getEncoder.encodeToString(
-      testFps.agg(expr(s"bloom_filter_agg(xxhash64(fp), ${Dedup.BloomExpectedGrams}L, " +
-        s"${Dedup.BloomNumBits}L)").as("bf")).head().getAs[Array[Byte]]("bf"))
+      testFps.agg(bloomFilterAgg(xxhash64(col("fp")), Dedup.BloomExpectedGrams,
+        Dedup.BloomNumBits).as("bf")).head().getAs[Array[Byte]]("bf"))
     val contaminated = spans.filter(col("split") === "train")
-      .filter(expr(s"might_contain(unbase64('$bloomB64'), xxhash64(fp))"))
+      .filter(mightContain(unbase64(lit(bloomB64)), xxhash64(col("fp"))))
       .join(testFps, "fp").select("doc_id").distinct()
     val clean = bySplit.filter(col("split") === "train")
       .join(contaminated, Seq("doc_id"), "left_anti")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.{lshKeys, pqAdcSum, quantizedDot}
 import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
 
@@ -41,11 +42,10 @@ object Similarity {
     * built-in zip_with/aggregate lambda pipeline evaluates interpretively
     * and was ~50x slower on the O(n²) join hot path. */
   def quantized(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // spread the (often single-file) vector table before the O(n²) work
     QueryDef.spread(t(spark, dir, "embeddings"))
       .select(col("vec_id"), expr(quantExpr).as("qv"), col("label"))
-      .withColumn("nrm", expr("quantized_dot(qv, qv)"))
+      .withColumn("nrm", quantizedDot(col("qv"), col("qv")))
   }
 
   /** Total cosine: try_divide(dot, |a||b|) coalesced to -Infinity. A
@@ -62,7 +62,7 @@ object Similarity {
       lit(Double.NegativeInfinity))
 
   private val simCol =
-    cosine(expr("CAST(quantized_dot(qa, qb) AS DOUBLE)"), col("na"), col("nb"))
+    cosine(quantizedDot(col("qa"), col("qb")).cast("double"), col("na"), col("nb"))
 
   private def pairFrames(qa: DataFrame, qb: DataFrame): (DataFrame, DataFrame) = (
     qa.select(col("vec_id").as("id_a"), col("qv").as("qa"), col("nrm").as("na")),
@@ -182,7 +182,7 @@ object Similarity {
     val pool = wf.crossJoin(broadcast(qRow))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("rel", cosine(
-        expr("CAST(quantized_dot(qv, qqv) AS DOUBLE)"), col("nrm"), col("qnrm")))
+        quantizedDot(col("qv"), col("qqv")).cast("double"), col("nrm"), col("qnrm")))
       .orderBy(col("rel").desc, col("vec_id").asc).limit(poolK)
       .select("vec_id", "qv", "nrm", "rel")
       .collect()
@@ -317,8 +317,7 @@ object Similarity {
     * candidates (q46/q47/q129) exactly as [[mutualTop1]] composes. */
   def rpDistortionOn(spark: SparkSession, dir: String,
       pairs: DataFrame): DataFrame = {
-    val rpArr = rpPlanes.map(p =>
-      s"quantized_dot(qv, array(${p.map(x => s"${x}L").mkString(", ")}))").mkString(", ")
+    val rpArr = rpPlanes.map(p => quantizedDot(col("qv"), typedLit(p.map(_.toLong).toSeq)))
     // well-formed vectors only: the corpus's degenerate fixtures (short
     // or null-element vectors) would otherwise split the engines —
     // quantized_dot nulls the whole dot, DuckDB's list_sum skips the
@@ -326,14 +325,14 @@ object Similarity {
     // anyway; they drop from both sides identically.
     val proj = quantized(spark, dir)
       .filter(expr(s"size(qv) = $Dim AND NOT exists(qv, x -> x IS NULL)"))
-      .select(col("vec_id"), expr(s"array($rpArr)").as("py"))
-      .withColumn("pn", expr("quantized_dot(py, py)"))
+      .select(col("vec_id"), array(rpArr: _*).as("py"))
+      .withColumn("pn", quantizedDot(col("py"), col("py")))
       .localCheckpoint() // joined twice (both pair sides)
     pairs
       .join(proj.select(col("vec_id").as("id_a"), col("py").as("pa"), col("pn").as("pna")), "id_a")
       .join(proj.select(col("vec_id").as("id_b"), col("py").as("pb"), col("pn").as("pnb")), "id_b")
       .withColumn("psim", cosine(
-        expr("CAST(quantized_dot(pa, pb) AS DOUBLE)"), col("pna"), col("pnb")))
+        quantizedDot(col("pa"), col("pb")).cast("double"), col("pna"), col("pnb")))
       .withColumn("err", abs(col("sim") - col("psim")))
       .select("id_a", "id_b", "sim", "psim", "err")
   }
@@ -493,18 +492,15 @@ object Similarity {
   /** Composed formulation of the key array — the spec-locked semantic
     * twin of `lsh_keys` (GraftFunctionsSpec asserts equality); the hot
     * path uses the fused expression. */
-  val lshKeysExpr: String = {
-    val keys = lshPlanes.zipWithIndex.map { case (tbl, t) =>
+  def lshKeysComposed: Column =
+    array(lshPlanes.zipWithIndex.map { case (tbl, t) =>
       val bits = tbl.map { plane =>
-        val arr = plane.mkString("array(", ",", ")")
-        s"CASE WHEN quantized_dot(qv, CAST($arr AS ARRAY<BIGINT>)) >= 0 THEN '1' ELSE '0' END"
-      }.mkString(", ")
-      s"concat('$t', ':', $bits)"
-    }.mkString(", ")
-    s"array($keys)"
-  }
+        when(quantizedDot(col("qv"), longs(plane.map(_.toLong))) >= 0, "1").otherwise("0")
+      }
+      concat(lit(t.toString) +: lit(":") +: bits: _*)
+    }: _*)
 
-  /** DuckDB twin of lshKeysExpr (one list literal; integer list_sum dot,
+  /** DuckDB twin of lshKeysComposed (one list literal; integer list_sum dot,
     * NOT list_dot_product — that returns DOUBLE). */
   val lshKeysSql: String = {
     val keys = lshPlanes.zipWithIndex.map { case (tbl, t) =>
@@ -537,7 +533,7 @@ object Similarity {
     // keys feed both join sides; checkpoint the small (id, key) frame so
     // the 16x4 hyperplane dots per row run once (hygiene unpins it later)
     val keyed = q.select(col("vec_id"),
-      explode(expr(s"lsh_keys(qv, $LshSeed, $LshTables, $LshBits, $Dim)")).as("bkey"))
+      explode(lshKeys(col("qv"), LshSeed, LshTables, LshBits, Dim)).as("bkey"))
       .localCheckpoint()
     // candidates as UNORDERED pairs (id_a < id_b): cosine is symmetric,
     // so each pair's 64-dim dot runs once and the cheap 3-column mirror
@@ -578,7 +574,7 @@ object Similarity {
       cap: Int = IvfMemberCap): DataFrame = {
     val q = quantized(spark, dir).select("vec_id", "qv", "nrm").localCheckpoint()
     val keyed = q.select(col("vec_id"),
-      explode(expr(s"lsh_keys(qv, $LshSeed, $LshTables, $LshBits, $Dim)")).as("bkey"))
+      explode(lshKeys(col("qv"), LshSeed, LshTables, LshBits, Dim)).as("bkey"))
       .localCheckpoint()
     val w = Window.partitionBy("bkey")
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
@@ -609,7 +605,7 @@ object Similarity {
       cap: Int = Int.MaxValue): DataFrame = {
     val q = quantized(spark, dir).select("vec_id", "qv", "nrm").localCheckpoint()
     val keyed = q.select(col("vec_id"),
-      explode(expr(s"lsh_keys(qv, $LshSeed, $LshTables, $LshBits, $Dim)")).as("bkey"))
+      explode(lshKeys(col("qv"), LshSeed, LshTables, LshBits, Dim)).as("bkey"))
     val side =
       if (cap == Int.MaxValue) keyed
       else {
@@ -688,7 +684,7 @@ object Similarity {
   private[graft] def assignCells(q: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
     val scored = q.crossJoin(broadcast(cents))
       .withColumn("csim", cosine(
-        expr("CAST(quantized_dot(qv, cqv) AS DOUBLE)"), col("nrm"), col("cnrm")))
+        quantizedDot(col("qv"), col("cqv")).cast("double"), col("nrm"), col("cnrm")))
     // The reduction carries NO vector payload: a first(qv) in the
     // aggregate would put the 64-long array in every buffer, demoting
     // the whole n·k stream to ObjectHashAggregate (array buffers can't
@@ -731,7 +727,7 @@ object Similarity {
   private def centroidFrame(spark: SparkSession,
       c: Seq[(Long, Seq[Long])]): DataFrame = {
     import spark.implicits._
-    c.toDF("cent_id", "cqv").withColumn("cnrm", expr("quantized_dot(cqv, cqv)"))
+    c.toDF("cent_id", "cqv").withColumn("cnrm", quantizedDot(col("cqv"), col("cqv")))
   }
 
   private def kmeansCentroidSeq(q: DataFrame, k: Int,
@@ -751,7 +747,7 @@ object Similarity {
       // assignCells), the vectors rejoined per vec for the mean step
       val assign = q.crossJoin(broadcast(centsDF(cents)))
         .withColumn("csim", cosine(
-          expr("CAST(quantized_dot(qv, cqv) AS DOUBLE)"), col("nrm"), col("cnrm")))
+          quantizedDot(col("qv"), col("cqv")).cast("double"), col("nrm"), col("cnrm")))
         .groupBy("vec_id")
         .agg(argmaxCell.as("top"))
         .select(col("vec_id"), expr("element_at(top, 1).id").as("cent_id"))
@@ -1074,7 +1070,6 @@ object Similarity {
     * it adds a per-partition sort, never an Exchange. */
   private[graft] def ivfScoredPairsOn(spark: SparkSession, ranked: DataFrame,
       nprobe: Int = IvfNprobe, memberCap: Int = Int.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val membersAll = ranked.filter(col("rn") === 1)
       .select(col("vec_id").as("id_b"), col("qv").as("qb"),
         col("nrm").as("nb"), col("cent_id").as("cell"))
@@ -1126,7 +1121,6 @@ object Similarity {
     * UNION's members per cell, which forces the sides together. */
   private[graft] def ivfScoredPairsSplit(spark: SparkSession, base: DataFrame,
       appends: DataFrame, nprobe: Int = IvfNprobe): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     def members(df: DataFrame) = df.filter(col("rn") === 1)
       .select(col("vec_id").as("id_b"), col("qv").as("qb"),
         col("nrm").as("nb"), col("cent_id").as("cell"))
@@ -1182,7 +1176,6 @@ object Similarity {
   private[graft] def ivfScoredPairsSplitCapped(spark: SparkSession,
       base: DataFrame, appends: DataFrame, nprobe: Int = IvfNprobe,
       cap: Int = IvfMemberCap): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     def members(df: DataFrame) = df.filter(col("rn") === 1)
       .select(col("vec_id").as("id_b"), col("qv").as("qb"),
         col("nrm").as("nb"), col("cent_id").as("cell"),
@@ -1655,7 +1648,7 @@ object Similarity {
         s"transform(sequence(0, ${PqSubspaces - 1}), " +
           s"s -> struct(s AS space, slice(qv, s * $PqSubDim + 1, $PqSubDim) AS sqv))")).as("sub"))
       .select(col("vec_id"), col("sub.space").as("space"), col("sub.sqv").as("qv"))
-      .withColumn("nrm", expr("quantized_dot(qv, qv)"))
+      .withColumn("nrm", quantizedDot(col("qv"), col("qv")))
 
   /** PQ reconstruction audit (q206): the codebook-quality signal for the
     * q66 IVF-PQ index, the sibling of q171's cell-occupancy audit — per
@@ -1682,12 +1675,12 @@ object Similarity {
     val pseq = pqCodebookCache.getOrElseUpdate((cacheKeyDir(dir), KmeansIters),
       kmeansCentroidsBySpace(subs, 0, PqSubCents, KmeansIters))
     val books = pseq.toDF("space", "cent_id", "cqv")
-      .withColumn("cnrm", expr("quantized_dot(cqv, cqv)"))
+      .withColumn("cnrm", quantizedDot(col("cqv"), col("cqv")))
     subs.join(broadcast(books), "space")
       .withColumn("csim", cosine(
-        expr("CAST(quantized_dot(qv, cqv) AS DOUBLE)"), col("nrm"), col("cnrm")))
+        quantizedDot(col("qv"), col("cqv")).cast("double"), col("nrm"), col("cnrm")))
       .withColumn("err", col("nrm") + col("cnrm") -
-        lit(2L) * expr("CAST(quantized_dot(qv, cqv) AS BIGINT)"))
+        lit(2L) * quantizedDot(col("qv"), col("cqv")).cast("bigint"))
       .groupBy("vec_id", "space")
       .agg(expr("max_by(err, struct(csim, -cent_id))").as("err"),
         first(col("nrm")).as("nrm"))
@@ -1768,13 +1761,11 @@ object Similarity {
         val cv = rows.sortBy(_._2).map(_._3).toSeq
         (l, cv, cv.map(x => x * x).sum)
       }.sortBy(_._1)
-    val d2Expr = cents.map { case (l, cv, nc) =>
-      val arr = cv.mkString("array(", ",", ")")
-      s"WHEN $l THEN nrm + ${nc}L - 2L * quantized_dot(qv, CAST($arr AS ARRAY<BIGINT>))"
-    }.mkString("CASE label ", " ", " END")
+    val d2 = byLabel(cents.map { case (l, cv, nc) =>
+      l -> (col("nrm") + lit(nc) - lit(2L) * quantizedDot(col("qv"), longs(cv)))
+    })
     val scatter = q
-      .withColumn("dist_micro",
-        expr(s"CAST(floor(1000000.0D * sqrt(CAST(($d2Expr) AS DOUBLE))) AS BIGINT)"))
+      .withColumn("dist_micro", floor(lit(1000000.0) * sqrt(d2.cast("double"))).cast("bigint"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),
         expr("CAST(sum(CAST(dist_micro AS DECIMAL(38,0))) div count(1) AS BIGINT)")
@@ -2060,7 +2051,7 @@ object Similarity {
     val spark = qsub.sparkSession
     import spark.implicits._
     def centsDF(c: Seq[(Int, Long, Seq[Long])]): DataFrame =
-      c.toDF("space", "cent_id", "cqv").withColumn("cnrm", expr("quantized_dot(cqv, cqv)"))
+      c.toDF("space", "cent_id", "cqv").withColumn("cnrm", quantizedDot(col("cqv"), col("cqv")))
     // per-space init cut: the coarse pseudo-space (-1) takes its DERIVED
     // cell count while the PQ subspaces keep the fixed codebook size
     // (codes must stay one small int per subspace at any corpus scale)
@@ -2078,7 +2069,7 @@ object Similarity {
       // (vec, space) for the mean step
       val assign = qsub.join(broadcast(centsDF(cents)), "space")
         .withColumn("csim", cosine(
-          expr("CAST(quantized_dot(qv, cqv) AS DOUBLE)"), col("nrm"), col("cnrm")))
+          quantizedDot(col("qv"), col("cqv")).cast("double"), col("nrm"), col("cnrm")))
         .groupBy("vec_id", "space")
         .agg(argmaxCell.as("top"))
         .select(col("vec_id"), col("space"), expr("element_at(top, 1).id").as("cent_id"))
@@ -2098,12 +2089,22 @@ object Similarity {
 
   private def spaceCentsDF(spark: SparkSession, c: Seq[(Int, Long, Seq[Long])]): DataFrame = {
     import spark.implicits._
-    c.toDF("space", "cent_id", "cqv").withColumn("cnrm", expr("quantized_dot(cqv, cqv)"))
+    c.toDF("space", "cent_id", "cqv").withColumn("cnrm", quantizedDot(col("cqv"), col("cqv")))
   }
 
-  /** SQL literal `CAST(array(...) AS ARRAY<BIGINT>)`. */
-  private def litLongs(xs: Seq[Long]): String =
-    xs.mkString("CAST(array(", "L, ", "L) AS ARRAY<BIGINT>)")
+  /** The ARRAY<BIGINT> literal of `xs`. */
+  private def longs(xs: Seq[Long]): Column = typedLit(xs).cast("array<bigint>")
+
+  /** `CASE label WHEN l THEN e ... END` over per-label columns. */
+  private def byLabel(es: Seq[(Int, Column)]): Column =
+    es.tail.foldLeft(when(col("label") === es.head._1, es.head._2)) {
+      case (c, (l, e)) => c.when(col("label") === l, e)
+    }
+
+  /** floor(1e6 · cosine(a, b)) as BIGINT, from the two norm columns. */
+  private def cosMicro(a: String, b: String, na: String, nb: String): Column =
+    floor(quantizedDot(col(a), col(b)).cast("double") /
+      (sqrt(col(na).cast("double")) * sqrt(col(nb).cast("double"))) * 1000000).cast("bigint")
 
   /** `memberCap` < MaxValue applies the q296 per-cell member cap to the
     * CODE side before the cell join (q297): the pair count — unchanged
@@ -2154,7 +2155,7 @@ object Similarity {
     val cents = {
       import spark.implicits._
       trained.collect { case (-1, cid, v) => (cid, v) }.sortBy(_._1)
-        .toDF("cent_id", "cqv").withColumn("cnrm", expr("quantized_dot(cqv, cqv)"))
+        .toDF("cent_id", "cqv").withColumn("cnrm", quantizedDot(col("cqv"), col("cqv")))
     }
     val ranked = assignCells(q, cents, IvfNprobe).localCheckpoint()
     val qsub = qall.filter(col("space") >= 0)
@@ -2169,18 +2170,18 @@ object Similarity {
     // rank window over every (vec, space, cent) triple (see argmaxCell)
     val codes = qsub.join(broadcast(subCents), "space")
       .withColumn("csim", cosine(
-        expr("CAST(quantized_dot(qv, cqv) AS DOUBLE)"), col("nrm"), col("cnrm")))
+        quantizedDot(col("qv"), col("cqv")).cast("double"), col("nrm"), col("cnrm")))
       .groupBy("vec_id", "space")
       .agg(argmaxCell.as("top"))
       .select(col("vec_id"), col("space"), expr("element_at(top, 1).id").as("cent_id"))
       .groupBy("vec_id")
       .agg(expr("transform(array_sort(collect_list(struct(space, cent_id))), t -> t.cent_id)").as("codes"))
     // reconstructed norm from codes alone: flat |c|² table lookup-summed
-    val cnrmFlat = litLongs(cbook.map { case (_, _, v) => v.map(x => x * x).sum })
+    val cnrmFlat = longs(cbook.map { case (_, _, v) => v.map(x => x * x).sum })
     val membersAll = ranked.filter(col("rn") === 1)
       .select(col("vec_id").as("id_b"), col("cent_id").as("cell"))
       .join(codes.withColumnRenamed("vec_id", "id_b"), "id_b")
-      .withColumn("nrec", expr(s"pq_adc_sum($cnrmFlat, codes)"))
+      .withColumn("nrec", pqAdcSum(cnrmFlat, col("codes")))
     val members =
       if (memberCap == Int.MaxValue) membersAll
       else capMembersByCell(membersAll, memberCap, "id_b")
@@ -2190,18 +2191,18 @@ object Similarity {
     // a re-dot of a reconstruction. Integer adds commute, so the score
     // equals quantized_dot(query, reconstruction) bit-for-bit and the
     // oracle keeps the reconstruction form.
-    val atabExpr = cbook.map { case (s, _, v) =>
-      s"quantized_dot(slice(qv, ${s * PqSubDim + 1}, $PqSubDim), ${litLongs(v)})"
-    }.mkString("array(", ", ", ")")
+    val atab = array(cbook.map { case (s, _, v) =>
+      quantizedDot(slice(col("qv"), s * PqSubDim + 1, PqSubDim), longs(v))
+    }: _*)
     val probes = ranked.filter(col("rn") <= IvfNprobe)
       .select(col("vec_id").as("id_a"), col("qv").as("qa"), col("nrm").as("na"),
-        col("cent_id").as("cell"), expr(atabExpr).as("atab"))
+        col("cent_id").as("cell"), atab.as("atab"))
     // ADC cut via the bounded aggregator: map-side ≤`candidates` pairs
     // per query — no 50M-row rank-window sort (see topkPairs)
     val approx = probes.join(members, Seq("cell"))
       .filter(col("id_a") =!= col("id_b"))
       .withColumn("sim", cosine(
-        expr("CAST(pq_adc_sum(atab, codes) AS DOUBLE)"), col("na"), col("nrec")))
+        pqAdcSum(col("atab"), col("codes")).cast("double"), col("na"), col("nrec")))
     val survivors = topkPairs(approx, candidates)
       .select(col("vec_id").as("id_a"), col("neighbor_id").as("id_b"))
     // exact re-rank of the ≤`candidates` survivors only
@@ -2300,11 +2301,11 @@ object Similarity {
       .select(col("label"), col("pos"), expr("s DIV cnt").as("m"))
       .groupBy("label")
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), t -> t.m)").as("cv"))
-      .withColumn("nc", expr("quantized_dot(cv, cv)"))
+      .withColumn("nc", quantizedDot(col("cv"), col("cv")))
     val w = Window.partitionBy("label").orderBy(col("sim").asc, col("vec_id").asc)
     q.join(broadcast(cent), "label")
       .withColumn("sim", cosine(
-        expr("CAST(quantized_dot(qv, cv) AS DOUBLE)"), col("nrm"), col("nc")))
+        quantizedDot(col("qv"), col("cv")).cast("double"), col("nrm"), col("nc")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("label"), col("rank"), col("vec_id"), col("sim"))
@@ -2401,10 +2402,10 @@ object Similarity {
         (l, cv, cv.map(x => x * x).sum)
       }.sortBy(_._1)
     val structs = cents.map { case (l, cv, nc) =>
-      val arr = cv.mkString("array(", ",", ")")
-      s"struct(nrm + ${nc}L - 2L * quantized_dot(qv, CAST($arr AS ARRAY<BIGINT>)) AS d2, $l AS l)"
-    }.mkString("array(", ", ", ")")
-    val conf = q.select(col("label"), expr(s"array_min($structs).l").as("pred_label"))
+      struct((col("nrm") + lit(nc) - lit(2L) * quantizedDot(col("qv"), longs(cv))).as("d2"),
+        lit(l).as("l"))
+    }
+    val conf = q.select(col("label"), array_min(array(structs: _*)).getField("l").as("pred_label"))
       .groupBy("label", "pred_label").agg(count(lit(1)).as("n"))
       .localCheckpoint() // labels²-bounded; feeds totals AND the card
     val totals = conf.groupBy("label").agg(sum("n").as("total"))
@@ -2466,17 +2467,13 @@ object Similarity {
         (l, cv, cv.map(x => x * x).sum)
       }.sortBy(_._1)
     val simFor = cents.map { case (l, cv, nc) =>
-      val arr = cv.mkString("array(", ",", ")")
-      l -> (s"coalesce(try_divide(CAST(quantized_dot(qv, CAST($arr AS ARRAY<BIGINT>)) AS DOUBLE), " +
-        s"sqrt(CAST(nrm AS DOUBLE)) * sqrt(CAST(${nc}L AS DOUBLE))), CAST('-Infinity' AS DOUBLE))")
+      l -> cosine(quantizedDot(col("qv"), longs(cv)).cast("double"), col("nrm"), lit(nc))
     }
-    val ownExpr = simFor.map { case (l, e) => s"WHEN $l THEN $e" }
-      .mkString("CASE label ", " ", " END")
-    val otherExpr = simFor.map { case (l, e) =>
-      s"CASE WHEN label = $l THEN CAST('-Infinity' AS DOUBLE) ELSE $e END"
-    }.mkString("greatest(", ", ", ")")
+    val other = greatest(simFor.map { case (l, e) =>
+      when(col("label") === l, lit(Double.NegativeInfinity)).otherwise(e)
+    }: _*)
     silhouetteRollup(
-      q.select(col("label"), expr(ownExpr).as("sim_own"), expr(otherExpr).as("sim_other")))
+      q.select(col("label"), byLabel(simFor).as("sim_own"), other.as("sim_other")))
   }
 
   /** The high-cardinality form: the centroid table collapses to ONE row
@@ -2495,14 +2492,11 @@ object Similarity {
       .select(col("label").as("l"), col("cv"),
         expr("aggregate(cv, 0L, (a, x) -> a + x * x)").as("nc"))
       .agg(expr("array_sort(array_agg(struct(l, cv, nc)))").as("cents")) // 1 row
-    val simLambda =
-      "transform(cents, c -> named_struct('l', c.l, 'sim', " +
-        "coalesce(try_divide(CAST(quantized_dot(qv, c.cv) AS DOUBLE), " +
-        "sqrt(CAST(nrm AS DOUBLE)) * sqrt(CAST(c.nc AS DOUBLE))), " +
-        "CAST('-Infinity' AS DOUBLE))))"
+    val sims = transform(col("cents"), c => struct(c("l").as("l"),
+      cosine(quantizedDot(col("qv"), c("cv")).cast("double"), col("nrm"), c("nc")).as("sim")))
     silhouetteRollup(
       q.crossJoin(broadcast(centArr))
-        .withColumn("sims", expr(simLambda))
+        .withColumn("sims", sims)
         .select(col("label"),
           expr("aggregate(sims, CAST('-Infinity' AS DOUBLE), " +
             "(a, s) -> CASE WHEN s.l = label THEN greatest(a, s.sim) ELSE a END)").as("sim_own"),
@@ -3125,7 +3119,7 @@ object Similarity {
     val q = quantized(spark, dir)
       .withColumn("qv2", expr(
         "transform(qv, (x, i) -> x + CASE WHEN (i + 1) % 4 = 1 THEN CAST((3 + label) * 1000 AS BIGINT) ELSE CAST(0 AS BIGINT) END)"))
-      .withColumn("nrm2", expr("quantized_dot(qv2, qv2)"))
+      .withColumn("nrm2", quantizedDot(col("qv2"), col("qv2")))
       .localCheckpoint() // feeds the dim rollup AND the norm rollup
     val disp = q
       .select(col("label"), posexplode(arrays_zip(col("qv"), col("qv2"))))
@@ -3204,7 +3198,7 @@ object Similarity {
     val home = assignCells(q, cents, 1)
       .join(broadcast(cents), "cent_id")
       .withColumn("csim", cosine(
-        expr("CAST(quantized_dot(qv, cqv) AS DOUBLE)"), col("nrm"), col("cnrm")))
+        quantizedDot(col("qv"), col("cqv")).cast("double"), col("nrm"), col("cnrm")))
       .select("cent_id", "vec_id", "qv", "nrm", "csim")
     val toks = t(spark, dir, "documents")
       .select(col("doc_id").as("vec_id"),
@@ -3220,9 +3214,7 @@ object Similarity {
       .withColumn("prev_qv", lag("qv", 1).over(w))
       .withColumn("prev_nrm", lag("nrm", 1).over(w))
       .withColumn("adj_cos_micro", when(col("prev_qv").isNotNull,
-        expr("""CAST(floor(CAST(quantized_dot(qv, prev_qv) AS DOUBLE)
-                 / (sqrt(CAST(nrm AS DOUBLE)) * sqrt(CAST(prev_nrm AS DOUBLE)))
-                 * 1000000) AS BIGINT)""")))
+        cosMicro("qv", "prev_qv", "nrm", "prev_nrm")))
       .groupBy("cent_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
         (max(col("bin")) + 1).as("n_bins"),
@@ -3295,11 +3287,8 @@ object Similarity {
         """CASE WHEN vec_id % 37 = 5 THEN transform(qv, x -> -x)
              ELSE transform(qv, (x, i) -> x + CASE WHEN (i + 1) % 4 = 1
                THEN CAST((3 + label) * 1000 AS BIGINT) ELSE 0L END) END"""))
-      .withColumn("nrm2", expr("quantized_dot(qv2, qv2)"))
-      .withColumn("align_micro", expr(
-        """CAST(floor(CAST(quantized_dot(qv, qv2) AS DOUBLE)
-             / (sqrt(CAST(nrm AS DOUBLE)) * sqrt(CAST(nrm2 AS DOUBLE)))
-             * 1000000) AS BIGINT)"""))
+      .withColumn("nrm2", quantizedDot(col("qv2"), col("qv2")))
+      .withColumn("align_micro", cosMicro("qv", "qv2", "nrm", "nrm2"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_pairs"),
         sum("align_micro").as("align_sum"),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.rollingHash
 import graft.queries.QueryDef
 import graft.queries.QueryDef._
 
@@ -211,10 +212,8 @@ object TextStats {
   /** Polynomial rolling-hash fingerprint over characters, mod 1e9+7 —
     * exact integer fold, identical in any engine. Runs the codegen'd
     * [[graft.functions.RollingHash]] (one O(n) pass per document). */
-  def fingerprintRolling(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    docs.select(col("doc_id"), expr("rolling_hash(text)").as("fp"))
-  }
+  def fingerprintRolling(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), rollingHash(col("text")).as("fp"))
 
   /** Composed-built-ins formulation — the semantic spec for RollingHash
     * (equality locked by GraftFunctionsSpec). O(n²) per document: each

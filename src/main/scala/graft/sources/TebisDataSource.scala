@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -56,7 +57,7 @@ class TebisDataSource extends TableProvider with DataSourceRegister {
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new TebisTable(TebisDataSource.paths(properties))
+    new TebisTable(TebisDataSource.paths(properties), TebisDataSource.HadoopConf.active())
 }
 
 object TebisDataSource {
@@ -72,6 +73,24 @@ object TebisDataSource {
     raw.filter(_.nonEmpty)
   }
 
+  /** The session's Hadoop configuration (`spark.hadoop.*` settings and
+    * the context's `hadoopConfiguration`: credentials, `fs.<scheme>.impl`)
+    * as plain entries. `Configuration` is not java-serializable, so each
+    * task rebuilds it from these, the way `LiveStream.start` does. */
+  private[graft] final class HadoopConf(entries: Array[(String, String)]) extends Serializable {
+    @transient lazy val value: Configuration = {
+      val conf = new Configuration(false)
+      entries.foreach { case (k, v) => conf.set(k, v) }
+      conf
+    }
+  }
+
+  private[graft] object HadoopConf {
+    def active(): HadoopConf = new HadoopConf(
+      SparkSession.active.sessionState.newHadoopConf().iterator().asScala
+        .map(e => e.getKey -> e.getValue).toArray)
+  }
+
   /** (kept, total) from the most recent runtime-filtered partition
     * planning — observability for specs and operators. */
   val lastPlanned = new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
@@ -80,10 +99,10 @@ object TebisDataSource {
     * (driver-side byte read to the first '\n'), parsed with the same
     * header-cell splitter as the full parser. Malformed headers yield
     * Nil — callers treat that as "cannot prove absence, keep". */
-  private[graft] def headerIds(path: String): Seq[String] = {
+  private[graft] def headerIds(path: String, conf: Configuration): Seq[String] = {
     try {
       val p = new Path(path)
-      val fs = p.getFileSystem(new Configuration())
+      val fs = p.getFileSystem(conf)
       val raw = fs.open(p)
       // buffered: one block read per header, not one FS round-trip per
       // byte — this runs on the DRIVER once per candidate file during
@@ -105,8 +124,7 @@ object TebisDataSource {
 
   /** Driver-side listing: each root is a file or a directory of `*.csv`.
     * Cost is one FS listing per root — no content is read on the driver. */
-  private[sources] def listFiles(roots: Seq[String]): Seq[String] = {
-    val conf = new Configuration()
+  private[sources] def listFiles(roots: Seq[String], conf: Configuration): Seq[String] =
     roots.flatMap { r =>
       val p = new Path(r)
       val fs = p.getFileSystem(conf)
@@ -117,16 +135,16 @@ object TebisDataSource {
           .map(_.getPath.toString)
       else Seq(st.getPath.toString)
     }.sorted
-  }
 }
 
-private class TebisTable(roots: Seq[String]) extends Table with SupportsRead {
+private class TebisTable(roots: Seq[String], conf: TebisDataSource.HadoopConf)
+    extends Table with SupportsRead {
   override def name(): String = s"tebis(${roots.mkString(",")})"
   override def schema(): StructType = TebisDataSource.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TebisScanBuilder(roots)
+    new TebisScanBuilder(roots, conf)
 }
 
 /** One pushed aggregate function over the long-form schema. Partial
@@ -147,7 +165,7 @@ private case class TebisPushedAgg(groupByExternalId: Boolean, funcs: Seq[TebisAg
   }
 }
 
-private class TebisScanBuilder(roots: Seq[String])
+private class TebisScanBuilder(roots: Seq[String], conf: TebisDataSource.HadoopConf)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates {
 
@@ -219,13 +237,14 @@ private class TebisScanBuilder(roots: Seq[String])
   }
 
   override def build(): Scan = agg match {
-    case Some(a) => new TebisAggScan(roots, keepIds, a)
-    case None => new TebisScan(roots, required, keepIds)
+    case Some(a) => new TebisAggScan(roots, keepIds, a, conf)
+    case None => new TebisScan(roots, required, keepIds, conf)
   }
 }
 
 private[graft] class TebisScan(roots: Seq[String], required: StructType,
-    keepIds: Option[Set[String]])
+    keepIds: Option[Set[String]],
+    conf: TebisDataSource.HadoopConf = TebisDataSource.HadoopConf.active())
     extends Scan with Batch with SupportsRuntimeFiltering {
   /** Runtime (join-delivered) externalIds, intersected into [[eff]].
     * Populated by Spark's dynamic pruning calling [[filter]] after the
@@ -264,11 +283,11 @@ private[graft] class TebisScan(roots: Seq[String], required: StructType,
     * handful of ids opens only the matching files. A file whose header
     * fails to parse is conservatively KEPT — the full parser decides. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = TebisDataSource.listFiles(roots)
+    val files = TebisDataSource.listFiles(roots, conf.value)
     val kept = eff match {
       case None => files
       case Some(ids) => files.filter { f =>
-        val hdr = TebisDataSource.headerIds(f)
+        val hdr = TebisDataSource.headerIds(f, conf.value)
         hdr.isEmpty || hdr.exists(ids.contains)
       }
     }
@@ -277,7 +296,7 @@ private[graft] class TebisScan(roots: Seq[String], required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new TebisReaderFactory(required.fieldNames, eff)
+    new TebisReaderFactory(required.fieldNames, eff, conf)
 }
 
 private case class TebisInputPartition(path: String) extends InputPartition
@@ -286,7 +305,7 @@ private case class TebisInputPartition(path: String) extends InputPartition
   * one column per aggregate, matching V2ScanRelationPushDown's
   * positional contract. */
 private class TebisAggScan(roots: Seq[String], keepIds: Option[Set[String]],
-    agg: TebisPushedAgg) extends Scan with Batch {
+    agg: TebisPushedAgg, conf: TebisDataSource.HadoopConf) extends Scan with Batch {
   override def readSchema(): StructType = {
     import org.apache.spark.sql.types._
     val group = if (agg.groupByExternalId)
@@ -307,23 +326,23 @@ private class TebisAggScan(roots: Seq[String], keepIds: Option[Set[String]],
     s"tebis ${agg.describe}$f"
   }
   override def planInputPartitions(): Array[InputPartition] =
-    TebisDataSource.listFiles(roots).map(TebisInputPartition.apply).toArray
+    TebisDataSource.listFiles(roots, conf.value).map(TebisInputPartition.apply).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new TebisAggReaderFactory(keepIds, agg)
+    new TebisAggReaderFactory(keepIds, agg, conf)
 }
 
-private class TebisAggReaderFactory(keepIds: Option[Set[String]], agg: TebisPushedAgg)
-    extends PartitionReaderFactory {
+private class TebisAggReaderFactory(keepIds: Option[Set[String]], agg: TebisPushedAgg,
+    conf: TebisDataSource.HadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TebisAggPartitionReader(
-      partition.asInstanceOf[TebisInputPartition].path, keepIds, agg)
+      partition.asInstanceOf[TebisInputPartition].path, keepIds, agg, conf.value)
 }
 
 /** Per-task aggregating reader: parse ONE file, fold its surviving
   * datapoints into per-group (or global) partial aggregates, emit
   * group-cardinality rows. */
 private class TebisAggPartitionReader(
-    path: String, keepIds: Option[Set[String]], agg: TebisPushedAgg)
+    path: String, keepIds: Option[Set[String]], agg: TebisPushedAgg, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private final class Acc {
@@ -334,7 +353,7 @@ private class TebisAggPartitionReader(
 
   private val rows: Iterator[InternalRow] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     val in = fs.open(p)
     val bytes = try in.readAllBytes() finally in.close()
     val file = TebisCsv.parseContent(path, new String(bytes, Charset.forName(TebisCsv.Encoding)))
@@ -378,22 +397,23 @@ private class TebisAggPartitionReader(
   override def close(): Unit = ()
 }
 
-private class TebisReaderFactory(fields: Array[String], keepIds: Option[Set[String]])
-    extends PartitionReaderFactory {
+private class TebisReaderFactory(fields: Array[String], keepIds: Option[Set[String]],
+    conf: TebisDataSource.HadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new TebisPartitionReader(partition.asInstanceOf[TebisInputPartition].path, fields, keepIds)
+    new TebisPartitionReader(partition.asInstanceOf[TebisInputPartition].path, fields, keepIds,
+      conf.value)
 }
 
 /** Per-task reader: materialize + parse ONE file (TEBIS files are
   * micro-batch-sized — same per-process bound as the reference), then
   * stream its surviving datapoints as rows of the projected schema. */
 private class TebisPartitionReader(
-    path: String, fields: Array[String], keepIds: Option[Set[String]])
+    path: String, fields: Array[String], keepIds: Option[Set[String]], conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[InternalRow] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     val in = fs.open(p)
     val bytes = try in.readAllBytes() finally in.close()
     // Charset per task: java.nio.charset.Charset is not Serializable

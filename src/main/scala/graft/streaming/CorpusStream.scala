@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.MetricsSink
+import graft.functions.GraftFunctions.{mightContain, minhashBands, sortedIntersectCount}
 import graft.ops.{Cleaning, Corpus, Dedup, TextStats}
 
 /** Incremental corpus ingestion — the streaming twin of the batch
@@ -92,12 +93,10 @@ object CorpusStream {
     * the right asymmetry for admission, where a false drop costs one
     * document and a false admit costs an eval leak. */
   def contaminationGuard(docs: DataFrame, bloom: Array[Byte]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val b64 = java.util.Base64.getEncoder.encodeToString(bloom)
     docs.withColumn("toks", split(col("text"), " "))
-      .withColumn("contaminated", expr(
-        s"""exists(${Dedup.shinglesExpr},
-            g -> might_contain(unbase64('$b64'), xxhash64(g)))"""))
+      .withColumn("contaminated", exists(expr(Dedup.shinglesExpr),
+        g => mightContain(unbase64(lit(b64)), xxhash64(g))))
       .drop("toks")
   }
 
@@ -180,7 +179,6 @@ object CorpusStream {
     trigger.foreach(writer.trigger)
     writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      graft.functions.GraftFunctions.register(spark)
       StreamState.bindLineage(spark, stateDir, checkpointDir)
       StreamState.bindLineage(spark, outDir, checkpointDir)
       if (batchId < math.max(StreamState.horizon(spark, s"$stateDir/bands"),
@@ -211,7 +209,7 @@ object CorpusStream {
           .withColumn("sorted", sort_array(col("grams")))
           .withColumn("n", size(col("grams")).cast("long")).localCheckpoint()
         val bands = sh.select(col("doc_id"), explode(
-          expr(s"minhash_bands(grams, ${Dedup.NumHashes}, ${Dedup.Rows})")).as("bkey"))
+          minhashBands(col("grams"), Dedup.NumHashes, Dedup.Rows)).as("bkey"))
           .localCheckpoint()
         // Match on BOTH state tables together: a crash between the two
         // state writes of the very first batch leaves bands/ on disk with
@@ -225,7 +223,7 @@ object CorpusStream {
               .select("doc_id", "rep_id").distinct()
               .join(sh.select(col("doc_id"), col("sorted").as("ga"), col("n").as("na")), "doc_id")
               .join(stGrams.select("rep_id", "gb", "nb"), "rep_id")
-              .withColumn("inter", expr("sorted_intersect_count(ga, gb)"))
+              .withColumn("inter", sortedIntersectCount(col("ga"), col("gb")))
               .filter(col("inter").cast("double") /
                 (col("na") + col("nb") - col("inter")) >= threshold)
               .select("doc_id").distinct()

@@ -40,7 +40,6 @@ object IndexStream {
     trigger.foreach(writer.trigger)
     writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      graft.functions.GraftFunctions.register(spark)
       StreamState.bindLineage(spark, s"$indexDir/appends", checkpointDir)
       if (batchId >= StreamState.horizon(spark, s"$indexDir/appends")) {
         // refuse a torn index (r13 — ADVICE r12): assigning this batch

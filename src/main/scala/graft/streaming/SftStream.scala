@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Conversations
+import graft.functions.GraftFunctions.{anyWordGramInBloom, bloomFilterAgg}
 
 /** SFT conversational admission — the streaming twin of the q251-family
   * batch pipeline, in the [[CorpusStream]] discipline: conversations
@@ -35,10 +36,9 @@ object SftStream {
   def benchBloomBytes(spark: SparkSession,
       passages: Seq[String] = Conversations.BenchPassages,
       numBits: Long = 1L << 16): Array[Byte] = {
-    graft.functions.GraftFunctions.register(spark)
     spark.range(1)
       .select(explode(array(passages.map(lit): _*)).as("p"))
-      .agg(expr(s"bloom_filter_agg(xxhash64(p), ${passages.size}L, ${numBits}L)").as("bf"))
+      .agg(bloomFilterAgg(xxhash64(col("p")), passages.size.toLong, numBits).as("bf"))
       .head().getAs[Array[Byte]](0)
   }
 
@@ -62,13 +62,12 @@ object SftStream {
     * unchanged. */
   def gateTurns(turns: DataFrame, templates: Seq[String],
       bloom: Array[Byte], w: Int = Conversations.BenchSpanWords): DataFrame = {
-    graft.functions.GraftFunctions.register(turns.sparkSession)
     val b64 = java.util.Base64.getEncoder.encodeToString(bloom)
     val stripped =
       if (templates.isEmpty) turns
       else turns.filter(!col("text").isInCollection(templates))
     stripped.filter(!(col("role") === "assistant" &&
-      expr(s"any_word_gram_in_bloom(text, $w, '$b64')")))
+      anyWordGramInBloom(col("text"), w, b64)))
   }
 
   /** Batch twin of the full admission — parse, gate, then per (role,

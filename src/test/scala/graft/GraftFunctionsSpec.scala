@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +15,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("quantized_dot == aggregate(zip_with(...)) on embeddings") {
-    GraftFunctions.register(spark)
     val q = t(spark, dir, "embeddings")
       .select(col("vec_id"), expr(graft.ops.Similarity.quantExpr).as("qv"))
       .withColumn("fast", expr("quantized_dot(qv, qv)"))
@@ -24,7 +24,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("word_shingles == array_distinct(transform(...)) lambda formulation") {
-    GraftFunctions.register(spark)
     val docs = t(spark, dir, "documents")
     val fast = Dedup.shingled(docs).orderBy("doc_id").collect().map(_.getSeq[String](1))
     val slow = Dedup.shingledViaLambdas(docs).orderBy("doc_id").collect().map(_.getSeq[String](1))
@@ -33,7 +32,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("word_gram_md5 == transform(sequence, md5(concat_ws(slice))) lambda twin") {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, expr, split}
     val g = graft.ops.Chunking.QueryGramWords
     val toks = t(spark, dir, "documents")
@@ -51,7 +49,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
 
   test("any_word_gram_in_bloom == exists(transform(sequence, " +
       "xxhash64(concat_ws(slice)))) might_contain twin") {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, expr}
     val w = graft.ops.Conversations.BenchSpanWords
     val bloom = graft.streaming.SftStream.benchBloomBytes(spark)
@@ -82,7 +79,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("quantized_dot null semantics match the zip_with spec") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Seq[java.lang.Long](1L, 2L), Seq[java.lang.Long](3L, 4L)),    // 11
@@ -97,7 +93,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("rolling_hash == aggregate/substr lambda formulation") {
-    GraftFunctions.register(spark)
     val docs = t(spark, dir, "documents")
     val fast = graft.ops.TextStats.fingerprintRolling(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -117,7 +112,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("minhash_sig == transform/array_min lambda formulation") {
-    GraftFunctions.register(spark)
     val sh = Dedup.shingled(t(spark, dir, "documents").limit(50))
     val cmp = sh
       .withColumn("fast", expr(s"minhash_sig(grams, ${Dedup.NumHashes})"))
@@ -126,7 +120,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("minhash_bands == explicit sig + band-key lambda formulation") {
-    GraftFunctions.register(spark)
     val sh = Dedup.shingled(t(spark, dir, "documents").limit(50))
     val cmp = sh
       .withColumn("fast", expr(s"minhash_bands(grams, ${Dedup.NumHashes}, ${Dedup.Rows})"))
@@ -136,7 +129,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("winnow_select == transform/aggregate lambda formulation (as a SET)") {
-    GraftFunctions.register(spark)
     val base = t(spark, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= Dedup.WinK)
@@ -150,7 +142,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("sorted_intersect_count == size(array_intersect) on sorted distinct arrays") {
-    GraftFunctions.register(spark)
     val sh = Dedup.shingled(t(spark, dir, "documents").limit(80))
       .withColumn("sorted", sort_array(col("grams")))
     val pairs = sh.as("a").crossJoin(sh.as("b")).limit(2000)
@@ -168,18 +159,16 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("lsh_keys == composed per-plane quantized_dot formulation") {
-    GraftFunctions.register(spark)
     val S = graft.ops.Similarity
     val q = t(spark, dir, "embeddings")
       .select(col("vec_id"), expr(S.quantExpr).as("qv"))
       .withColumn("fast", expr(s"lsh_keys(qv, ${S.LshSeed}, ${S.LshTables}, ${S.LshBits}, ${S.Dim})"))
-      .withColumn("slow", expr(S.lshKeysExpr))
+      .withColumn("slow", S.lshKeysComposed)
     assert(q.filter(not(col("fast") <=> col("slow"))).count() == 0)
     assert(q.count() > 0)
   }
 
   test("lsh_keys malformed-vector parity: wrong length, null elements, NULL vector") {
-    GraftFunctions.register(spark)
     val S = graft.ops.Similarity
     import spark.implicits._
     // wrong-length vector, a vector with a null slot, and a fully-NULL
@@ -194,14 +183,13 @@ class GraftFunctionsSpec extends AnyFunSuite {
       spark.range(1).select(lit(id).as("vec_id"), expr(arr).cast("array<bigint>").as("qv"))
     }.reduce(_ unionByName _)
       .withColumn("fast", expr(s"lsh_keys(qv, ${S.LshSeed}, ${S.LshTables}, ${S.LshBits}, ${S.Dim})"))
-      .withColumn("slow", expr(S.lshKeysExpr))
+      .withColumn("slow", S.lshKeysComposed)
     assert(q.filter(not(col("fast") <=> col("slow"))).count() == 0)
     val ks = q.select("fast").collect().flatMap(_.getSeq[String](0))
     assert(ks.forall(_.endsWith(":" + "0" * S.LshBits)))
   }
 
   test("pq_adc_sum == aggregate-lambda lookup formulation; bounds -> NULL") {
-    GraftFunctions.register(spark)
     // flat = 2 spaces x 3 entries; codes pick one entry per space
     val df = spark.range(1).selectExpr(
       "CAST(array(10, 20, 30, 40, 50, 60) AS ARRAY<BIGINT>) AS flat",
@@ -219,5 +207,57 @@ class GraftFunctionsSpec extends AnyFunSuite {
       "pq_adc_sum(CAST(array(1, 2, 3) AS ARRAY<BIGINT>), CAST(array(0, 1) AS ARRAY<BIGINT>)) AS ragged")
       .collect()(0)
     assert(bad.isNullAt(0) && bad.isNullAt(1))
+  }
+
+  test("SQL builders reject a bad integer argument at analysis, naming the function") {
+    val from = "FROM VALUES (array('a b c', 'b c d'), 7) AS t(g, id)"
+    Seq(
+      "minhash_sig(g, 32L)" -> "minhash_sig",
+      "minhash_sig(g, id)" -> "minhash_sig",
+      "minhash_bands(g, 32, 0)" -> "minhash_bands").foreach { case (call, fn) =>
+      // spark.sql analyzes eagerly and nothing here runs an action: the
+      // failure comes from analysis, before any task
+      val e = intercept[Exception](spark.sql(s"SELECT $call $from"))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).toSeq
+      assert(msgs.exists(_.contains(fn)), s"$call: ${msgs.mkString(" / ")}")
+    }
+  }
+
+  test("register makes every builder name resolve on a session without them, once") {
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val b64 = java.util.Base64.getEncoder.encodeToString(
+      graft.streaming.SftStream.benchBloomBytes(spark))
+    val calls = Map(
+      "quantized_dot" -> "quantized_dot(array(1L, 2L), array(3L, 4L))",
+      "minhash_sig" -> "minhash_sig(array('a b c'), 4)",
+      "simhash32" -> "simhash32(array('a', 'b'))",
+      "sorted_intersect_count" -> "sorted_intersect_count(array('a', 'b'), array('b'))",
+      "word_shingles" -> "word_shingles(array('a', 'b', 'c'), 3)",
+      "word_gram_md5" -> "word_gram_md5(array('a', 'b'), 2)",
+      "any_word_gram_in_bloom" -> s"any_word_gram_in_bloom('a b c', 2, '$b64')",
+      "hamming_str" -> "hamming_str('0101', '0011')",
+      "minhash_bands" -> "minhash_bands(array('a b c'), 4, 2)",
+      "lsh_keys" -> "lsh_keys(array(1L, -2L), 42, 2, 3, 2)",
+      "pq_adc_sum" -> "pq_adc_sum(array(1L, 2L, 3L, 4L), array(1L, 0L))",
+      "rolling_hash" -> "rolling_hash('ab')",
+      "space_token_count" -> "space_token_count('a b')",
+      "md5_prefix_long" -> "md5_prefix_long('a', 8)",
+      "winnow_select" -> "winnow_select(array('a', 'b', 'c'), 2, 2, 2000000000L)",
+      "bloom_filter_agg" -> "bloom_filter_agg(xxhash64(id), 10L, 64L)",
+      "might_contain" -> ("might_contain((SELECT bloom_filter_agg(xxhash64(id), 10L, 64L) " +
+        "FROM range(3)), xxhash64(id))"))
+    val names = GraftFunctions.builders.map(_._1)
+    assert(calls.keySet == names.toSet, "one call per builder name")
+    def run(name: String) = s.sql(s"SELECT ${calls(name)} FROM range(3)").collect()
+    names.foreach(n => reg.dropFunction(FunctionIdentifier(n)))
+    names.foreach(n => intercept[Exception](run(n)))
+    GraftFunctions.register(s)
+    names.foreach(n => assert(run(n).nonEmpty, n))
+    val before = names.map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+    GraftFunctions.register(s)
+    val after = names.map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+    assert(before.zip(after).forall { case (x, y) => x eq y }, "a second register replaced a builder")
   }
 }

@@ -1,19 +1,26 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Dedup, Pipeline, Similarity}
+import graft.functions.GraftFunctions
+import graft.ops.{Chunking, Corpus, Dedup, Pipeline, Similarity, TextStats}
+import graft.streaming.{CorpusStream, SftStream}
 import graft.queries.{QueryDef, Tuning}
 
 /** Session hygiene. Pinned-block lifecycle: operators that localCheckpoint
   * intermediates (Dedup q41/q42) leave pinned RDDs after their action —
   * the harness (Bench/Verify) must release them between queries, and
   * does. Session conf: operators leave it alone, queries change exactly
-  * their declared [[Tuning]], and `SessionHygiene.clear` undoes it. */
+  * their declared [[Tuning]], and `SessionHygiene.clear` undoes it.
+  * Function registry and temp views: operators build custom expressions
+  * as typed Columns, so they register nothing and leave no view. */
 class HygieneSpec extends AnyFunSuite {
   private val spark = SparkSpec.spark
   private val sf = "/root/testdata/sf0.001"
@@ -133,5 +140,67 @@ class HygieneSpec extends AnyFunSuite {
     val plan = joined.queryExecution.executedPlan
       .asInstanceOf[AdaptiveSparkPlanExec].executedPlan.toString
     assert(plan.contains("ShuffledHashJoin") && !plan.contains("SortMergeJoin"), plan)
+  }
+
+  test("operators leave the function registry and temp views as they found them") {
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val names = GraftFunctions.builders.map(_._1)
+    names.foreach(n => reg.dropFunction(FunctionIdentifier(n)))
+    val views = s.catalog.listTables().collect().map(_.name).toSet
+    val docs = QueryDef.t(s, sf, "documents")
+    noop(Dedup.ngramJaccardPairs(docs, 0.8))
+    noop(Dedup.minhashLshPairs(docs, 0.8))
+    noop(Dedup.decontaminate(docs, 0.8))
+    noop(Dedup.bloomDecontaminate(s, sf))
+    noop(Dedup.cdcChunks(docs))
+    noop(Dedup.winnowing(docs))
+    noop(Dedup.simhashPairs(docs, 3))
+    noop(Dedup.repCalibrationPairs(docs))
+    noop(Similarity.knnLsh(s, sf, 3))
+    noop(Similarity.knnIvfPq(s, sf, 3))
+    noop(Similarity.labelConfusion(s, sf))
+    noop(Similarity.daviesBouldin(s, sf))
+    noop(Similarity.crossModalAlignment(s, sf))
+    noop(Pipeline.cleanTrainStages(docs)._3)
+    noop(Chunking.retrievalContainment(docs))
+    noop(TextStats.fingerprintRolling(docs))
+    noop(Corpus.hybridSearch(s, sf))
+    val bloom = SftStream.benchBloomBytes(s)
+    noop(SftStream.gateTurns(
+      s.createDataFrame(Seq(("assistant", "a b c d e f g h"))).toDF("role", "text"),
+      Nil, bloom))
+    noop(CorpusStream.contaminationGuard(docs, bloom))
+    names.foreach(n => assert(!reg.functionExists(FunctionIdentifier(n)), s"$n was registered"))
+    assert(s.catalog.listTables().collect().map(_.name).toSet == views, "a temp view was left")
+    SessionHygiene.clear(s)
+  }
+
+  test("operators reach custom expressions only through the typed constructors") {
+    // The SQL names exist for SQL users; an operator that spells one in a
+    // string only resolves after something registered it. Allowed: the
+    // expressions' own package, the extensions, and the reference twin
+    // WinnowSpec checks winnow_select against.
+    val call = ("\\b(" + GraftFunctions.builders.map(_._1).mkString("|") + ")\\(").r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .filterNot(f => f.toString.contains("graft/functions/") ||
+        f.toString.endsWith("GraftExtensions.scala"))
+    assert(files.size > 50, s"read ${files.size} sources under $root")
+    val bad = files.flatMap { f =>
+      var inReference = false
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (line, i) =>
+        if (line.contains("val winnowSelLambdaExpr")) inReference = true
+        val hit = !inReference && (line.contains("GraftFunctions.register(") || {
+          val code = line.trim
+          !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*") &&
+            call.findFirstIn(line).isDefined
+        })
+        if (inReference && line == "  }") inReference = false
+        if (hit) Some(s"$f:${i + 1}: ${line.trim}") else None
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 }

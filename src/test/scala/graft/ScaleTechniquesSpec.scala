@@ -111,7 +111,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     // otherwise the "100 TB shape" scaladoc is fiction), and pruning is
     // lossless (bloom has no false negatives, so the per-doc report
     // equals the naive full equi-join computed WITHOUT the bloom).
-    val (trainGrams, survivors) = ops.Dedup.bloomTrainSurvivors(spark, dir)
+    val (trainGrams, survivors, testGrams) = ops.Dedup.bloomTrainSurvivors(spark, dir)
     val total = trainGrams.count()
     val kept = survivors.count()
     assert(kept > 0 && kept < total / 2,
@@ -119,7 +119,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     val viaBloom = SparkEntry.queries("q131_bloom_decontaminate")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
     val naive = trainGrams
-      .join(spark.table("graft_test_grams"), "gram")
+      .join(testGrams, "gram")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared"), min(col("gram")).as("first_gram"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted

@@ -161,4 +161,34 @@ class TebisSourceSpec extends AnyFunSuite {
       "sum must NOT push (not in the supported set) and must still answer")
     assert(avg.collect().length == 3)
   }
+
+  test("the source reads through the session's Hadoop conf: a scheme only it knows") {
+    import org.apache.spark.sql.functions._
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.tebistest.impl", classOf[SchemeLocalFs].getName)
+    // no FileSystem cache: every open has to find the scheme in its own conf
+    hc.set("fs.tebistest.impl.disable.cache", "true")
+    try {
+      def read(root: String) = spark.read.format("tebis").load(root)
+      def rows(root: String) = read(root).select("externalId", "timestampMs", "value")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+      val scheme = s"tebistest://${dir.toUri.getPath}"
+      assert(rows(scheme) == rows(dir.toString) && rows(dir.toString).size == 11)
+      // the header peek (pushed id) and the pushed-aggregate reader too
+      assert(read(scheme).filter("externalId = '33'").count() == 5)
+      val perSeries = (root: String) => read(root).groupBy("externalId")
+        .agg(count(lit(1)).as("n")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(perSeries(scheme) == Map("33" -> 5L, "34" -> 3L, "35" -> 3L))
+    } finally {
+      hc.unset("fs.tebistest.impl")
+      hc.unset("fs.tebistest.impl.disable.cache")
+    }
+  }
+}
+
+/** The local file system under the `tebistest` scheme, which only a conf
+  * naming this class can resolve. */
+class SchemeLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("tebistest:///")
+  override def getScheme: String = "tebistest"
 }
