@@ -111,7 +111,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     * list reads as the deployment's SQL API in one place. */
   private def starTvfs: Seq[(String, String,
       PartialFunction[Seq[Expression], org.apache.spark.sql.DataFrame])] = {
-    def read(path: String) = SparkSession.active.read.parquet(path)
+    def read(path: String) = graft.util.ParquetTables.read(SparkSession.active, path)
     Seq(
       // q40: exact-dedup representatives (fp, keep_id, n_docs)
       ("dedup_reps", "('/docs.parquet')",

@@ -25,7 +25,8 @@ object SessionHygiene {
     * every key a query's [[graft.queries.Tuning]] may have set. */
   def clear(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    // released without RDD.unpersist's per-barrier lineage WARN
+    org.apache.spark.graft.PinnedBlocks.releaseAll(spark.sparkContext)
     // Undo any query's declared tuning so it cannot leak into the next
     // query's plan (a leaked coalesce floor once disabled AQE partition
     // coalescing for every later query). The keys come from the one

@@ -1150,7 +1150,7 @@ object Dedup {
   /** Injected-variant id offset for the q157 query (far above any
     * testdata doc_id; the injection lives in the QUERY, not the
     * operator). */
-  val EditInjOffset = 10000000L
+  final val EditInjOffset = 10000000L
 
   /** Hex digits whose bit k is set, for k = 0..3 — turns md5 hex chars
     * into hash bits without any hex->int conversion. */

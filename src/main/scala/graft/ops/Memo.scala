@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.ParquetTables
+
 /** Content-fingerprint memoization for shared heavy intermediates — the
   * generalization of [[Similarity.persistedIvfIndexDir]]'s pattern (which
   * turned four 53.5 s index builds into one 65.8 s family at 100x).
@@ -10,10 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (b) is consumed by several independent queries, and (c) is a pure
   * function of one input table's CONTENT. Such a frame is computed once
   * per corpus version, written to a deterministic scratch path, and
-  * loaded by every consumer; the cache key carries a cheap content
-  * fingerprint of the input parquet (total bytes + max mtime over its
-  * files), so overwriting the corpus — even with an equal row count —
-  * invalidates the entry instead of serving stale rows.
+  * loaded by every consumer; the cache key carries a content
+  * fingerprint of the input parquet ([[ParquetTables.fingerprint]]:
+  * each file's path, length and mtime), so overwriting the corpus —
+  * even with an equal row count — invalidates the entry instead of
+  * serving stale rows.
   *
   * This mirrors the production deployment shape at 100 TB: a pipeline
   * DAG materializes classifier scores / positional indexes / trained
@@ -30,20 +33,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Memo {
 
   private val cache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Cheap content fingerprint of `<dir>/<table>.parquet`: total bytes +
-    * max mtime over its files. Listing a local path costs microseconds
-    * against a multi-second fold; remote paths (no local File view) fall
-    * back to the path string, i.e. build-once-per-JVM behavior. */
-  private[graft] def fingerprint(dir: String, table: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(walk))
-      else Seq(f)
-    val root = new java.io.File(s"$dir/$table.parquet")
-    val fs = if (root.exists()) walk(root) else Seq.empty
-    if (fs.isEmpty) s"$dir/$table"
-    else s"$dir/$table@${fs.map(_.length()).sum}:${fs.map(_.lastModified()).max}"
-  }
 
   /** JVM-private scratch root, removed on JVM exit. The pid scope
     * matters: the in-JVM cache means every JVM builds its own artifacts
@@ -73,10 +62,11 @@ object Memo {
   def persistedFrame(spark: SparkSession, dir: String, table: String,
       name: String)(build: => DataFrame): DataFrame = {
     val path = s"$scratchBase/$name-" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    cache.getOrElseUpdate(s"${fingerprint(dir, table)}->$name->$path", {
+    val fp = ParquetTables.fingerprint(spark, s"$dir/$table.parquet")
+    cache.getOrElseUpdate(s"$fp->$name->$path", {
       build.write.mode("overwrite").parquet(path); path
     })
-    spark.read.parquet(path)
+    ParquetTables.read(spark, path)
   }
 
   /** [[persistedFrame]] on a path shared ACROSS JVMs (r13 — VERDICT
@@ -96,7 +86,7 @@ object Memo {
       name: String)(build: => DataFrame): DataFrame = {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft-memo-shared-" +
       s"$name-" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val want = s"${fingerprint(dir, table)}->$name"
+    val want = s"${ParquetTables.fingerprint(spark, s"$dir/$table.parquet")}->$name"
     cache.getOrElseUpdate(s"$want->$path(shared)", {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = graft.util.FsUtil.fsOf(spark, p)
@@ -112,7 +102,7 @@ object Memo {
       }
       path
     })
-    spark.read.parquet(path)
+    ParquetTables.read(spark, path)
   }
 
   /** Test hook: drop all entries (forces rebuilds). */

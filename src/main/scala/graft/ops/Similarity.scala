@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.{lshKeys, pqAdcSum, quantizedDot}
 import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
+import graft.util.ParquetTables
 
 /** Similarity search over `embeddings` (★ SURVEY §2c): cosine top-k —
   * brute force as the exact baseline, multi-table random-hyperplane LSH
@@ -779,23 +780,14 @@ object Similarity {
   private[graft] val pqCodebookCache = scala.collection.concurrent.TrieMap
     .empty[(String, Int), Seq[(Int, Long, Seq[Long])]]
 
-  /** Cheap content fingerprint of `<dir>/embeddings.parquet` (total bytes
-    * + max mtime over its files): the trained-centroid caches key on
-    * `dir@fingerprint`, so overwriting a directory's parquet — even with
-    * an equal row count, where the derived k would collide — invalidates
-    * the memoized training instead of serving stale centroids. Listing a
-    * local path costs microseconds against a multi-second Lloyd train;
-    * remote paths (no local File view) fall back to the path string,
-    * i.e. the previous every-session-retrains-once behavior. */
-  private[graft] def cacheKeyDir(dir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(walk))
-      else Seq(f)
-    val root = new java.io.File(s"$dir/embeddings.parquet")
-    val fs = if (root.exists()) walk(root) else Seq.empty
-    if (fs.isEmpty) dir
-    else s"$dir@${fs.map(_.length()).sum}:${fs.map(_.lastModified()).max}"
-  }
+  /** Content fingerprint of `<dir>/embeddings.parquet`
+    * ([[ParquetTables.fingerprint]]): the trained-centroid caches key on
+    * it, so overwriting a directory's parquet — even with an equal row
+    * count, where the derived k would collide — invalidates the memoized
+    * training instead of serving stale centroids. Listing the path costs
+    * milliseconds against a multi-second Lloyd train. */
+  private[graft] def cacheKeyDir(spark: SparkSession, dir: String): String =
+    ParquetTables.fingerprint(spark, s"$dir/embeddings.parquet")
 
   def coarseIndex(spark: SparkSession, dir: String, nCents: Int = -1,
       iters: Int = KmeansIters): (DataFrame, DataFrame, Int) = {
@@ -803,7 +795,7 @@ object Similarity {
     val k = if (nCents > 0) nCents else ivfCentroidsFor(q.count())
     val seq =
       if (nCents > 0) kmeansCentroidSeq(q, k, iters)
-      else coarseCache.getOrElseUpdate((cacheKeyDir(dir), k, iters),
+      else coarseCache.getOrElseUpdate((cacheKeyDir(spark, dir), k, iters),
         kmeansCentroidSeq(q, k, iters))
     (q, centroidFrame(spark, seq), k)
   }
@@ -1029,11 +1021,11 @@ object Similarity {
       indexDir: String): DataFrame = {
     val dir = s"$indexDir/assignments"
     bucketMarker(spark, dir) match {
-      case None => spark.read.parquet(dir)
+      case None => ParquetTables.read(spark, dir)
       case Some(n) =>
         val tname = ivfTableName(indexDir)
         if (!spark.catalog.tableExists(tname)) {
-          val ddl = spark.read.parquet(dir).schema.toDDL
+          val ddl = ParquetTables.read(spark, dir).schema.toDDL
           spark.sql(
             s"""CREATE TABLE $tname ($ddl) USING PARQUET
                CLUSTERED BY (cent_id) SORTED BY (cent_id)
@@ -1266,7 +1258,7 @@ object Similarity {
   def appendToIvfIndex(spark: SparkSession, indexDir: String,
       newQ: DataFrame, nprobe: Int = IvfNprobe): Unit = {
     checkBuildConsistency(spark, indexDir) // refuse a torn index (r13)
-    val cents = spark.read.parquet(s"$indexDir/centroids")
+    val cents = ParquetTables.read(spark, s"$indexDir/centroids")
     val asg = assignCells(newQ.select("vec_id", "qv", "nrm"), cents, nprobe)
     bucketMarker(spark, s"$indexDir/assignments") match {
       case Some(n) =>
@@ -1390,7 +1382,7 @@ object Similarity {
   def persistedIvfIndexDir(spark: SparkSession, dir: String): String = {
     val idx = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-idx-" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    ivfIndexCache.getOrElseUpdate(s"${cacheKeyDir(dir)}->$idx", {
+    ivfIndexCache.getOrElseUpdate(s"${cacheKeyDir(spark, dir)}->$idx", {
       buildSharedIndex(spark, dir, idx); idx
     })
   }
@@ -1422,7 +1414,7 @@ object Similarity {
     * index-flavored entry (fingerprint = [[cacheKeyDir]]). */
   private def sharedArtifact(spark: SparkSession, dir: String, idx: String)(
       structure: => Boolean)(build: => Unit): Unit =
-    graft.util.SharedArtifact.ensure(spark, idx, cacheKeyDir(dir))(
+    graft.util.SharedArtifact.ensure(spark, idx, cacheKeyDir(spark, dir))(
       structure)(build)
 
   /** Stale window of the shared-artifact build lock — re-exported for
@@ -1672,7 +1664,7 @@ object Similarity {
     import spark.implicits._
     val qraw = quantized(spark, dir).select("vec_id", "qv", "nrm")
     val subs = subspaceRows(qraw).localCheckpoint()
-    val pseq = pqCodebookCache.getOrElseUpdate((cacheKeyDir(dir), KmeansIters),
+    val pseq = pqCodebookCache.getOrElseUpdate((cacheKeyDir(spark, dir), KmeansIters),
       kmeansCentroidsBySpace(subs, 0, PqSubCents, KmeansIters))
     val books = pseq.toDF("space", "cent_id", "cqv")
       .withColumn("cnrm", quantizedDot(col("cqv"), col("cqv")))
@@ -2134,7 +2126,7 @@ object Similarity {
     // coarse cells with q47/q95/q107/q109 (coarseCache), PQ subspace
     // codebooks in their own map — a suite run trains each exactly once,
     // and a fresh q66 seeds both for the rest of the family
-    val ckDir = cacheKeyDir(dir)
+    val ckDir = cacheKeyDir(spark, dir)
     val coarseHit = coarseCache.get((ckDir, kCoarse, KmeansIters))
     val pqHit = pqCodebookCache.get((ckDir, KmeansIters))
     val trained = (coarseHit, pqHit) match {
@@ -3018,7 +3010,7 @@ object Similarity {
       dir: String): String = {
     val idx = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-stream-" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    streamIdxCache.getOrElseUpdate(s"${cacheKeyDir(dir)}->$idx", {
+    streamIdxCache.getOrElseUpdate(s"${cacheKeyDir(spark, dir)}->$idx", {
       val fs = fsOf(spark, new org.apache.hadoop.fs.Path(idx))
       sharedArtifact(spark, dir, idx)(
         bucketMarker(spark, s"$idx/assignments").nonEmpty &&
@@ -3026,7 +3018,7 @@ object Similarity {
         val q = quantized(spark, dir).select("vec_id", "qv", "nrm")
           .localCheckpoint()
         saveIvfIndexOn(spark, q.filter(expr("vec_id % 2 = 0")), idx)
-        val cents = spark.read.parquet(s"$idx/centroids")
+        val cents = ParquetTables.read(spark, s"$idx/centroids")
         assignCells(q.filter(expr("vec_id % 2 = 1")), cents, IvfNprobe)
           .write.mode("overwrite").parquet(s"$idx/appends/batch_id=0")
       }

@@ -23,9 +23,10 @@ case class QueryDef(
 
 object QueryDef {
   /** Read one testdata table. Plain parquet scan: filters/projections above
-    * it push down (verified via explain in BenchSpec). */
+    * it push down (verified via explain in BenchSpec). The schema is
+    * inferred once per table version ([[graft.util.ParquetTables]]). */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.util.ParquetTables.read(spark, s"$dir/$name.parquet")
 
   /** Spread a byte-small, compute-heavy input across the cluster with a
     * REAL barrier. A plain `repartition(n)` is not enough: Catalyst pushes

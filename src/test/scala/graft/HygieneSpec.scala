@@ -51,6 +51,60 @@ class HygieneSpec extends AnyFunSuite {
         s"$name's oracle contains a lowercase 'null' — an uninitialized " +
           "val was interpolated; make the SQL a def or lazy val")
     }
+    // A numeric val interpolated too early reads 0, not null: q224's
+    // oracle once built its mirror rows as `doc_id + 0`, reusing the
+    // original doc_ids, because its offset was declared further down.
+    assert(SparkEntry.oracleSql("q224_cluster_source_mix")
+      .contains(s"doc_id + ${Dedup.EditInjOffset},"),
+      "q224's mirror rows must carry the injection offset")
+  }
+
+  test("SessionHygiene.clear releases localCheckpoint blocks without a WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    SessionHygiene.clear(spark)
+    spark.range(100).repartition(2).localCheckpoint().count()
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+    // RDD.unpersist logs on the calling thread; other threads' WARNs
+    // (listeners, leftover streams) are not clear's
+    val thread = Thread.currentThread.getName
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hygiene-warns", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) && e.getThreadName == thread) {
+          warns.add(e.getMessage.getFormattedMessage); ()
+        }
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(appender)
+    try {
+      SessionHygiene.clear(spark)
+      // the appender does see what RDD.unpersist would have logged
+      LogManager.getLogger(classOf[org.apache.spark.rdd.RDD[_]]).warn("probe")
+    } finally root.removeAppender(appender)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(warns.asScala.toSeq == Seq("probe"), warns.asScala.mkString("\n"))
+  }
+
+  test("tables and artifacts are read through ParquetTables, never a schema-less read.parquet") {
+    // A schema-less read runs a footer-inference job on every frame
+    // build; ParquetTables infers once per table version.
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = Seq("ops", "queries").flatMap(d =>
+      java.nio.file.Files.walk(root.resolve(d)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq) :+ root.resolve("GraftExtensions.scala")
+    assert(files.size > 15, s"read ${files.size} sources under $root")
+    val read = "\\bread\\.parquet\\(".r
+    val bad = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if read.findFirstIn(line).isDefined &&
+            !line.trim.startsWith("*") && !line.trim.startsWith("//") =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 
   test("Catalog.save releases its own checkpoint blocks") {
