@@ -196,13 +196,12 @@ object Main {
 
       // Sink: parquet lakehouse when --output, else batched client posts;
       // then the shared per-file account (S17/S18/S21) and a per-file
-      // push (reference csv_extractor.py:230)
-      BatchedSink.sinkFiles(files, client, cfg.output.map(out => BatchedSink.writeParquet(_, out)))
-        .foreach { r =>
-          BatchedSink.account(r, Some(metrics), lifecycle)
-          metrics.unprocessedFiles.add(-1)
-          metrics.push()
-        }
+      // push (reference csv_extractor.py:230), each as its file commits
+      BatchedSink.sinkFiles(files, client, cfg.output.map(out => BatchedSink.writeParquet(_, out))) { r =>
+        BatchedSink.account(r, Some(metrics), lifecycle)
+        metrics.unprocessedFiles.add(-1)
+        metrics.push()
+      }
       println(s"[graft] processed=${metrics.processedFiles.value} failed=${metrics.failedFiles.value} datapoints=${metrics.postedDatapoints.value} created_series=${metrics.createdTimeSeries.value}")
       // final push after the batch completes (reference csv_extractor.py:234)
       metrics.push()

@@ -93,7 +93,8 @@ object MetricsSink {
       "available_csv_files" -> "Number of csv files in the folder that could be processed by the extractor",
       "unprocessed_files" -> "Number of csv files that remains to be processed in this batch",
       "successfully_processed_files" -> "Number of csv files that has been successfully processed in this batch",
-      "processed_files" -> "Number of csv files processed since the extractor started running")
+      "processed_files" -> "Number of csv files processed since the extractor started running",
+      "oldest_pending_file_age_ms" -> "Age in milliseconds of the oldest csv file waiting in the folder after the last poll")
 
     /** Render a snapshot (keys `namespace.metric`) as text exposition
       * 0.0.4. Deterministic: metrics sorted by exposition name. */
@@ -185,7 +186,8 @@ object MetricsSink {
 
 /** Pipeline metrics (reference S21, monitoring.py:49-100) as Spark
   * accumulators (counters: cluster-safe, driver-aggregated) plus gauges
-  * mirroring the reference's four (monitoring.py:57-79). `snapshot()`
+  * mirroring the reference's four (monitoring.py:57-79), plus live
+  * mode's lag gauge. `snapshot()`
   * feeds the pluggable [[MetricsSink]] via `push()`, mirroring the
   * reference's `monitor.push()` cadence (csv_extractor.py:41,230,234):
   * after discovery, after each file's accounting, after the final flush. */
@@ -204,6 +206,9 @@ final class Metrics(sc: SparkContext, namespace: String,
   val successfullyProcessedFiles = new Gauge(s"$namespace.successfully_processed_files")
   /** series with valid datapoints in the file currently being posted. */
   val postedTimeSeriesCount = new Gauge(s"$namespace.posted_time_series_count")
+  /** live mode: age of the oldest csv file still in the input folder at
+    * the end of a micro-batch, 0 when none is left. */
+  val oldestPendingFileAgeMs = new Gauge(s"$namespace.oldest_pending_file_age_ms")
 
   def snapshot(): Map[String, Long] = Map(
     postedDatapoints.name.get -> postedDatapoints.value,
@@ -213,7 +218,8 @@ final class Metrics(sc: SparkContext, namespace: String,
     availableCsvFiles.name -> availableCsvFiles.get,
     unprocessedFiles.name -> unprocessedFiles.get,
     successfullyProcessedFiles.name -> successfullyProcessedFiles.get,
-    postedTimeSeriesCount.name -> postedTimeSeriesCount.get)
+    postedTimeSeriesCount.name -> postedTimeSeriesCount.get,
+    oldestPendingFileAgeMs.name -> oldestPendingFileAgeMs.get)
 
   /** Push a snapshot to the sink. A monitoring outage must never kill
     * extraction: failures are logged and swallowed, exactly the

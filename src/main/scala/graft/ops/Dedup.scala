@@ -1179,9 +1179,9 @@ object Dedup {
     // discipline, but CONDITIONAL: a bare-scan input is one task (3x on
     // q48's fingerprint pass at local[32]); a post-join input is already
     // exchange-distributed and the barrier would only add a pass (the
-    // unconditional form measured q52 1.45x SLOWER). barrier=true because
-    // the simhash32 Project would otherwise be pushed below the
-    // repartition and stay serial.
+    // unconditional form measured q52 1.45x SLOWER). The simhash32
+    // Project stays above a plain repartition too (PlanSpec); whether
+    // barrier=true still pays is left to the ROADMAP's barrier audit.
     QueryDef.spreadIfNarrow(docs.select(col("doc_id"), col("text")),
         minBytes = 0L, barrier = true)
       .select(col("doc_id"), simHash32(split(col("text"), " ")).as("simhash"))

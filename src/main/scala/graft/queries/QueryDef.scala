@@ -28,16 +28,18 @@ object QueryDef {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.util.ParquetTables.read(spark, s"$dir/$name.parquet")
 
-  /** Spread a byte-small, compute-heavy input across the cluster with a
-    * REAL barrier. A plain `repartition(n)` is not enough: Catalyst pushes
-    * column-preserving Projects below RepartitionOperation, so expensive
-    * per-row expressions (minhash, shingling, quantization) end up
-    * evaluated on the scan's input splits — one task for a single small
-    * parquet file (row-group bound). The eager localCheckpoint
-    * materializes the repartitioned raw rows, so everything planned above
-    * it genuinely runs at `defaultParallelism`. At 100 TB inputs arrive
-    * with thousands of splits and this becomes a no-op guard (cost: one
-    * pass over the rows being spread). */
+  /** Spread a byte-small, compute-heavy input across the cluster behind
+    * an eager barrier: the localCheckpoint materializes the repartitioned
+    * raw rows, so everything planned above it runs at
+    * `defaultParallelism` instead of on the scan's input splits (one task
+    * for a single small parquet file, row-group bound). The repartition
+    * alone already does that for a per-row Project: Spark 4.1.2 keeps
+    * such Projects (simhash, the quantization `transform`) above
+    * `Repartition n, true` in the optimized plan, which PlanSpec pins.
+    * Whether each barrier still pays for itself is left to the ROADMAP's
+    * barrier audit. At 100 TB inputs arrive with thousands of splits and
+    * this becomes a no-op guard (cost: one pass over the rows being
+    * spread). */
   def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism).localCheckpoint()
 
@@ -52,9 +54,8 @@ object QueryDef {
     * costs so heavy the extra pass is always worth it.
     *
     * No localCheckpoint: callers put their expensive expressions inside
-    * aggregates/generators, which Catalyst cannot push below the
-    * repartition (the Project-pushdown hazard [[spread]] guards against
-    * does not apply) — verified per call site via the executed plan.
+    * aggregates/generators, which stay above the repartition — verified
+    * per call site via the executed plan.
     * Size gate reads optimizer stats (file size for a parquet scan),
     * never runs a job. */
   def spreadIfNarrow(df: DataFrame, minBytes: Long = 1L << 21,

@@ -1,5 +1,11 @@
 package graft.sink
 
+import java.util.concurrent.LinkedBlockingQueue
+
+import scala.annotation.tailrec
+import scala.concurrent.ExecutionContext
+import scala.util.Try
+
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -57,8 +63,10 @@ object FileOutcome {
   * Reference constant: at most `BatchMax` (1000) series per insert
   * request; parallelism comes from Spark tasks (the reference's thread
   * fan-out, but distributed and retried by `spark.task.maxFailures`).
-  * Both modes commit parsed files through [[sinkFiles]], then [[account]]
-  * per file on the driver.
+  * Both modes commit parsed files through [[sinkFiles]], which calls back
+  * with each file's status on the driver, where [[account]] commits it:
+  * on the post path as soon as the task holding the file has returned, on
+  * the lake path once the batch's parquet write has.
   */
 object BatchedSink {
   val BatchMax = 1000
@@ -74,14 +82,23 @@ object BatchedSink {
     payloads.grouped(BatchMax).foreach(client.insertMultiple(_))
   }
 
-  /** Sink parsed files; one [[FileOutcome]] per file returns to the driver.
+  /** Sink parsed files and hand each file's [[FileOutcome]] to `onOutcome`
+    * on the calling thread.
+    *
     * Without `lake`, one job: each task posts its good files and returns
-    * their status (nothing is counted in the task: an accumulator add in a
-    * map is not exact-once under task retry). With `lake`, the caller's
-    * parquet write of the good files' datapoints, then one status collect
-    * over the same persisted parse (persisted here unless already cached). */
+    * their status rows (nothing is counted in the task: an accumulator add
+    * in a map is not exact-once under task retry). A task's rows are
+    * delivered as soon as that task has finished, so a file is committed
+    * once every post of the task that read it has returned, not once the
+    * whole job has; a job failure is rethrown after the rows of the tasks
+    * that finished before it.
+    *
+    * With `lake`, the caller's parquet write of the good files' datapoints,
+    * then one status collect over the same persisted parse (persisted here
+    * unless already cached): the batch's files commit together with that
+    * write, so their rows are delivered after it. */
   def sinkFiles(files: Dataset[TebisFile], client: DatapointsClient,
-      lake: Option[Dataset[Datapoint] => Unit]): Array[FileOutcome] = {
+      lake: Option[Dataset[Datapoint] => Unit])(onOutcome: FileOutcome => Unit): Unit = {
     val outcome = Encoders.product[FileOutcome]
     lake match {
       case Some(write) =>
@@ -89,18 +106,32 @@ object BatchedSink {
         if (!cached) files.persist()
         try {
           write(files.filter(_.error.isEmpty).flatMap(_.datapoints)(Encoders.product[Datapoint]))
-          files.map(FileOutcome(_))(outcome).collect()
+          files.map(FileOutcome(_))(outcome).collect().foreach(onOutcome)
         } finally if (!cached) files.unpersist()
       case None =>
-        files.map { f =>
+        val rows = files.map { f =>
           if (f.error.isEmpty) postFile(f, client)
           FileOutcome(f)
-        }(outcome).collect()
+        }(outcome).rdd
+        // the result handler runs on the scheduler's event thread: it only
+        // enqueues; the job's end is queued after its last task's rows
+        val done = new LinkedBlockingQueue[Either[Try[Unit], Array[FileOutcome]]]()
+        val job = files.sparkSession.sparkContext.submitJob(rows,
+          (it: Iterator[FileOutcome]) => it.toArray, rows.partitions.indices,
+          (_: Int, r: Array[FileOutcome]) => done.put(Right(r)), ())
+        job.onComplete(end => done.put(Left(end)))(ExecutionContext.parasitic)
+        @tailrec def drain(): Try[Unit] = done.take() match {
+          case Right(r) => r.foreach(onOutcome); drain()
+          case Left(end) => end
+        }
+        // a throwing callback or an interrupt abandons the rest of the job
+        val end = try drain() catch { case e: Throwable => job.cancel(); throw e }
+        end.get
     }
   }
 
   /** The per-file account (S17/S18/S21), on the driver once every post of
-    * the batch has returned: a failed file is counted and dead-lettered,
+    * the file's task has returned: a failed file is counted and dead-lettered,
     * never deleted; a good file is counted, sets the series gauge (the
     * reference's sequential count_of_time_series_gauge) and is deleted or
     * archived. */

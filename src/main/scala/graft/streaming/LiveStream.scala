@@ -35,8 +35,14 @@ import graft.tebis.{Discovery, TebisCsv, TebisFile}
   *  - post, then account         → the commit step historical mode uses
   *    too: [[graft.sink.BatchedSink.sinkFiles]] (one job per micro-batch:
   *    each task posts its settled files and returns one status row per
-  *    file), then [[graft.sink.BatchedSink.account]] per row on the
-  *    driver — count, dead-letter, delete — once every post has returned.
+  *    file), with [[graft.sink.BatchedSink.account]] per row on the
+  *    driver — count, dead-letter, delete — as soon as the task that read
+  *    the file has returned, not when the batch's last file has settled.
+  *    The at-least-once window is one task: a file is deleted only after
+  *    every post of its task returned; a crash after some tasks committed
+  *    replays the batch, their deleted files are skipped as
+  *    [[ReplayMissing]] and the rest are posted again. With `outputDir`
+  *    the batch commits as a whole, after its parquet write.
   */
 object LiveStream {
   /** Error marker for a file that vanished between listing and read — a
@@ -153,30 +159,35 @@ object LiveStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[TebisFile], batchId: Long) =>
         // batch-scoped gauge: this poll's successful files
         metrics.foreach(_.successfullyProcessedFiles.set(0))
-        val rows = BatchedSink.sinkFiles(batch, client,
-          cfg.outputDir.map(out => BatchedSink.writeParquetBatch(_, out, batchId)))
-        // delete-as-commit (or archive) runs after the job above returned,
-        // so a replay implies every post completed; ignoreMissingFiles
-        // turns that replay into a skip, and its vanished files (posted by
-        // the crashed attempt) are not accounted again
+        // delete-as-commit (or archive) per file, as soon as the task that
+        // read it has returned from its posts, so a replay implies every
+        // post of a deleted file completed; ignoreMissingFiles turns that
+        // replay into a skip, and its vanished files (posted by the
+        // crashed attempt) are not accounted again
         val lifecycle = new Discovery.Lifecycle(
           cfg.failedDir, cfg.archiveDir, spark.sparkContext.hadoopConfiguration)
-        rows.filterNot(_.error.contains(ReplayMissing))
-          .foreach(BatchedSink.account(_, metrics, lifecycle))
+        BatchedSink.sinkFiles(batch, client,
+          cfg.outputDir.map(out => BatchedSink.writeParquetBatch(_, out, batchId))) { r =>
+          if (!r.error.contains(ReplayMissing)) BatchedSink.account(r, metrics, lifecycle)
+        }
         // per-poll folder gauges, after lifecycle moves (reference
-        // monitoring.py available_csv_files / unprocessed_files)
+        // monitoring.py available_csv_files / unprocessed_files), and the
+        // lag: the age of the oldest file still waiting in the folder
         metrics.foreach { m =>
           val in = new org.apache.hadoop.fs.Path(cfg.inputDir)
           val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val remaining =
+          val pending =
             if (fs.exists(in))
-              fs.listStatus(in).count { s =>
+              fs.listStatus(in).filter { s =>
                 val name = s.getPath.getName
                 s.isFile && name.endsWith(".csv") && !Discovery.isHidden(name)
-              }.toLong
-            else 0L
-          m.availableCsvFiles.set(remaining)
-          m.unprocessedFiles.set(remaining)
+              }
+            else Array.empty[org.apache.hadoop.fs.FileStatus]
+          m.availableCsvFiles.set(pending.length)
+          m.unprocessedFiles.set(pending.length)
+          m.oldestPendingFileAgeMs.set(
+            if (pending.isEmpty) 0L
+            else System.currentTimeMillis - pending.map(_.getModificationTime).min)
         }
         // per-poll push, gauges freshly set (reference csv_extractor.py:41)
         metrics.foreach(_.push())

@@ -549,4 +549,37 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("LeftAnti"))
     assert(p.contains("Broadcast"))
   }
+
+  test("spread premise (Spark 4.1.2): per-row Projects stay above repartition(n) without the barrier") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition}
+    import org.apache.spark.sql.functions.{col, expr, split}
+    import graft.functions.GraftFunctions.{quantizedDot, simHash32}
+    import graft.queries.QueryDef
+    val n = 7
+    // every Project that computes `fn` must have the repartition below it
+    def projectsAbove(df: DataFrame, fns: String*): Unit = {
+      val opt = df.queryExecution.optimizedPlan
+      val reps = opt.collect { case r: Repartition if r.shuffle && r.numPartitions == n => r }
+      assert(reps.size == 1, s"expected one Repartition $n, true:\n$opt")
+      def computes(p: LogicalPlan, fn: String) = p match {
+        case pr: Project => pr.projectList.exists(_.exists(_.getClass.getSimpleName == fn))
+        case _ => false
+      }
+      fns.foreach { fn =>
+        val ps = opt.collect { case p if computes(p, fn) => p }
+        assert(ps.nonEmpty, s"no Project computes $fn:\n$opt")
+        assert(ps.forall(_.exists(_ eq reps.head)), s"$fn is computed below the repartition:\n$opt")
+      }
+    }
+    // Dedup's simhash fingerprint pass, as spreadIfNarrow(barrier = true)
+    // builds it, with a plain repartition in place of the checkpoint
+    val docs = QueryDef.t(spark, dir, "documents")
+    projectsAbove(docs.select(col("doc_id"), col("text")).repartition(n)
+      .select(col("doc_id"), simHash32(split(col("text"), " ")).as("simhash")), "SimHash32")
+    // Similarity.quantized's transform and norm, likewise
+    projectsAbove(QueryDef.t(spark, dir, "embeddings").repartition(n)
+      .select(col("vec_id"), expr(graft.ops.Similarity.quantExpr).as("qv"), col("label"))
+      .withColumn("nrm", quantizedDot(col("qv"), col("qv"))), "ArrayTransform", "QuantizedDot")
+  }
 }

@@ -2,14 +2,60 @@ package graft
 
 import java.nio.charset.Charset
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sink.{DatapointsClient, SeriesPayload}
 import graft.streaming.{Anomaly, EventStream, LiveStream}
 import graft.tebis.TebisCsv
+
+/** When each series was posted (local-mode tasks share this JVM). */
+object PostTimes {
+  private val buf = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+  def add(extId: String): Unit = { buf.add(extId -> System.currentTimeMillis); () }
+  def all: Seq[(String, Long)] = { import scala.jdk.CollectionConverters._; buf.asScala.toSeq }
+  def reset(): Unit = buf.clear()
+}
+
+class TimedClient extends DatapointsClient {
+  def insertMultiple(batch: Seq[SeriesPayload]): Unit = batch.foreach(s => PostTimes.add(s.externalId))
+}
+
+/** Records like [[RecordingClient]], but throws on a batch holding `extId`. */
+class FailingClient(extId: String) extends DatapointsClient {
+  def insertMultiple(batch: Seq[SeriesPayload]): Unit =
+    if (batch.exists(_.externalId == extId)) throw new java.io.IOException(s"post of $extId refused")
+    else RecordingClient.add(batch)
+}
+
+/** Jobs per (query id, batch id), from the local properties the
+  * micro-batch execution sets on every job it runs. */
+class BatchJobs extends SparkListener {
+  private val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    Option(e.properties).foreach { props =>
+      val query = props.getProperty("sql.streaming.queryId")
+      val batch = props.getProperty("streaming.sql.batchId")
+      if (query != null && batch != null) { jobs.merge((query, batch), 1, _ + _); () }
+    }
+
+  /** Job counts of `q`'s batches that had input. */
+  def counts(q: StreamingQuery): Seq[Int] = {
+    val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSeq
+    def now = batches.map(b => Option(jobs.get((q.id.toString, b))).getOrElse(0))
+    // listener events arrive asynchronously
+    val deadline = System.currentTimeMillis + 10000
+    while (now.contains(0) && System.currentTimeMillis < deadline) Thread.sleep(20)
+    Thread.sleep(200)
+    now
+  }
+}
 
 /** Structured Streaming specs: the live TEBIS pipeline and windowed
   * event-stream aggregates. */
@@ -73,17 +119,7 @@ class StreamingSpec extends AnyFunSuite {
     RecordingClient.reset()
     val sink = new MetricsSink.Recording
     val metrics = Metrics(spark.sparkContext, "test_live1", sink)
-    // job counts per (query id, batch id), from the local properties the
-    // micro-batch execution sets on every job it runs
-    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { props =>
-          val query = props.getProperty("sql.streaming.queryId")
-          val batch = props.getProperty("streaming.sql.batchId")
-          if (query != null && batch != null) { jobs.merge((query, batch), 1, _ + _); () }
-        }
-    }
+    val listener = new BatchJobs
     spark.sparkContext.addSparkListener(listener)
     val q = LiveStream.start(spark,
       LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L,
@@ -93,13 +129,8 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       writeTebis(dir, "TEBIS_C_300.csv", 3000, 2, "3")
       q.processAllAvailable()
-      val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSeq
-      assert(batches.size == 2)
-      // listener events arrive asynchronously
-      val deadline = System.currentTimeMillis + 10000
-      def counts = batches.map(b => Option(jobs.get((q.id.toString, b))).getOrElse(0))
-      while (counts.contains(0) && System.currentTimeMillis < deadline) Thread.sleep(20)
-      Thread.sleep(200)
+      val counts = listener.counts(q)
+      assert(counts.size == 2)
       assert(counts == Seq(1, 1), s"jobs per micro-batch: $counts")
       // the first micro-batch held all three files: its snapshot
       assert(sink.pushes.size == 2)
@@ -111,7 +142,8 @@ class StreamingSpec extends AnyFunSuite {
         "test_live1.available_csv_files" -> 0L,
         "test_live1.unprocessed_files" -> 0L,
         "test_live1.successfully_processed_files" -> 2L,
-        "test_live1.posted_time_series_count" -> 1L))
+        "test_live1.posted_time_series_count" -> 1L,
+        "test_live1.oldest_pending_file_age_ms" -> 0L))
       assert(metrics.processedFiles.value == 3 && metrics.failedFiles.value == 1)
       assert(metrics.postedDatapoints.value == 10 && metrics.postedTimeSeriesCount.get == 1)
       assert(sink.last.get("test_live1.successfully_processed_files") == 1)
@@ -119,6 +151,104 @@ class StreamingSpec extends AnyFunSuite {
       assert(Files.exists(dir.resolve("failed").resolve("broken_x_50.csv")))
       assert(!Files.exists(dir.resolve("TEBIS_A_100.csv")) && !Files.exists(dir.resolve("TEBIS_C_300.csv")))
     } finally { q.stop(); spark.sparkContext.removeSparkListener(listener) }
+  }
+
+  test("live stream: a file commits when its own task has posted, before the batch's last settle") {
+    val dir = Files.createTempDirectory("early-in")
+    val ckpt = Files.createTempDirectory("early-ckpt")
+    writeTebis(dir, "TEBIS_E_100.csv", 1000, 3, "e1")
+    writeTebis(dir, "TEBIS_L_200.csv", 2000, 2, "e2")
+    val early = dir.resolve("TEBIS_E_100.csv")
+    val now = System.currentTimeMillis
+    // settled long ago: read at once
+    Files.setLastModifiedTime(early, FileTime.fromMillis(now - 10000))
+    // an hour ahead: settles 1.5 s after its task first sees it, so the
+    // two deadlines of this one micro-batch are >= 1 s apart
+    Files.setLastModifiedTime(dir.resolve("TEBIS_L_200.csv"), FileTime.fromMillis(now + 3600000))
+    PostTimes.reset()
+    @volatile var earlyGoneAt = 0L
+    val watcher = new Thread(() => {
+      while (Files.exists(early)) Thread.sleep(2)
+      earlyGoneAt = System.currentTimeMillis
+    })
+    watcher.setDaemon(true)
+    watcher.start()
+    val listener = new BatchJobs
+    spark.sparkContext.addSparkListener(listener)
+    val q = LiveStream.start(spark,
+      LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L, settleMs = 1500L),
+      new TimedClient)
+    try {
+      q.processAllAvailable()
+      watcher.join(10000)
+      assert(listener.counts(q) == Seq(1), "both files in one micro-batch, run by one job")
+      assert(PostTimes.all.map(_._1).sorted == Seq("e1", "e2"), "each file posted exactly once")
+      val latePostedAt = PostTimes.all.find(_._1 == "e2").get._2
+      assert(earlyGoneAt > 0 && earlyGoneAt < latePostedAt,
+        s"early file deleted ${earlyGoneAt - latePostedAt} ms after the late file's settled post")
+      assert(Files.list(dir).noneMatch(_.toString.endsWith(".csv")))
+    } finally { q.stop(); spark.sparkContext.removeSparkListener(listener) }
+  }
+
+  test("live stream: a failed post keeps the batch's finished files committed across a restart") {
+    val dir = Files.createTempDirectory("fail-in")
+    val ckpt = Files.createTempDirectory("fail-ckpt")
+    val dead = dir.resolveSibling(dir.getFileName.toString + "_failed")
+    writeTebis(dir, "TEBIS_G_100.csv", 1000, 3, "g1")
+    writeTebis(dir, "TEBIS_F_200.csv", 2000, 2, "f1")
+    Files.write(dir.resolve("broken_x_50.csv"),
+      ";9 : Z\nu;x\nBAD;1,0\n".getBytes(Charset.forName(TebisCsv.Encoding)))
+    val now = System.currentTimeMillis
+    Files.list(dir).forEach(f => Files.setLastModifiedTime(f, FileTime.fromMillis(now - 10000)))
+    // the failing file settles last, so the other two tasks finish first
+    Files.setLastModifiedTime(dir.resolve("TEBIS_F_200.csv"), FileTime.fromMillis(now + 3600000))
+    val cfg = LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L,
+      failedDir = Some(dead.toString))
+    RecordingClient.reset()
+    val q1 = LiveStream.start(spark, cfg, new FailingClient("f1"))
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.processAllAvailable())
+    finally q1.stop()
+    // the finished tasks' files were committed: posted and deleted, or
+    // dead-lettered; the failed post's file stays for the replay
+    assert(RecordingClient.all.flatten.map(_.externalId) == Seq("g1"))
+    assert(!Files.exists(dir.resolve("TEBIS_G_100.csv")))
+    assert(Files.exists(dead.resolve("broken_x_50.csv")))
+    assert(Files.exists(dir.resolve("TEBIS_F_200.csv")))
+
+    // restart from the checkpoint: the batch replays, its committed files
+    // are skipped, and the failed file is posted once
+    RecordingClient.reset()
+    val sink = new MetricsSink.Recording
+    val metrics = Metrics(spark.sparkContext, "test_fail", sink)
+    val q2 = LiveStream.start(spark, cfg, new RecordingClient, Some(metrics))
+    try q2.processAllAvailable() finally q2.stop()
+    assert(RecordingClient.all.flatten.map(_.externalId) == Seq("f1"))
+    assert(metrics.processedFiles.value == 1 && metrics.failedFiles.value == 0)
+    assert(Files.list(dead).map(_.getFileName.toString).toArray.toSeq == Seq("broken_x_50.csv"))
+    assert(Files.list(dir).noneMatch(_.toString.endsWith(".csv")))
+  }
+
+  test("live stream: lag gauge reads the age of the oldest file a batch left in the folder") {
+    val dir = Files.createTempDirectory("lag-in")
+    val ckpt = Files.createTempDirectory("lag-ckpt")
+    val now = System.currentTimeMillis
+    // one file more than a trigger takes: newest first, so the oldest waits
+    (0 to LiveStream.FilesPerTrigger).foreach { i =>
+      writeTebis(dir, s"TEBIS_L_${100 + i}.csv", 1000L * (i + 1), 1, s"l$i")
+      Files.setLastModifiedTime(dir.resolve(s"TEBIS_L_${100 + i}.csv"),
+        FileTime.fromMillis(now - 60000 + 1000L * i))
+    }
+    RecordingClient.reset()
+    val sink = new MetricsSink.Recording
+    val q = LiveStream.start(spark,
+      LiveStream.Config(dir.toString, ckpt.toString, triggerMs = 100L),
+      new RecordingClient, Some(Metrics(spark.sparkContext, "test_lag", sink)))
+    try q.processAllAvailable() finally q.stop()
+    val first = sink.pushes.head
+    assert(first("test_lag.available_csv_files") == 1)
+    assert(first("test_lag.oldest_pending_file_age_ms") >= 60000L)
+    assert(sink.last.get("test_lag.oldest_pending_file_age_ms") == 0L)
+    assert(RecordingClient.all.flatten.size == LiveStream.FilesPerTrigger + 1)
   }
 
   test("live stream: folder gauges skip the hidden files the source never reads") {
