@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session the harness mains (Bench, Verify, PlanDump, Probe) run
-  * queries in: `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-  * partitions, AQE on, UTC, and the shipped surface — custom functions,
+/** The session the harness mains (Bench, Verify, PlanDump, Probe,
+  * ScaleDrive) run queries in: `local[SPARK_GRAFT_CPUS]` (default 4) with
+  * as many shuffle partitions, AQE on, UTC, and the shipped surface — custom functions,
   * TVFs and optimizer rules installed the cluster way through
   * `spark.sql.extensions` (q281 routes through its TVF). */
 object GraftSession {

@@ -124,10 +124,6 @@ object Main {
       cfg.apiKey.foreach(k => c.setApiKey(k.value))
       c
     }
-    val lifecycle = new Discovery.Lifecycle(
-      failedDir = if (cfg.moveFailed) Some(s"${cfg.input}/failed") else None,
-      finishedDir = if (cfg.keepFinished) Some(s"${cfg.input}/finished") else None,
-      conf = spark.sparkContext.hadoopConfiguration)
     if (cfg.live) {
       val query = LiveStream.start(spark,
         LiveStream.Config(
@@ -142,6 +138,10 @@ object Main {
         client, Some(metrics))
       query.awaitTermination()
     } else {
+      val lifecycle = new Discovery.Lifecycle(
+        failedDir = if (cfg.moveFailed) Some(s"${cfg.input}/failed") else None,
+        finishedDir = if (cfg.keepFinished) Some(s"${cfg.input}/finished") else None,
+        conf = spark.sparkContext.hadoopConfiguration)
       runHistorical(spark, cfg, metrics, lifecycle, client)
     }
   }

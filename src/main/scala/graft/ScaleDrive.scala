@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -25,20 +24,11 @@ object ScaleDrive {
     // AFTER the corpus prep and the whole first drive already ran
     require(nBatches >= 2, s"nBatches must be >= 2 (got $nBatches): the drive " +
       "splits into a pre- and post-compaction half")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // recentProgress retains only the last N updates (default 100) — a
-      // half with more micro-batches than that would silently drop the
-      // earliest per-batch timings from the report
-      .config("spark.sql.streaming.numRecentProgressUpdates", (nBatches + 8).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // recentProgress retains only the last N updates (default 100) — a
+    // half with more micro-batches than that would silently drop the
+    // earliest per-batch timings from the report
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", (nBatches + 8).toString)
 
     val scratch = java.nio.file.Files.createTempDirectory("scale-drive").toString
     val staged = s"$scratch/staged"; val in = s"$scratch/in"; val out = s"$scratch/out"

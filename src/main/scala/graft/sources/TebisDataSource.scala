@@ -1,13 +1,11 @@
 package graft.sources
 
-import java.nio.charset.Charset
 import java.util
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -19,7 +17,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.tebis.TebisCsv
+import graft.tebis.{Discovery, TebisCsv}
+import graft.util.HadoopConf
 
 /** DataSourceV2 batch READ source for TEBIS wide-CSV: the long-form
   * datapoints of a file tree through the standard reader API —
@@ -28,11 +27,11 @@ import graft.tebis.TebisCsv
   * touching the library's Scala API.
   *
   * Schema: (path STRING, externalId STRING, name STRING,
-  * timestampMs BIGINT, value DOUBLE). Parse semantics are EXACTLY
-  * [[graft.tebis.TebisCsv.parseContent]] (reference
-  * csv_extractor.py:92-160): files that dead-letter contribute zero rows
-  * here — lifecycle/dead-letter routing stays with
-  * [[graft.tebis.Discovery]], which owns the file list in the pipeline.
+  * timestampMs BIGINT, value DOUBLE). Files are listed by
+  * [[graft.tebis.Discovery.csvFiles]] and read by
+  * [[graft.tebis.TebisCsv.read]] (reference csv_extractor.py:92-160), as
+  * the extractor does: files that dead-letter contribute zero rows here —
+  * lifecycle/dead-letter routing stays with the pipeline.
   *
   * Spark-native behaviors, visible in `.explain`:
   *  - one [[InputPartition]] per file — a 100 TB corpus of micro-batch
@@ -57,7 +56,7 @@ class TebisDataSource extends TableProvider with DataSourceRegister {
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new TebisTable(TebisDataSource.paths(properties), TebisDataSource.HadoopConf.active())
+    new TebisTable(TebisDataSource.paths(properties), HadoopConf.active())
 }
 
 object TebisDataSource {
@@ -73,71 +72,23 @@ object TebisDataSource {
     raw.filter(_.nonEmpty)
   }
 
-  /** The session's Hadoop configuration (`spark.hadoop.*` settings and
-    * the context's `hadoopConfiguration`: credentials, `fs.<scheme>.impl`)
-    * as plain entries. `Configuration` is not java-serializable, so each
-    * task rebuilds it from these, the way `LiveStream.start` does. */
-  private[graft] final class HadoopConf(entries: Array[(String, String)]) extends Serializable {
-    @transient lazy val value: Configuration = {
-      val conf = new Configuration(false)
-      entries.foreach { case (k, v) => conf.set(k, v) }
-      conf
-    }
-  }
-
-  private[graft] object HadoopConf {
-    def active(): HadoopConf = new HadoopConf(
-      SparkSession.active.sessionState.newHadoopConf().iterator().asScala
-        .map(e => e.getKey -> e.getValue).toArray)
-  }
-
   /** (kept, total) from the most recent runtime-filtered partition
     * planning — observability for specs and operators. */
   val lastPlanned = new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
 
-  /** The externalIds a file's HEADER names: first physical line only
-    * (driver-side byte read to the first '\n'), parsed with the same
-    * header-cell splitter as the full parser. Malformed headers yield
-    * Nil — callers treat that as "cannot prove absence, keep". */
-  private[graft] def headerIds(path: String, conf: Configuration): Seq[String] = {
-    try {
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
-      val raw = fs.open(p)
-      // buffered: one block read per header, not one FS round-trip per
-      // byte — this runs on the DRIVER once per candidate file during
-      // partition planning, where a remote FS would pay per call
-      val in = new java.io.BufferedInputStream(raw, 64 * 1024)
-      val buf = new java.io.ByteArrayOutputStream()
-      try {
-        var b = in.read()
-        while (b != -1 && b != '\n') { buf.write(b); b = in.read() }
-      } finally in.close()
-      val line = new String(buf.toByteArray, Charset.forName(TebisCsv.Encoding))
-        .stripSuffix("\r")
-      TebisCsv.parseCsv(line).headOption.toSeq
-        .flatMap(_.drop(1))
-        .map(c => TebisCsv.splitHeaderCell(c).externalId)
-        .filter(_.nonEmpty)
-    } catch { case _: Exception => Nil }
-  }
-
-  /** Driver-side listing: each root is a file or a directory of `*.csv`.
-    * Cost is one FS listing per root — no content is read on the driver. */
+  /** Driver-side listing: a directory root contributes its
+    * [[Discovery.csvFiles]], a file root itself. Cost is one FS listing
+    * per root — no content is read on the driver. */
   private[sources] def listFiles(roots: Seq[String], conf: Configuration): Seq[String] =
     roots.flatMap { r =>
       val p = new Path(r)
-      val fs = p.getFileSystem(conf)
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory)
-        fs.listStatus(p).toSeq
-          .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".csv"))
-          .map(_.getPath.toString)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      if (st.isDirectory) Discovery.csvFiles(r, conf).map(_.getPath.toString)
       else Seq(st.getPath.toString)
     }.sorted
 }
 
-private class TebisTable(roots: Seq[String], conf: TebisDataSource.HadoopConf)
+private class TebisTable(roots: Seq[String], conf: HadoopConf)
     extends Table with SupportsRead {
   override def name(): String = s"tebis(${roots.mkString(",")})"
   override def schema(): StructType = TebisDataSource.Schema
@@ -165,7 +116,7 @@ private case class TebisPushedAgg(groupByExternalId: Boolean, funcs: Seq[TebisAg
   }
 }
 
-private class TebisScanBuilder(roots: Seq[String], conf: TebisDataSource.HadoopConf)
+private class TebisScanBuilder(roots: Seq[String], conf: HadoopConf)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates {
 
@@ -244,7 +195,7 @@ private class TebisScanBuilder(roots: Seq[String], conf: TebisDataSource.HadoopC
 
 private[graft] class TebisScan(roots: Seq[String], required: StructType,
     keepIds: Option[Set[String]],
-    conf: TebisDataSource.HadoopConf = TebisDataSource.HadoopConf.active())
+    conf: HadoopConf = HadoopConf.active())
     extends Scan with Batch with SupportsRuntimeFiltering {
   /** Runtime (join-delivered) externalIds, intersected into [[eff]].
     * Populated by Spark's dynamic pruning calling [[filter]] after the
@@ -287,7 +238,7 @@ private[graft] class TebisScan(roots: Seq[String], required: StructType,
     val kept = eff match {
       case None => files
       case Some(ids) => files.filter { f =>
-        val hdr = TebisDataSource.headerIds(f, conf.value)
+        val hdr = TebisCsv.headerIds(f, conf.value)
         hdr.isEmpty || hdr.exists(ids.contains)
       }
     }
@@ -305,7 +256,7 @@ private case class TebisInputPartition(path: String) extends InputPartition
   * one column per aggregate, matching V2ScanRelationPushDown's
   * positional contract. */
 private class TebisAggScan(roots: Seq[String], keepIds: Option[Set[String]],
-    agg: TebisPushedAgg, conf: TebisDataSource.HadoopConf) extends Scan with Batch {
+    agg: TebisPushedAgg, conf: HadoopConf) extends Scan with Batch {
   override def readSchema(): StructType = {
     import org.apache.spark.sql.types._
     val group = if (agg.groupByExternalId)
@@ -332,7 +283,7 @@ private class TebisAggScan(roots: Seq[String], keepIds: Option[Set[String]],
 }
 
 private class TebisAggReaderFactory(keepIds: Option[Set[String]], agg: TebisPushedAgg,
-    conf: TebisDataSource.HadoopConf) extends PartitionReaderFactory {
+    conf: HadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TebisAggPartitionReader(
       partition.asInstanceOf[TebisInputPartition].path, keepIds, agg, conf.value)
@@ -352,11 +303,7 @@ private class TebisAggPartitionReader(
   }
 
   private val rows: Iterator[InternalRow] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
-    val file = TebisCsv.parseContent(path, new String(bytes, Charset.forName(TebisCsv.Encoding)))
+    val file = TebisCsv.read(path, conf)
     val accs = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
     if (file.error.isEmpty) {
       file.columns.iterator
@@ -398,7 +345,7 @@ private class TebisAggPartitionReader(
 }
 
 private class TebisReaderFactory(fields: Array[String], keepIds: Option[Set[String]],
-    conf: TebisDataSource.HadoopConf) extends PartitionReaderFactory {
+    conf: HadoopConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TebisPartitionReader(partition.asInstanceOf[TebisInputPartition].path, fields, keepIds,
       conf.value)
@@ -412,12 +359,7 @@ private class TebisPartitionReader(
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[InternalRow] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
-    // Charset per task: java.nio.charset.Charset is not Serializable
-    val file = TebisCsv.parseContent(path, new String(bytes, Charset.forName(TebisCsv.Encoding)))
+    val file = TebisCsv.read(path, conf)
     val pathU = UTF8String.fromString(file.path)
     val cols =
       if (file.error.isDefined) Iterator.empty

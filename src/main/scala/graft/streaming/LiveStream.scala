@@ -1,15 +1,12 @@
 package graft.streaming
 
-import java.nio.charset.Charset
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Metrics
 import graft.sink.{BatchedSink, DatapointsClient}
 import graft.tebis.{Discovery, TebisCsv, TebisFile}
+import graft.util.HadoopConf
 
 /** Live micro-batch mode (reference E2, csv_extractor.py:25-50,265-280),
   * re-expressed as Structured Streaming over the binaryFile source.
@@ -31,7 +28,8 @@ import graft.tebis.{Discovery, TebisCsv, TebisFile}
   *    bytes. This is strictly stronger than the reference's
   *    skip-young-files poll (csv_extractor.py:267), which re-offers the
   *    file next poll; the streaming source offers a file exactly once, so
-  *    the wait must happen at read time.
+  *    the wait must happen at read time. The settled bytes go through
+  *    [[graft.tebis.TebisCsv.decode]], the decode of every mode.
   *  - post, then account         → the commit step historical mode uses
   *    too: [[graft.sink.BatchedSink.sinkFiles]] (one job per micro-batch:
   *    each task posts its settled files and returns one status row per
@@ -43,6 +41,7 @@ import graft.tebis.{Discovery, TebisCsv, TebisFile}
   *    replays the batch, their deleted files are skipped as
   *    [[ReplayMissing]] and the rest are posted again. With `outputDir`
   *    the batch commits as a whole, after its parquet write.
+  *  - folder gauges → [[graft.tebis.Discovery.csvFiles]] after each batch.
   */
 object LiveStream {
   /** Error marker for a file that vanished between listing and read — a
@@ -101,13 +100,7 @@ object LiveStream {
       }
     }
     val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
+    try in.readAllBytes() finally in.close()
   }
 
   /** Start the live pipeline: stream files → parse per-file in executors →
@@ -129,22 +122,15 @@ object LiveStream {
       // replay-after-delete: a batch replayed after its (post-completing)
       // deletion step must skip, not crash — see the scaladoc
       .option("ignoreMissingFiles", "true")
-    // Hadoop Configuration is not java-serializable; ship its entries and
-    // rebuild per task (≤ FilesPerTrigger stats per batch — cheap)
-    val confEntries = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toArray
+    val conf = HadoopConf(spark)
     val settleMs = cfg.settleMs
     // select path only: content is read via settledBytes (column pruning
     // keeps the source from reading bytes the task would discard)
     val files = reader.load(cfg.inputDir)
       .select($"path").as[String]
       .map { p =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
-        try {
-          val bytes = settledBytes(p, settleMs, conf)
-          TebisCsv.parseContent(p, new String(bytes, Charset.forName(TebisCsv.Encoding)))
-        } catch {
+        try TebisCsv.decode(p, settledBytes(p, settleMs, conf.value))
+        catch {
           // replay after delete-as-commit: the file was fully posted in the
           // crashed attempt (deletion is the batch's last step) — skip it,
           // do NOT dead-letter (mirrors ignoreMissingFiles for the listing)
@@ -174,15 +160,7 @@ object LiveStream {
         // monitoring.py available_csv_files / unprocessed_files), and the
         // lag: the age of the oldest file still waiting in the folder
         metrics.foreach { m =>
-          val in = new org.apache.hadoop.fs.Path(cfg.inputDir)
-          val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val pending =
-            if (fs.exists(in))
-              fs.listStatus(in).filter { s =>
-                val name = s.getPath.getName
-                s.isFile && name.endsWith(".csv") && !Discovery.isHidden(name)
-              }
-            else Array.empty[org.apache.hadoop.fs.FileStatus]
+          val pending = Discovery.csvFiles(cfg.inputDir, spark.sparkContext.hadoopConfiguration)
           m.availableCsvFiles.set(pending.length)
           m.unprocessedFiles.set(pending.length)
           m.oldestPendingFileAgeMs.set(

@@ -1,14 +1,19 @@
 package graft.tebis
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** Historical file discovery (reference S1/S20, csv_extractor.py:239-262)
-  * and the per-file lifecycle. Driver-side path listing via the Hadoop
-  * FileSystem API so the same code targets local disk, HDFS or object
-  * stores; the listing is metadata-only (the partition-pruning analog —
-  * out-of-range files are never opened). Live discovery (S2/S19) is the
-  * streaming source in [[graft.streaming.LiveStream]].
+/** Which files are input ([[csvFiles]], the one listing rule of every
+  * mode), historical file discovery (reference S1/S20,
+  * csv_extractor.py:239-262) and the per-file lifecycle. Driver-side path
+  * listing via the Hadoop FileSystem API so the same code targets local
+  * disk, HDFS or object stores; the listing is metadata-only (the
+  * partition-pruning analog — out-of-range files are never opened). Live
+  * discovery (S2/S19) is the streaming source in
+  * [[graft.streaming.LiveStream]], whose `*.csv` glob and hidden-file
+  * skip pick the same files.
   */
 object Discovery {
 
@@ -16,10 +21,28 @@ object Discovery {
     * by Python's glob) and '_'-prefixed (a Spark data-source convention —
     * documented divergence: the reference WOULD process `_x.csv`, but
     * listing what the engine cannot load would strand the file in the
-    * input dir forever). Live mode's folder gauges count by the same
-    * rule, so they match what the streaming source reads. */
+    * input dir forever). */
   private[graft] def isHidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
+
+  /** The TEBIS input files directly under `dir`: plain files (not
+    * directories) named `*.csv` (case-sensitive, like the reference's
+    * glob on Linux) and not [[isHidden]]. Historical discovery, the
+    * `format("tebis")` source and live mode's folder gauges all list
+    * through this. Sorted by path, the order `globStatus` returned, which
+    * first-wins catalog naming keeps for files whose tokens tie. A missing
+    * folder, or a path that is a file, holds none (as the glob did). */
+  private[graft] def csvFiles(dir: String, conf: Configuration): Seq[FileStatus] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    val all =
+      try if (fs.getFileStatus(p).isDirectory) fs.listStatus(p) else Array.empty[FileStatus]
+      catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+    all.filter { st =>
+      val name = st.getPath.getName
+      st.isFile && name.endsWith(".csv") && !isHidden(name)
+    }.sortBy(_.getPath).toSeq
+  }
 
   /** stem (filename minus last extension) split on "_", with the Python
     * `int(parts[-1])` token when parsable. */
@@ -30,13 +53,13 @@ object Discovery {
     stem.split("_", -1)
   }
 
-  /** Historical discovery (csv_extractor.py:239-262): glob `*.csv`; when a
+  /** Historical discovery (csv_extractor.py:239-262): [[csvFiles]]; when a
     * bound is set, only files whose stem has MORE THAN 2 `_`-parts are
     * eligible, a non-integer trailing token skips the file with a warning,
     * and both bounds are EXCLUSIVE (`time_from < ts < time_until`). A bound
     * of 0 means "no bound" (Python falsiness parity). Result sorted
     * ascending by trailing token, token defaulting to 0 for stems with <=2
-    * parts (stable sort, listing order preserved on ties). Parity note: a
+    * parts (stable sort, path order preserved on ties). Parity note: a
     * file with >2 parts and a non-integer token, reached WITHOUT bounds
     * set, throws — the reference's sort does `int(parts[-1])` unguarded
     * (csv_extractor.py:258).
@@ -46,13 +69,10 @@ object Discovery {
       timeFrom: Option[Long] = None,
       timeUntil: Option[Long] = None,
       conf: Configuration = new Configuration()): Seq[String] = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    val all = Option(fs.globStatus(new Path(dirPath, "*.csv"))).getOrElse(Array.empty)
-      .filter(st => !isHidden(st.getPath.getName))
+    val all = csvFiles(dir, conf)
     val from = timeFrom.filter(_ != 0L)
     val until = timeUntil.filter(_ != 0L)
-    val relevant: Array[FileStatus] =
+    val relevant: Seq[FileStatus] =
       if (from.isEmpty && until.isEmpty) all
       else all.filter { st =>
         val parts = stemParts(st.getPath)
@@ -68,7 +88,7 @@ object Discovery {
           throw new NumberFormatException(
             s"invalid literal for int(): '${parts.last}' in ${st.getPath.getName}"))
       else 0L
-    }(Ordering.Long).map(_.getPath.toString).toSeq
+    }(Ordering.Long).map(_.getPath.toString)
   }
 
   /** Post-commit file lifecycle (S17/S18, csv_extractor.py:78-89,184-192):

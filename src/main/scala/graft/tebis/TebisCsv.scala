@@ -2,6 +2,8 @@ package graft.tebis
 
 import java.nio.charset.Charset
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** One datapoint in long form: the engine's core record.
@@ -58,12 +60,16 @@ case class TebisFile(
   * rows 3..n = data, col 0 epoch SECONDS, value cells with comma decimal
   * separator.
   *
-  * Scale design: files are read through the `binaryFile` source — one task
-  * per file, so a 100 TB corpus of micro-batch-sized files parallelizes
-  * across the cluster with no driver-side parsing. Each file is
-  * materialized per-task (the reference does the same per-process,
-  * csv_extractor.py:115-123); TEBIS files are small micro-batches, so this
-  * bounds task memory. The driver only lists paths (Discovery).
+  * Every mode reads TEBIS bytes through [[decode]] (or [[read]], which
+  * opens a path and decodes it) and peeks headers with [[headerIds]].
+  *
+  * Scale design: [[files]] reads through the `binaryFile` source, which
+  * packs files into tasks by size (4 MB open cost per file), so small
+  * files share a task and a 100 TB corpus spreads across the cluster with
+  * no driver-side parsing. Each file is materialized per-task (the
+  * reference does the same per-process, csv_extractor.py:115-123); TEBIS
+  * files are small micro-batches, so this bounds task memory. The driver
+  * only lists paths (Discovery).
   */
 object TebisCsv {
   val Delimiter: Char = ';'
@@ -351,29 +357,56 @@ object TebisCsv {
     }
   }
 
-  /** Distributed read: one task per file via the binaryFile source. */
+  /** One file's bytes → its parse: latin-1, then [[parseContent]]. */
+  def decode(path: String, bytes: Array[Byte]): TebisFile =
+    // Charset resolved per call: java.nio.charset.Charset is not Serializable
+    parseContent(path, new String(bytes, Charset.forName(Encoding)))
+
+  /** Open `path` through `conf`, read it whole and [[decode]] it. */
+  def read(path: String, conf: Configuration): TebisFile = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf).open(p)
+    val bytes = try in.readAllBytes() finally in.close()
+    decode(path, bytes)
+  }
+
+  /** The externalIds a file's HEADER names: first physical line only
+    * (bytes up to the first '\n'), parsed with the same header-cell
+    * splitter as the full parser. Malformed or unreadable headers yield
+    * Nil — callers treat that as "cannot prove absence, keep". */
+  private[graft] def headerIds(path: String, conf: Configuration): Seq[String] = {
+    try {
+      val p = new Path(path)
+      // buffered: one block read per header, not one FS round-trip per
+      // byte — this runs on the DRIVER once per candidate file during
+      // partition planning, where a remote FS would pay per call
+      val in = new java.io.BufferedInputStream(p.getFileSystem(conf).open(p), 64 * 1024)
+      val buf = new java.io.ByteArrayOutputStream()
+      try {
+        var b = in.read()
+        while (b != -1 && b != '\n') { buf.write(b); b = in.read() }
+      } finally in.close()
+      val line = new String(buf.toByteArray, Charset.forName(Encoding)).stripSuffix("\r")
+      parseCsv(line).headOption.toSeq
+        .flatMap(_.drop(1))
+        .map(c => splitHeaderCell(c).externalId)
+        .filter(_.nonEmpty)
+    } catch { case _: Exception => Nil }
+  }
+
+  /** Distributed read of the given files through the binaryFile source. */
   def files(spark: SparkSession, paths: Seq[String]): Dataset[TebisFile] = {
     import spark.implicits._
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.csv")
       .load(paths: _*)
       .select($"path", $"content").as[(String, Array[Byte])]
-      // Charset resolved per-task: java.nio.charset.Charset is not Serializable
-      .map { case (p, bytes) => parseContent(p, new String(bytes, Charset.forName(Encoding))) }
+      .map { case (p, bytes) => decode(p, bytes) }
   }
 
   /** Long-form datapoints from successfully parsed files. */
   def datapoints(spark: SparkSession, paths: Seq[String]): Dataset[Datapoint] = {
     import spark.implicits._
     files(spark, paths).filter(_.error.isEmpty).flatMap(_.datapoints)
-  }
-
-  /** All value-column headers (for catalog upsert), with provenance.
-    * Failed files contribute the headers processed before their failure —
-    * the reference creates those series too (csv_extractor.py:151-156). */
-  def headers(spark: SparkSession, paths: Seq[String]): Dataset[(String, SeriesHeader, Int)] = {
-    import spark.implicits._
-    files(spark, paths)
-      .flatMap(f => f.columns.map(c => (f.path, SeriesHeader(c.externalId, c.name), c.colIndex)))
   }
 }

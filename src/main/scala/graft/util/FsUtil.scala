@@ -1,5 +1,8 @@
 package graft.util
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -32,4 +35,22 @@ object FsUtil {
     require(fs.rename(src, dst),
       s"filesystem refused rename $src -> $dst (concurrent writer? " +
         "stale destination?) — aborting instead of corrupting the layout")
+}
+
+/** The session's Hadoop configuration (`spark.hadoop.*` settings and the
+  * context's `hadoopConfiguration`: credentials, `fs.<scheme>.impl`) in a
+  * form tasks can carry: `Configuration` is not java-serializable, so its
+  * entries travel and each task rebuilds the conf once, on first use. */
+private[graft] final class HadoopConf(entries: Array[(String, String)]) extends Serializable {
+  @transient lazy val value: Configuration = {
+    val conf = new Configuration(false)
+    entries.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+}
+
+private[graft] object HadoopConf {
+  def apply(spark: SparkSession): HadoopConf = new HadoopConf(
+    spark.sessionState.newHadoopConf().iterator().asScala.map(e => e.getKey -> e.getValue).toArray)
+  def active(): HadoopConf = apply(SparkSession.active)
 }

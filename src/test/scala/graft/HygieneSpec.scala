@@ -107,6 +107,34 @@ class HygieneSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 
+  test("TEBIS files are listed and decoded only under graft/tebis") {
+    // One reader: Discovery.csvFiles decides which files are input and
+    // TebisCsv.decode/read turn their bytes into datapoints. A second
+    // listing or decode elsewhere is a second idea of an input file, and
+    // such copies have drifted apart before (hidden and `.CSV` files).
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .filterNot(_.toString.contains("graft/tebis/"))
+    assert(files.size > 50, s"read ${files.size} sources under $root")
+    val decode = "TebisCsv\\.Encoding|\\bparseContent\\(".r
+    val listing = "\\b(globStatus|listStatus)\\(".r
+    val csvLiteral = "(?i)\"[^\"]*\\.csv\"".r
+    val bad = files.flatMap { f =>
+      val code = java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.filterNot {
+        case (line, _) => val t = line.trim; t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+      }
+      def hits(re: scala.util.matching.Regex) = code.collect {
+        case (line, i) if re.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+      }
+      // a listing and a `.csv` name test in one file is a `.csv` listing,
+      // whether or not they share a line
+      val csvListing = if (hits(listing).nonEmpty) hits(csvLiteral) else Nil
+      hits(decode) ++ csvListing
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
   test("Catalog.save releases its own checkpoint blocks") {
     import spark.implicits._
     SessionHygiene.clear(spark)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tebis.TebisCsv
+import graft.tebis.{TebisCsv, TebisFile}
 
 /** DataSourceV2 read source: `spark.read.format("tebis")` must agree
   * row-for-row with the typed TebisCsv path, plan one partition per file,
@@ -179,6 +179,36 @@ class TebisSourceSpec extends AnyFunSuite {
       val perSeries = (root: String) => read(root).groupBy("externalId")
         .agg(count(lit(1)).as("n")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(perSeries(scheme) == Map("33" -> 5L, "34" -> 3L, "35" -> 3L))
+    } finally {
+      hc.unset("fs.tebistest.impl")
+      hc.unset("fs.tebistest.impl.disable.cache")
+    }
+  }
+
+  test("TebisCsv.files and the live stream read through the session's Hadoop conf too") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.tebistest.impl", classOf[SchemeLocalFs].getName)
+    hc.set("fs.tebistest.impl.disable.cache", "true")
+    try {
+      type Point = (String, Long, Double)
+      def points(fs: Seq[TebisFile]): Set[Point] = fs.filter(_.error.isEmpty)
+        .flatMap(_.datapoints).map(d => (d.externalId, d.timestampMs, d.value)).toSet
+      val local = points(TebisCsv.files(spark, Seq(dir.toString)).collect().toSeq)
+      val scheme = s"tebistest://${dir.toUri.getPath}"
+      assert(points(TebisCsv.files(spark, Seq(scheme)).collect().toSeq) == local && local.size == 11)
+      // live tasks open each settled file through the carried conf
+      val in = Files.createTempDirectory("tebis-scheme-live")
+      Files.list(dir).forEach(f => if (f.toString.endsWith(".csv")) Files.copy(f, in.resolve(f.getFileName)))
+      val ckpt = Files.createTempDirectory("tebis-scheme-ckpt")
+      RecordingClient.reset()
+      val q = graft.streaming.LiveStream.start(spark,
+        graft.streaming.LiveStream.Config(s"tebistest://${in.toUri.getPath}", ckpt.toString,
+          triggerMs = 100L),
+        new RecordingClient)
+      try q.processAllAvailable() finally q.stop()
+      val live = RecordingClient.all.flatten
+        .flatMap(s => s.datapoints.map(d => (s.externalId, d.timestampMs, d.value))).toSet
+      assert(live == local)
     } finally {
       hc.unset("fs.tebistest.impl")
       hc.unset("fs.tebistest.impl.disable.cache")
