@@ -1711,7 +1711,7 @@ object Corpus {
       .select(col("doc_id"), col("g.pos").as("pos"), col("g.phrase").as("phrase"))
 
   /** The positional trigram stream over `<dir>/documents.parquet`, mined
-    * ONCE per corpus version and persisted ([[Memo.persistedFrame]] —
+    * ONCE per corpus version and persisted ([[Memo.sharedFrame]] —
     * the persistedIvfIndexDir discipline): at 100x the stream mine is
     * token-volume (~31 s) and BOTH q115 and q178 were re-paying it.
     * This IS the positional index materialization the q115 Scaladoc

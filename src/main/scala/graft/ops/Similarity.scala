@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.{lshKeys, pqAdcSum, quantizedDot}
 import graft.queries.{QueryDef, Tuning}
 import graft.queries.QueryDef._
-import graft.util.ParquetTables
+import graft.util.{FsUtil, ParquetTables}
 
 /** Similarity search over `embeddings` (★ SURVEY §2c): cosine top-k —
   * brute force as the exact baseline, multi-table random-hyperplane LSH
@@ -837,8 +837,8 @@ object Similarity {
     * once per batch, next to the centroids parquet read they already
     * do. */
   def checkBuildConsistency(spark: SparkSession, indexDir: String): Unit = {
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(indexDir))
-    def marker(sub: String) = readSmallFile(fs,
+    val fs = FsUtil.fsOf(spark, new org.apache.hadoop.fs.Path(indexDir))
+    def marker(sub: String) = FsUtil.readSmallFile(fs,
       new org.apache.hadoop.fs.Path(s"$indexDir/$sub", BuildMarker))
     (marker("assignments"), marker("centroids")) match {
       case (Some(a), Some(c)) if a != c => throw new IllegalStateException(
@@ -866,33 +866,11 @@ object Similarity {
   private def writeCentroidsSwapped(spark: SparkSession, cents: DataFrame,
       indexDir: String, buildId: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
-    val fs = fsOf(spark, live)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$indexDir/centroids.tmp-${ProcessHandle.current().pid()}")
-    val old = new org.apache.hadoop.fs.Path(s"$indexDir/centroids.old")
-    cents.write.mode("overwrite").parquet(tmp.toString)
-    writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, BuildMarker),
-      buildId)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live))
-      graft.util.FsUtil.renameOrThrow(fs, live, old)
-    graft.util.FsUtil.renameOrThrow(fs, tmp, live)
-  }
-
-  /** Delete `*.tmp-<pid>` build leftovers older than the lock-stale
-    * window: a crashed builder's orphan (named with ITS pid) would
-    * otherwise accumulate forever — the same-pid delete above only
-    * covers a retry in the same process. */
-  private def sweepStaleTmp(fs: org.apache.hadoop.fs.FileSystem,
-      indexDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    if (!fs.exists(root)) return
-    val cutoff = System.currentTimeMillis() - IndexLockStaleMs
-    fs.listStatus(root).filter(_.isDirectory)
-      .filter(st => st.getPath.getName.matches(
-        "(assignments|centroids)\\.tmp-\\d+") &&
-        st.getModificationTime < cutoff)
-      .foreach(st => fs.delete(st.getPath, true))
+    val fs = FsUtil.fsOf(spark, live)
+    FsUtil.replaceDir(fs, live) { tmp =>
+      cents.write.mode("overwrite").parquet(tmp.toString)
+      FsUtil.writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, BuildMarker), buildId)
+    }
   }
 
   /** Bucket count of the persisted assignments table. 32 matches the
@@ -921,22 +899,13 @@ object Similarity {
     * claim, under which a bucketed join silently drops matching pairs. */
   private val BucketsMarker = "_graft_buckets"
 
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    graft.util.FsUtil.fsOf(spark, p)
-  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, content: String): Unit =
-    graft.util.FsUtil.writeSmallFile(fs, p, content)
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    graft.util.FsUtil.readSmallFile(fs, p)
-
   /** The recorded bucket count of an assignments dir: Some(n) iff the
     * writer's marker says the files are bucketed INTO n BY cent_id.
     * Legacy plain-parquet dirs (no marker) read as unbucketed —
     * correctness never depends on the claim, only the Exchange does. */
   private def bucketMarker(spark: SparkSession, dir: String): Option[Int] = {
     val p = new org.apache.hadoop.fs.Path(dir, BucketsMarker)
-    readSmallFile(fsOf(spark, p), p).flatMap { s =>
+    FsUtil.readSmallFile(FsUtil.fsOf(spark, p), p).flatMap { s =>
       s.split(":") match {
         case Array(n, "cent_id") => n.toIntOption
         case _ => None
@@ -955,7 +924,7 @@ object Similarity {
       buckets: Int = IvfIndexBuckets): Unit = {
     val p = new org.apache.hadoop.fs.Path(
       s"$indexDir/assignments", BucketsMarker)
-    writeSmallFile(fsOf(spark, p), p, s"$buckets:cent_id")
+    FsUtil.writeSmallFile(FsUtil.fsOf(spark, p), p, s"$buckets:cent_id")
   }
 
   /** Persist an assignments frame as a cent_id-BUCKETED, cent_id-sorted
@@ -971,8 +940,8 @@ object Similarity {
     * bucket, so the per-file sort metadata survives and the SMJ's sort
     * is elided too.
     *
-    * Build-into-tmp + swap (r12 — r11 ADVICE): the r11 form deleted the
-    * live directory BEFORE the lazy write job ran, so a retrain whose
+    * Build-into-tmp + swap ([[FsUtil.replaceDir]]): the r11 form deleted
+    * the live directory BEFORE the lazy write job ran, so a retrain whose
     * input derives from that same directory (the documented
     * [[saveIvfIndexOn]]-over-base∪appends recipe) destroyed its own
     * input. Now the write job runs against the intact live index into
@@ -984,29 +953,21 @@ object Similarity {
   private def writeAssignmentsBucketed(spark: SparkSession, asg: DataFrame,
       indexDir: String, buildId: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(s"$indexDir/assignments")
-    val fs = fsOf(spark, live)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$indexDir/assignments.tmp-${ProcessHandle.current().pid()}")
-    val old = new org.apache.hadoop.fs.Path(s"$indexDir/assignments.old")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    sweepStaleTmp(fs, indexDir) // crashed builders' orphans (other pids)
+    val fs = FsUtil.fsOf(spark, live)
     val tname = ivfTableName(indexDir)
     val buildName = tname + "_build"
-    spark.sql(s"DROP TABLE IF EXISTS $buildName")
-    asg.repartition(IvfIndexBuckets, col("cent_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(IvfIndexBuckets, "cent_id").sortBy("cent_id")
-      .option("path", tmp.toString)
-      .saveAsTable(buildName)
-    spark.sql(s"DROP TABLE IF EXISTS $buildName") // external: files stay
-    writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, BucketsMarker),
-      s"$IvfIndexBuckets:cent_id")
-    writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, BuildMarker),
-      buildId)
-    if (fs.exists(old)) fs.delete(old, true) // previous cycle's grace copy
-    if (fs.exists(live))
-      graft.util.FsUtil.renameOrThrow(fs, live, old)
-    graft.util.FsUtil.renameOrThrow(fs, tmp, live)
+    FsUtil.replaceDir(fs, live) { tmp =>
+      spark.sql(s"DROP TABLE IF EXISTS $buildName")
+      asg.repartition(IvfIndexBuckets, col("cent_id"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(IvfIndexBuckets, "cent_id").sortBy("cent_id")
+        .option("path", tmp.toString)
+        .saveAsTable(buildName)
+      spark.sql(s"DROP TABLE IF EXISTS $buildName") // external: files stay
+      FsUtil.writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, BucketsMarker),
+        s"$IvfIndexBuckets:cent_id")
+      FsUtil.writeSmallFile(fs, new org.apache.hadoop.fs.Path(tmp, BuildMarker), buildId)
+    }
     // stale catalog entries must not survive the rebuild; consumers
     // re-register lazily from the marker
     spark.sql(s"DROP TABLE IF EXISTS $tname")
@@ -1399,8 +1360,8 @@ object Similarity {
     * take the cross-JVM lock file, re-check (another session may have
     * won the race), build, stamp the fingerprint, release. A builder
     * that finds the lock held waits for the winner and adopts; a lock
-    * older than [[IndexLockStaleMs]] is a crashed builder and is
-    * broken. */
+    * older than [[graft.util.SharedArtifact.StaleMs]] is a crashed
+    * builder and is broken. */
   private def buildSharedIndex(spark: SparkSession, dir: String,
       idx: String): Unit =
     sharedArtifact(spark, dir, idx)(
@@ -1416,10 +1377,6 @@ object Similarity {
       structure: => Boolean)(build: => Unit): Unit =
     graft.util.SharedArtifact.ensure(spark, idx, cacheKeyDir(spark, dir))(
       structure)(build)
-
-  /** Stale window of the shared-artifact build lock — re-exported for
-    * [[sweepStaleTmp]]'s crashed-builder cutoff. */
-  private def IndexLockStaleMs = graft.util.SharedArtifact.StaleMs
 
   /** Undirected near-dup pairs over the persisted IVF candidates — the
     * scale-path pair source for [[rpDistortionOn]] (q153): canonicalize
@@ -1896,7 +1853,7 @@ object Similarity {
     * 434 s lesson) never exists; hit-counting joins are top-k-row
     * sized. The truth table — by far the dominant cost (the exact
     * sample×corpus sweep) and a pure function of (corpus, k,
-    * sampleMod) — is memoized via [[Memo.persistedFrame]]: every
+    * sampleMod) — is memoized via [[Memo.sharedFrame]]: every
     * nprobe/threshold re-tune against the same corpus version reads
     * sample·k rows of parquet instead of repaying the sweep (the
     * builder and warm path share this construction, so the oracle is
@@ -3011,7 +2968,7 @@ object Similarity {
     val idx = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-stream-" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_")
     streamIdxCache.getOrElseUpdate(s"${cacheKeyDir(spark, dir)}->$idx", {
-      val fs = fsOf(spark, new org.apache.hadoop.fs.Path(idx))
+      val fs = FsUtil.fsOf(spark, new org.apache.hadoop.fs.Path(idx))
       sharedArtifact(spark, dir, idx)(
         bucketMarker(spark, s"$idx/assignments").nonEmpty &&
           fs.exists(new org.apache.hadoop.fs.Path(s"$idx/appends/batch_id=0"))) {

@@ -327,12 +327,12 @@ object TextStats {
       .select("doc_id", "source", "n_tokens", "score_int", "rules", "q_micro")
 
   /** [[clfScored]] over `<dir>/documents.parquet`, built once per corpus
-    * version and persisted ([[Memo.persistedFrame]]); every classifier
+    * version and persisted ([[Memo.sharedFrame]]); every classifier
     * consumer below loads this. Oracles are unchanged — they recompute
     * from text, and the driver's hash compare gates identity. */
   private[graft] def clfScoredPersisted(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    Memo.persistedFrame(spark, dir, "documents", "clf-scored")(
+    Memo.sharedFrame(spark, dir, "documents", "clf-scored")(
       clfScored(t(spark, dir, "documents")))
 
   /** Linear scorer over hashed token features (q152). Entirely ONE

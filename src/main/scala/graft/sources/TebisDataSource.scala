@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
@@ -63,10 +64,12 @@ object TebisDataSource {
   val Schema: StructType = StructType.fromDDL(
     "path STRING, externalId STRING, name STRING, timestampMs BIGINT, value DOUBLE")
 
+  /** `load(paths*)` hands the roots over as the JSON string array Spark
+    * writes into the `paths` option; `load(path)` as the plain `path`. */
   private def paths(properties: util.Map[String, String]): Seq[String] = {
     val opts = properties.asScala
     val raw = opts.get("paths")
-      .map(p => p.stripPrefix("[").stripSuffix("]").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
+      .map(p => new ObjectMapper().readValue(p, classOf[Array[String]]).toSeq)
       .orElse(opts.get("path").map(Seq(_)))
       .getOrElse(throw new IllegalArgumentException("tebis source requires a load(path)"))
     raw.filter(_.nonEmpty)

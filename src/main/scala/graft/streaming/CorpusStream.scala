@@ -122,8 +122,8 @@ object CorpusStream {
     writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
       StreamState.bindLineage(batch.sparkSession, outDir, checkpointDir)
       if (batchId < StreamState.horizon(batch.sparkSession, outDir)) {
-        // replay of a shard-compacted batch: its rows live in the base
-        // generation; readers ignore a re-minted partition — skip the
+        // replay of a shard-compacted batch: its rows live in a base
+        // run; readers ignore a re-minted partition — skip the
         // write AND the metrics re-push
         ()
       } else {
@@ -184,7 +184,7 @@ object CorpusStream {
       if (batchId < math.max(StreamState.horizon(spark, s"$stateDir/bands"),
           StreamState.horizon(spark, outDir))) {
         // replay of an already-COMPACTED batch (state or shard side):
-        // its rows live in the base generations and readers ignore its
+        // its rows live in the base runs and readers ignore its
         // partitions — skip the wasted rewrite entirely (StreamState's
         // no-op contract)
         ()
@@ -250,8 +250,8 @@ object CorpusStream {
   /** Compact the near-dedup state (bands + grams) up to `upToBatch` —
     * SIZE-TIERED since r13 (VERDICT ask 1): both tables are row-per-fact
     * identity merges (a band key claim, a rep's shingle set) but
-    * CORPUS-scale — rows per admitted document forever — so the r12
-    * full-generation fold paid O(corpus) per maintenance window, the
+    * CORPUS-scale — rows per admitted document forever — so a
+    * full-rewrite fold would pay O(corpus) per maintenance window, the
     * exact non-starter [[StreamState.compactShardsTiered]] removed on
     * the shard side. They now ride the same geometric cascade:
     * O(new data · log corpus) amortized, the corpus-scale grams run's

@@ -58,15 +58,15 @@ object IndexStream {
   /** Compact the streamed appends up to `upToBatch` — SIZE-TIERED
     * identity merge since r13 ([[StreamState.compactShardsTiered]]):
     * assignment rows are facts, and appends grow with ingest volume
-    * between retrains, so the r12 full-generation fold paid
+    * between retrains, so a full-rewrite fold would pay
     * O(appends-so-far) per maintenance window while the cascade pays
     * O(new · log). Thousands of per-trigger partitions become O(log)
     * runs, so the live view's listing and scan stop growing with
     * trigger count. Folding appends further into the BUCKETED base
     * assignments table is deliberately a retrain-time operation
     * ([[Similarity.saveIvfIndexOn]] over the union) — an in-place base
-    * append could double rows under a crash, while the run/generation
-    * swap is convergent. */
+    * append could double rows under a crash, while the run cascade is
+    * convergent. */
   def compactAppends(spark: SparkSession, indexDir: String,
       upToBatch: Long): Unit =
     StreamState.compactShardsTiered(spark, s"$indexDir/appends", upToBatch)
@@ -76,8 +76,9 @@ object IndexStream {
     * now a real call): fresh Lloyd train + assignment over base ∪
     * appends, written THROUGH the r12 tmp+swap path (the build reads
     * the live index while it still exists — no caller-side checkpoint
-    * needed), then the folded appends collapse to an EMPTY generation
-    * at `upToBatch`, so a replayed pre-retrain batch stays a no-op (its
+    * needed), then the folded appends collapse to an EMPTY run
+    * `base/run=0-upToBatch` covering every earlier run, so the horizon
+    * is `upToBatch` and a replayed pre-retrain batch stays a no-op (its
     * rows now live in the base; re-minting them as appends — assigned
     * against the OLD centroids — would both double the rows and mix
     * stale cells into the new index).
@@ -133,13 +134,12 @@ object IndexStream {
       .select("vec_id", "qv", "nrm")
     Similarity.saveIvfIndexOn(spark, live, indexDir)
     if (hadAppends) {
-      // the folded appends collapse to an EMPTY generation at (at
-      // least) the old horizon — written directly, not via compact():
-      // a previously compacted generation holds PRE-RETRAIN rows that
-      // are now in the base, and compact() would keep them
+      // the folded appends collapse to an EMPTY run covering [0, at
+      // least the old horizon): every earlier run lies inside it, so all
+      // of them — PRE-RETRAIN rows now in the base — are superseded
       val target = math.max(StreamState.horizon(spark, appDir), upToBatch)
       Similarity.assignmentsRead(spark, indexDir).limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(s"$appDir/base/gen=$target")
+        .write.mode("overwrite").parquet(s"$appDir/base/run=0-$target")
       StreamState.gc(spark, appDir) // quiescent by contract: collect now
     }
   }
@@ -182,7 +182,7 @@ object IndexStream {
   }
 
   /** The live assignments view of a streamed index: the base table plus
-    * every streamed append (base generation ∪ live partitions). None-
+    * every streamed append (live runs ∪ live partitions). None-
     * append indexes read as plain persisted ones (the appends directory
     * may not exist yet). */
   def assignments(spark: SparkSession, indexDir: String): DataFrame = {

@@ -121,7 +121,7 @@ object SftStream {
       if (batchId < math.max(StreamState.horizon(spark, s"$stateDir/turnfps"),
           StreamState.horizon(spark, outDir))) {
         // replay of a compacted batch (state OR shard side) — the base
-        // generations already carry it; writing again would re-admit
+        // runs already carry it; writing again would re-admit
         // against a pruned state view / re-mint an ignored shard dir
         ()
       } else {
@@ -150,8 +150,8 @@ object SftStream {
   /** Compact the admitted-turn fingerprint state up to `upToBatch` —
     * SIZE-TIERED with a DISTINCT merge since r13 (VERDICT ask 1):
     * (role, fp) is a set-membership fact growing with the admitted
-    * distinct-turn cardinality — corpus-scale — so the full-generation
-    * fold paid O(state) per window; the tiered cascade pays
+    * distinct-turn cardinality — corpus-scale — so a full-rewrite
+    * fold would pay O(state) per window; the tiered cascade pays
     * O(new · log state) and a steady-state window never rewrites the
     * big old runs. The distinct merge is union-closed (distinct of a
     * union == distinct of distincts) and sheds any crash-window
@@ -166,7 +166,7 @@ object SftStream {
   /** Live role-balance card over everything admitted so far — batch
     * q255's own rollup ([[Conversations.roleBalanceOnTurns]]) on the
     * landed shards, read through [[StreamState]] so shard-compacted
-    * output (base generation + recent batches) answers identically. */
+    * output (base runs + recent batches) answers identically. */
   def liveRoleBalance(spark: SparkSession, outDir: String): DataFrame =
     Conversations.roleBalanceOnTurns(
       StreamState.read(spark, outDir)

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Generation-compacted batch-id-partitioned streaming state (r11 —
-  * VERDICT ask 2; r12 — tiered shard runs, retention, lineage).
+import graft.util.FsUtil
+
+/** Size-tiered batch-id-partitioned streaming state and shard output.
   *
   * Every foreachBatch stream family persists its cross-batch state as
   * one parquet partition per micro-batch (`stateDir/batch_id=N`,
@@ -17,34 +17,31 @@ import org.apache.spark.sql.functions._
   *
   * This object collapses history while keeping every replay guarantee:
   *
-  *   - KEY-SCALE STATE compacts into a single base GENERATION
-  *     (`stateDir/base/gen=H`: all batches < H merged) — rewriting the
-  *     whole base per maintenance window is the right shape when the
-  *     merged state is bounded by key cardinality ([[compact]]).
-  *   - CORPUS-SCALE SHARD OUTPUT — and, since r13, CORPUS-SCALE STATE —
-  *     compacts into SIZE-TIERED RUNS (`outDir/base/run=lo-hi`: batches
-  *     [lo, hi) merged) with a geometric merge cascade, so amortized
-  *     compaction work is O(new data · log corpus), never O(corpus) per
-  *     call ([[compactShardsTiered]] — r12, VERDICT ask 2). The cascade
-  *     is MERGE-AWARE (r13, VERDICT ask 1): re-aggregating families
-  *     (chunk-index partial sums, KMV trims) pass their merge function
-  *     and it applies at every run fold — the LSM discipline.
-  *   - READERS resolve the horizon H from COMPLETE artifacts only
-  *     (Spark's `_SUCCESS` marker — a crashed compaction write is
-  *     simply not a generation/run) and IGNORE partitions below H, so
-  *     a replayed already-compacted batch that rewrites `batch_id=N`
-  *     (N < H) is a no-op by construction. The stream-side guard
-  *     ([[horizon]]) additionally skips the wasted write.
-  *   - COMPACTION is crash-safe by never mutating in place, and
-  *     (r12 — VERDICT ask 8) deletes with a ONE-CYCLE GRACE WINDOW:
-  *     each call first garbage-collects only artifacts that were
-  *     already superseded when the call STARTED, then writes the new
-  *     generation/run without deleting what it supersedes. A reader
-  *     that resolved the pre-call horizon keeps every file it can see
-  *     until the NEXT maintenance window — a live-card query racing a
-  *     cron'd compaction never loses files mid-scan unless it spans
-  *     two full maintenance cycles (the documented reader contract).
-  *     Re-running always converges; [[gc]] forces collection early.
+  *   - State and shard output compact into SIZE-TIERED RUNS
+  *     (`dir/base/run=lo-hi`: batches [lo, hi) merged) with a geometric
+  *     merge cascade, so amortized compaction work is O(new data · log
+  *     corpus), never O(corpus) per call ([[compactShardsTiered]]). The
+  *     cascade is MERGE-AWARE: re-aggregating families (chunk-index
+  *     partial sums, KMV trims) pass their merge function and it applies
+  *     at every run fold — the LSM discipline.
+  *   - READERS resolve the horizon H from COMPLETE runs only (Spark's
+  *     `_SUCCESS` marker — a crashed compaction write is simply not a
+  *     run) and IGNORE partitions below H, so a replayed
+  *     already-compacted batch that rewrites `batch_id=N` (N < H) is a
+  *     no-op by construction. The stream-side guard ([[horizon]])
+  *     additionally skips the wasted write. A run that covers every
+  *     other (an empty `run=0-H`, what [[IndexStream.retrain]] writes)
+  *     supersedes them all: the table is empty below H.
+  *   - COMPACTION is crash-safe by never mutating in place, and deletes
+  *     with a ONE-CYCLE GRACE WINDOW: each call first garbage-collects
+  *     only artifacts that were already superseded when the call
+  *     STARTED, then writes the new run without deleting what it
+  *     supersedes. A reader that resolved the pre-call horizon keeps
+  *     every file it can see until the NEXT maintenance window — a
+  *     live-card query racing a cron'd compaction never loses files
+  *     mid-scan unless it spans two full maintenance cycles (the
+  *     documented reader contract). Re-running always converges; [[gc]]
+  *     forces collection early.
   *
   * The caller contract is unchanged from the per-family scaladocs:
   * compact between batches with `upToBatch` at most the last COMMITTED
@@ -53,41 +50,24 @@ import org.apache.spark.sql.functions._
   */
 object StreamState {
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    graft.util.FsUtil.fsOf(spark, p)
-
-  private def complete(fs: org.apache.hadoop.fs.FileSystem, p: Path) =
+  private def complete(fs: FileSystem, p: Path) =
     fs.exists(new Path(p, "_SUCCESS"))
 
-  /** Complete base generations of a state table, ascending. */
-  private def generations(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Seq[Long] = {
-    val base = new Path(s"$stateDir/base")
-    if (!fs.exists(base)) return Seq.empty
-    fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("gen="))
-      .filter(p => complete(fs, p))
-      .map(_.getName.stripPrefix("gen=").toLong)
-      .sorted.toSeq
-  }
-
-  /** A tiered shard run `[lo, hi)` and its directory. Bytes are NOT
-    * carried here (r13 — ADVICE r12): [[horizon]] and [[read]] resolve
-    * runs on every micro-batch write guard and every state read, and an
-    * eager `getContentSummary` per run is a full recursive size walk —
-    * the listing cost the tiered design exists to remove. Sizes are
-    * fetched only where they are consumed (the merge cascade,
-    * [[liveBytes]]). */
+  /** A tiered run `[lo, hi)` and its directory. Bytes are NOT carried
+    * here: [[horizon]] and [[read]] resolve runs on every micro-batch
+    * write guard and every state read, and an eager `getContentSummary`
+    * per run is a full recursive size walk — the listing cost the tiered
+    * design exists to remove. Sizes are fetched only where they are
+    * consumed (the merge cascade, [[liveBytes]]). */
   private case class Run(lo: Long, hi: Long, path: Path)
 
   /** Recursive size of one run — paid only by the cascade/liveBytes. */
-  private def runBytes(fs: org.apache.hadoop.fs.FileSystem, r: Run): Long =
+  private def runBytes(fs: FileSystem, r: Run): Long =
     fs.getContentSummary(r.path).getLength
 
-  /** Complete runs of a tiered shard table, ascending by lo — a shallow
-    * one-level name listing plus one `_SUCCESS` probe per run. */
-  private def allRuns(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Seq[Run] = {
+  /** Complete runs of a table, ascending by lo — a shallow one-level
+    * name listing plus one `_SUCCESS` probe per run. */
+  private def allRuns(fs: FileSystem, stateDir: String): Seq[Run] = {
     val base = new Path(s"$stateDir/base")
     if (!fs.exists(base)) return Seq.empty
     fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
@@ -102,28 +82,25 @@ object StreamState {
   /** The LIVE runs: complete runs not contained in another complete run
     * (merges write the exact union of adjacent runs, so a superseded
     * run is strictly contained in its merge product). Invariant: live
-    * runs are disjoint adjacent intervals covering [genHorizon, H). */
+    * runs are disjoint adjacent intervals covering [0, H). */
   private def liveRuns(runs: Seq[Run]): Seq[Run] =
     runs.filterNot(r => runs.exists(o =>
       (o.lo, o.hi) != (r.lo, r.hi) && o.lo <= r.lo && r.hi <= o.hi))
 
-  /** The compaction horizon H of a state table: the newest COMPLETE
-    * base generation or tiered-run upper bound, 0 when never compacted.
-    * Batches < H live in the base; partitions < H are superseded. */
+  /** The compaction horizon H of a state table: the newest COMPLETE run's
+    * upper bound, 0 when never compacted. Batches < H live in the base;
+    * partitions < H are superseded. */
   def horizon(spark: SparkSession, stateDir: String): Long = {
-    val fs = fsOf(spark, new Path(stateDir))
-    val g = generations(fs, stateDir).lastOption.getOrElse(0L)
-    val r = liveRuns(allRuns(fs, stateDir)).map(_.hi).maxOption.getOrElse(0L)
-    math.max(g, r)
+    val fs = FsUtil.fsOf(spark, new Path(stateDir))
+    liveRuns(allRuns(fs, stateDir)).map(_.hi).maxOption.getOrElse(0L)
   }
 
-  /** All live state rows of a table: base generation ∪ live tiered runs
-    * ∪ partitions at or above the horizon, optionally pruned to
-    * `batch_id < current` (the per-batch readers' own-writes guard;
-    * base rows are always < any replayable batch id by the compaction
-    * contract). None while the table has no data at all. The returned
-    * frame carries only DATA columns — batch_id, a physical detail, is
-    * dropped. */
+  /** All live state rows of a table: live runs ∪ partitions at or above
+    * the horizon, optionally pruned to `batch_id < current` (the
+    * per-batch readers' own-writes guard; run rows are always < any
+    * replayable batch id by the compaction contract). None while the
+    * table has no data at all. The returned frame carries only DATA
+    * columns — batch_id, a physical detail, is dropped. */
   def read(spark: SparkSession, stateDir: String,
       current: Long = Long.MaxValue): Option[DataFrame] = {
     val pieces = livePieces(spark, stateDir, current)
@@ -132,19 +109,14 @@ object StreamState {
   }
 
   /** The directories holding exactly one copy of every live row: live
-    * batch partitions (≥ horizon, < current), live tiered runs, the
-    * newest complete generation. */
+    * batch partitions (≥ horizon, < current) and live runs. */
   private def livePieces(spark: SparkSession, stateDir: String,
       current: Long = Long.MaxValue): Seq[Path] = {
     val root = new Path(stateDir)
-    val fs = fsOf(spark, root)
+    val fs = FsUtil.fsOf(spark, root)
     if (!fs.exists(root)) return Seq.empty
-    val gen = generations(fs, stateDir).lastOption
     val runs = liveRuns(allRuns(fs, stateDir))
-      // a run wholly below the generation horizon was folded into the
-      // generation by a legacy full compaction — superseded, skip it
-      .filter(r => r.hi > gen.getOrElse(0L))
-    val h = math.max(gen.getOrElse(0L), runs.map(_.hi).maxOption.getOrElse(0L))
+    val h = runs.map(_.hi).maxOption.getOrElse(0L)
     // prune on the LISTING, not a column: the per-batch partition dirs
     // are read explicitly (never the root — the base/ subdir would trip
     // Spark's partition discovery), so excluded batches cost a name
@@ -155,32 +127,30 @@ object StreamState {
         val id = p.getName.stripPrefix("batch_id=").toLong
         id >= h && id < current
       }
-    liveDirs.toSeq ++ runs.map(_.path) ++
-      gen.map(g => new Path(s"$stateDir/base/gen=$g")).toSeq
+    liveDirs.toSeq ++ runs.map(_.path)
   }
 
   /** Total bytes behind [[read]]'s live view — a LISTING, never a job:
-    * what a caller gates broadcast decisions on (r12 — r11 ADVICE: the
-    * streamed-index quadrant split force-broadcast an appends side that
-    * grows without bound between retrains). None when the table has no
-    * data. */
+    * what a caller gates broadcast decisions on (the streamed-index
+    * quadrant split must not force-broadcast an appends side that grows
+    * without bound between retrains). None when the table has no data. */
   def liveBytes(spark: SparkSession, stateDir: String): Option[Long] = {
     val pieces = livePieces(spark, stateDir)
     if (pieces.isEmpty) None
     else {
-      // r13 (VERDICT ask 7): the recursive size walks are cached per
-      // LIVE-PIECE SET — the piece list itself is a shallow listing, and
-      // it changes exactly when a batch lands or a compaction runs, so a
-      // fleet-QPS query path (the streamed-index splitFits gate calls
-      // this per query) pays zero redundant object-store walks between
-      // state changes. Pieces are write-once (runs/generations by the
-      // swap discipline; a batch partition is only ever rewritten
-      // bit-identically on replay), so a cached sum never goes stale.
+      // the recursive size walks are cached per LIVE-PIECE SET — the
+      // piece list itself is a shallow listing, and it changes exactly
+      // when a batch lands or a compaction runs, so a fleet-QPS query
+      // path (the streamed-index splitFits gate calls this per query)
+      // pays zero redundant object-store walks between state changes.
+      // Pieces are write-once (runs are never rewritten in place; a
+      // batch partition is only ever rewritten bit-identically on
+      // replay), so a cached sum never goes stale.
       val key = stateDir + "#" + pieces.map(_.toString).sorted.mkString("|")
       if (bytesCache.size > 4096) bytesCache.clear()
       Some(bytesCache.getOrElseUpdate(key, {
         contentSummaryCalls.incrementAndGet()
-        val fs = fsOf(spark, new Path(stateDir))
+        val fs = FsUtil.fsOf(spark, new Path(stateDir))
         pieces.map(p => fs.getContentSummary(p).getLength).sum
       }))
     }
@@ -189,54 +159,37 @@ object StreamState {
   private val bytesCache =
     scala.collection.concurrent.TrieMap.empty[String, Long]
 
-  /** Test hook (r13): how many times [[liveBytes]] paid the recursive
-    * size walk (one increment per cache MISS, however many pieces). */
+  /** Test hook: how many times [[liveBytes]] paid the recursive size
+    * walk (one increment per cache MISS, however many pieces). */
   private[graft] val contentSummaryCalls =
     new java.util.concurrent.atomic.AtomicLong
 
   /** The last batch id the streaming CHECKPOINT has committed — read
     * from the checkpoint's `commits/` log (a commit file exists iff the
     * batch completed fully, so a restart resumes AFTER it). This is the
-    * safe compaction horizon made mechanical: `compact(...,
+    * safe compaction horizon made mechanical: `compactShardsTiered(...,
     * lastCommittedBatch + 1)` can never fold a batch that might still
     * replay, which the per-family scaladocs otherwise leave to the
     * caller's discipline. None before the first commit. */
   def lastCommittedBatch(spark: SparkSession,
       checkpointDir: String): Option[Long] = {
     val p = new Path(s"$checkpointDir/commits")
-    val fs = fsOf(spark, p)
+    val fs = FsUtil.fsOf(spark, p)
     if (!fs.exists(p)) None
     else fs.listStatus(p).map(_.getPath.getName)
       .filter(n => n.nonEmpty && n.forall(_.isDigit))
       .map(_.toLong).maxOption
   }
 
-  /** Compact a batch-id-keyed SHARD OUTPUT directory — the admitted-data
-    * twin of state compaction, [[compactShardsTiered]] since r12:
-    * shards are CORPUS-scale where state is key-scale, so the full
-    * base rewrite [[compact]] pays (O(corpus) per maintenance window —
-    * at 100 TB a non-starter) becomes size-tiered runs whose amortized
-    * cost is O(new data · log corpus). Readers that resolve through
-    * [[read]] see the identical row set; a replayed compacted batch
-    * that recreates its `batch_id=N` directory is ignored on read and
-    * skipped by the families' write guards. The reference's 8 s live
-    * trigger mints ~10k shard directories/day — the same listing storm
-    * the state side had. */
-  def compactShards(spark: SparkSession, outDir: String, upToBatch: Long,
-      numFiles: Int = 8): Unit =
-    compactShardsTiered(spark, outDir, upToBatch, numFiles)
-
-  /** Geometric merge factor of the tiered shard cascade: a newer run
-    * merges into its older neighbor while the neighbor holds at most
-    * this many times its bytes, so run sizes grow geometrically
-    * oldest → newest and the live run count stays
-    * O(log_F(corpus / trigger)). Every row is rewritten O(log) times
-    * over the table's lifetime — vs once per maintenance window under
-    * the full-rewrite shape. */
+  /** Geometric merge factor of the tiered cascade: a newer run merges
+    * into its older neighbor while the neighbor holds at most this many
+    * times its bytes, so run sizes grow geometrically oldest → newest
+    * and the live run count stays O(log_F(corpus / trigger)). Every row
+    * is rewritten O(log) times over the table's lifetime — vs once per
+    * maintenance window under a full-rewrite shape. */
   val ShardMergeFactor = 4L
 
-  /** Size-tiered shard compaction (r12 — VERDICT ask 2; merge-aware
-    * r13 — VERDICT ask 1):
+  /** Size-tiered compaction of a batch-id-keyed state or shard table:
     *
     *   1. fold the live partitions [H, upToBatch) through `merge` into
     *      ONE new run `base/run=H-upToBatch` — O(new data) always;
@@ -258,19 +211,20 @@ object StreamState {
     * do ([[graft.streaming.CorpusStream.liveChunkDupCard]] re-sums,
     * [[graft.streaming.CorpusStream.kmvLive]] re-trims).
     *
-    * Crash-safe and replay-convergent exactly like [[compact]]: a run
-    * is visible only once `_SUCCESS` exists; merges write the NEW run
-    * before the inputs become (containment-)superseded; deletes happen
-    * one maintenance cycle later ([[gc]] semantics). Readers see one
-    * copy of every row at all times ([[liveRuns]] picks maximal
-    * intervals). */
+    * Crash-safe and replay-convergent: a run is visible only once
+    * `_SUCCESS` exists; merges write the NEW run before the inputs
+    * become (containment-)superseded; deletes happen one maintenance
+    * cycle later ([[gc]] semantics). Readers see one copy of every row
+    * at all times ([[liveRuns]] picks maximal intervals). The folding
+    * partitions are read as ONE multi-path scan (a per-partition
+    * `reduce(unionByName)` builds an N-deep Union the analyzer walks
+    * quadratically). */
   def compactShardsTiered(spark: SparkSession, outDir: String,
       upToBatch: Long, numFiles: Int = 8,
-      mergeFactor: Long = ShardMergeFactor,
       merge: DataFrame => DataFrame = identity): Unit = {
     require(upToBatch > 0, s"upToBatch must be positive, got $upToBatch")
     val root = new Path(outDir)
-    val fs = fsOf(spark, root)
+    val fs = FsUtil.fsOf(spark, root)
     if (!fs.exists(root)) return
     val h = horizon(spark, outDir)
     gc(spark, outDir) // one-cycle grace: collect pre-call garbage only
@@ -287,17 +241,16 @@ object StreamState {
     }
     // cascade adjacent merges, newest first, geometric admission; run
     // sizes are fetched here — the only consumer — never in the
-    // horizon/read listings (r13, ADVICE r12)
+    // horizon/read listings
     var merged = true
     while (merged) {
       merged = false
-      val gen = generations(fs, outDir).lastOption.getOrElse(0L)
-      val live = liveRuns(allRuns(fs, outDir)).filter(_.hi > gen)
+      val live = liveRuns(allRuns(fs, outDir))
       if (live.size >= 2) {
         val last = live.last
         val prev = live(live.size - 2)
         val (prevBytes, lastBytes) = (runBytes(fs, prev), runBytes(fs, last))
-        if (prev.hi == last.lo && prevBytes <= mergeFactor * lastBytes) {
+        if (prev.hi == last.lo && prevBytes <= ShardMergeFactor * lastBytes) {
           val nf = math.max(numFiles.toLong,
             (prevBytes + lastBytes) / (128L << 20) + 1).toInt
           merge(spark.read.parquet(prev.path.toString, last.path.toString))
@@ -310,94 +263,32 @@ object StreamState {
   }
 
   /** Garbage-collect artifacts superseded below the CURRENT horizon:
-    * generations and runs shadowed by a newer complete one, incomplete
-    * crash leftovers, and batch partitions below the horizon. Called
+    * runs shadowed by a covering complete one, incomplete crash
+    * leftovers, and batch partitions below the horizon. Called
     * automatically at the START of every compaction (so each call
     * collects only what the PREVIOUS call superseded — the one-cycle
-    * reader grace window, r12 VERDICT ask 8); call directly to collect
-    * early when no readers can be racing. */
+    * reader grace window); call directly to collect early when no
+    * readers can be racing. */
   def gc(spark: SparkSession, stateDir: String): Unit = {
     val root = new Path(stateDir)
-    val fs = fsOf(spark, root)
+    val fs = FsUtil.fsOf(spark, root)
     if (!fs.exists(root)) return
     val base = new Path(s"$stateDir/base")
-    val gens = generations(fs, stateDir)
-    val gh = gens.lastOption.getOrElse(0L)
-    val runs = allRuns(fs, stateDir)
-    val live = liveRuns(runs).filter(_.hi > gh).map(r => (r.lo, r.hi)).toSet
-    val h = math.max(gh, live.map(_._2).maxOption.getOrElse(0L))
+    val live = liveRuns(allRuns(fs, stateDir)).map(r => (r.lo, r.hi)).toSet
+    val h = live.map(_._2).maxOption.getOrElse(0L)
     if (fs.exists(base)) {
-      fs.listStatus(base).filter(_.isDirectory).map(_.getPath).foreach { p =>
-        val name = p.getName
-        val dead =
-          if (name.startsWith("gen="))
-            name != s"gen=$gh" || gens.isEmpty
-          else if (name.startsWith("run=")) {
-            val Array(lo, hi) = name.stripPrefix("run=").split("-")
-            !complete(fs, p) || !live.contains((lo.toLong, hi.toLong))
-          } else false
-        if (dead) fs.delete(p, true)
-      }
+      fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
+        .filter(_.getName.startsWith("run="))
+        .filter { p =>
+          val Array(lo, hi) = p.getName.stripPrefix("run=").split("-")
+          !complete(fs, p) || !live.contains((lo.toLong, hi.toLong))
+        }
+        .foreach(p => fs.delete(p, true))
     }
     fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith("batch_id="))
       .filter(_.getName.stripPrefix("batch_id=").toLong < h)
       .foreach(p => fs.delete(p, true))
-  }
-
-  /** Compact a state table up to (excluding) `upToBatch`: merge the
-    * current base generation and every partition in [H, upToBatch)
-    * through `merge` (identity for row-per-fact tables; a re-aggregate
-    * for partial-sum tables; a re-trim for sketch tables) into
-    * `base/gen=upToBatch`. No-op when nothing below `upToBatch`
-    * exists. `numFiles` sizes the base write (state is usually small; a
-    * 100 TB deployment passes its own parallelism). Superseded
-    * artifacts are collected by the NEXT maintenance call ([[gc]] —
-    * the one-cycle reader grace window). The folding partitions are
-    * read as ONE multi-path scan (r12 — the r11 per-partition
-    * `reduce(unionByName)` built an N-deep Union the analyzer walked
-    * quadratically; most of the measured 117 s 1000-partition
-    * compaction cost was that plan, not the I/O). */
-  def compact(spark: SparkSession, stateDir: String, upToBatch: Long,
-      merge: DataFrame => DataFrame = identity, numFiles: Int = 1): Unit = {
-    require(upToBatch > 0, s"upToBatch must be positive, got $upToBatch")
-    val root = new Path(stateDir)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return
-    require(allRuns(fs, stateDir).isEmpty,
-      s"$stateDir uses tiered shard runs; use compactShardsTiered " +
-        "(a generation fold would drop the runs' rows)")
-    val h = horizon(spark, stateDir)
-    // gc BEFORE the already-compacted early return (r13 — ADVICE r12):
-    // an idempotent re-call at the same upToBatch must still collect the
-    // previous cycle's grace copies, or garbage persists until a call
-    // with a strictly larger horizon (the tiered path gc's
-    // unconditionally; this matches it)
-    gc(spark, stateDir) // one-cycle grace: collect pre-call garbage only
-    if (upToBatch <= h) return // already compacted past this point
-    val folding = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch_id="))
-      .filter { p =>
-        val id = p.getName.stripPrefix("batch_id=").toLong
-        id >= h && id < upToBatch
-      }
-    if (folding.isEmpty && h == 0L) return // nothing to fold, no base
-    val live =
-      if (folding.isEmpty) None
-      else Some(spark.read.parquet(folding.map(_.toString).toSeq: _*))
-    val base =
-      if (h == 0L) None
-      else Some(spark.read.parquet(s"$stateDir/base/gen=$h"))
-    val all = (live, base) match {
-      case (Some(l), Some(b)) => l.unionByName(b)
-      case (l, b) => l.orElse(b).get
-    }
-    merge(all).coalesce(numFiles).write.mode("overwrite")
-      .parquet(s"$stateDir/base/gen=$upToBatch")
-    // the new generation is complete (its _SUCCESS exists); everything
-    // it supersedes — the old generation, the folded partitions, crash
-    // leftovers — stays on disk until the next maintenance call's gc()
-    // so a reader that resolved the old horizon never loses files
   }
 
   // ---------------------------------------------------------------------
@@ -425,9 +316,9 @@ object StreamState {
       checkpointDir: String): Unit =
     lineageOk.getOrElseUpdate((dir, checkpointDir), {
       val root = new Path(dir)
-      val fs = fsOf(spark, root)
+      val fs = FsUtil.fsOf(spark, root)
       val f = new Path(root, LineageFile)
-      graft.util.FsUtil.readSmallFile(fs, f) match {
+      FsUtil.readSmallFile(fs, f) match {
         case Some(recorded) =>
           if (recorded != checkpointDir)
           throw new IllegalStateException(
@@ -441,7 +332,7 @@ object StreamState {
               "use a fresh state/output dir.")
         case None =>
           fs.mkdirs(root)
-          graft.util.FsUtil.writeSmallFile(fs, f, checkpointDir)
+          FsUtil.writeSmallFile(fs, f, checkpointDir)
       }
     })
 
@@ -452,10 +343,9 @@ object StreamState {
   def adoptLineage(spark: SparkSession, dir: String,
       checkpointDir: String): Unit = {
     val root = new Path(dir)
-    val fs = fsOf(spark, root)
+    val fs = FsUtil.fsOf(spark, root)
     fs.mkdirs(root)
-    graft.util.FsUtil.writeSmallFile(fs, new Path(root, LineageFile),
-      checkpointDir)
+    FsUtil.writeSmallFile(fs, new Path(root, LineageFile), checkpointDir)
     lineageOk.clear()
   }
 }

@@ -1,7 +1,10 @@
 package graft.tebis
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.FsUtil
 
 /** Time-series catalog metadata (reference TimeSeries create,
   * csv_extractor.py:107-112). */
@@ -28,19 +31,16 @@ object Catalog {
     spark.read.schema(enc.schema).parquet(path).as(enc)
   }
 
-  /** The upserted catalog's plan usually still READS `path` (union with
-    * the existing snapshot) — Spark refuses overwrite-while-reading, so
-    * materialize first (localCheckpoint: the snapshot is tiny, single-use,
-    * and trivially recomputable — no need for a reliable checkpoint). The
-    * pinned blocks are released once the write completes. */
+  /** Writes the catalog through [[graft.util.FsUtil.replaceDir]]: the
+    * write job runs into a temp directory while `path` is intact, so a
+    * plan that reads `path` (the upsert's union with the existing
+    * snapshot) needs no barrier, and a failed write leaves the previous
+    * catalog as it was. The temp copy is O(series), not O(datapoints);
+    * the two renames are the only window in which `path` is absent. */
   def save(catalog: Dataset[TimeSeriesMeta], path: String): Unit = {
-    val sc = catalog.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val snap = catalog.localCheckpoint()
-    try snap.coalesce(1).write.mode("overwrite").parquet(path)
-    finally sc.getPersistentRDDs
-      .collect { case (id, rdd) if !before.contains(id) => rdd }
-      .foreach(_.unpersist(blocking = false))
+    val live = new Path(path)
+    val fs = FsUtil.fsOf(catalog.sparkSession, live)
+    FsUtil.replaceDir(fs, live)(tmp => catalog.coalesce(1).write.parquet(tmp.toString))
   }
 
   /** Headers not present in the catalog, deduplicated to the FIRST

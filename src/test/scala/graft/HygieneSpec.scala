@@ -135,6 +135,29 @@ class HygieneSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 
+  test("directories are replaced only through FsUtil.replaceDir, and stream state has one layout") {
+    // One commit: the temp name, the `.old` grace copy and the checked
+    // renames live in FsUtil.replaceDir; a hand copy elsewhere is a second
+    // commit, and such copies have drifted apart before. One layout:
+    // StreamState compacts into tiered runs only, never generations.
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"read ${files.size} sources under $root")
+    val swap = "\\brenameOrThrow\\(|\\.old\"|\\.tmp-".r
+    val bad = files.flatMap { f =>
+      val fsUtil = f.endsWith(java.nio.file.Paths.get("graft/util/FsUtil.scala"))
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("gen=") || (!fsUtil && {
+            val t = line.trim
+            !t.startsWith("*") && !t.startsWith("//") && !t.startsWith("/*") &&
+              swap.findFirstIn(line).isDefined
+          }) => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
   test("Catalog.save releases its own checkpoint blocks") {
     import spark.implicits._
     SessionHygiene.clear(spark)

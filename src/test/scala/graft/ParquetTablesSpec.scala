@@ -83,13 +83,16 @@ class ParquetTablesSpec extends AnyFunSuite {
     val dir = tempDir("pt-memo")
     spark.range(4).toDF("a").write.parquet(s"$dir/src.parquet")
     val name = s"pt-spec-${java.util.UUID.randomUUID}"
-    val first = Memo.persistedFrame(spark, dir, "src", name)(QueryDef.t(spark, dir, "src"))
+    val first = Memo.sharedFrame(spark, dir, "src", name)(QueryDef.t(spark, dir, "src"))
     assert(first.columns.toSeq == Seq("a"))
     // a new input version: the artifact is rebuilt at the same path
     spark.range(4).toDF("b").write.mode(SaveMode.Overwrite).parquet(s"$dir/src.parquet")
-    val second = Memo.persistedFrame(spark, dir, "src", name)(QueryDef.t(spark, dir, "src"))
+    val second = Memo.sharedFrame(spark, dir, "src", name)(QueryDef.t(spark, dir, "src"))
     assert(second.columns.toSeq == Seq("b"))
     assert(second.count() == 4)
+    val art = s"${System.getProperty("java.io.tmpdir")}/graft-memo-shared-$name-" +
+      dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    Seq(art, s"$art.old").foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 
   test("suite_sf0.01's queries plan the same from cached schemas as from inferred ones") {

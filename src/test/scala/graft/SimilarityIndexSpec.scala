@@ -293,6 +293,8 @@ class SimilarityIndexSpec extends AnyFunSuite {
     // that re-mints its partition stays invisible (rows live in the base)
     assert(StreamState.horizon(spark, s"$sidx/appends") == 2L)
     assert(StreamState.read(spark, s"$sidx/appends").forall(_.isEmpty))
+    // one state layout: the empty run covering [0, 2) is all the base holds
+    assert(new java.io.File(s"$sidx/appends/base").list().toSeq == Seq("run=0-2"))
     val before = knnRows(sidx)
     app0.write.mode("overwrite").parquet(s"$sidx/appends/batch_id=0")
     assert(knnRows(sidx) == before,

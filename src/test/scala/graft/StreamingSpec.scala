@@ -1840,7 +1840,7 @@ class StreamingSpec extends AnyFunSuite {
     run(Files.createTempDirectory("shardcmp-ckpt").toString)
     def card() = SftStream.liveRoleBalance(spark, out).collect().map(_.toSeq).toSet
     val want = card()
-    StreamState.compactShards(spark, out, 2)
+    StreamState.compactShardsTiered(spark, out, 2)
     assert(card() == want, "shard compaction changed the live card")
     StreamState.gc(spark, out) // collect the grace copies
     assert(new java.io.File(out).listFiles().filter(_.isDirectory)
@@ -1960,11 +1960,6 @@ class StreamingSpec extends AnyFunSuite {
         case Seq((_, h1), (l2, _)) => h1 == l2; case _ => true },
       s"live runs must tile [0, H) without gaps or overlap: $live")
     assert(rows() == want, "gc changed the shard rows")
-    // the legacy generation fold refuses a tiered dir (it would drop
-    // the runs' rows)
-    intercept[IllegalArgumentException] {
-      StreamState.compact(spark, out, 5)
-    }
   }
 
   test("checkpoint lineage guard: a fresh checkpoint over an existing " +

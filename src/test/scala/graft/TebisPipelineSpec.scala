@@ -21,6 +21,16 @@ object RecordingClient {
   def reset(): Unit = buf.clear()
 }
 
+/** A write whose tasks fail at commit, after writing their files: the
+  * crash of a job that is already past any planning-time check. */
+class FailingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  override def commitTask(ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+      : org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage =
+    throw new java.io.IOException("injected task commit failure")
+}
+
 /** Spark-level pipeline tests: distributed read, discovery, catalog,
   * unpivot equivalence, batched sink. */
 class TebisPipelineSpec extends AnyFunSuite {
@@ -188,6 +198,35 @@ class TebisPipelineSpec extends AnyFunSuite {
     assert(got.schema == org.apache.spark.sql.Encoders.product[TimeSeriesMeta].schema)
     assert(got.collect().sortBy(_.externalId).toSeq ==
       Seq(TimeSeriesMeta("1", "n1", "d1"), TimeSeriesMeta("2", "n2", "d2")))
+  }
+
+  test("catalog: a save whose write job fails leaves the previous catalog readable and unchanged") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cat-fail")
+    val path = dir.resolve("catalog.parquet").toString
+    Catalog.save(Seq(TimeSeriesMeta("1", "n1", "d1"), TimeSeriesMeta("2", "n2", "d2")).toDS(), path)
+    val want = Catalog.load(spark, path).collect().sortBy(_.externalId).toSeq
+    def unchanged(): Unit = {
+      assert(Catalog.load(spark, path).collect().sortBy(_.externalId).toSeq == want)
+      assert(dir.toFile.list().toSeq == Seq("catalog.parquet"), "a failed save leaves no temp copy")
+    }
+    // the upsert reads the catalog it replaces; the throwing UDF fails its write job
+    val boom = org.apache.spark.sql.functions.udf { (id: String) =>
+      if (id == "3") throw new IllegalStateException("injected row failure")
+      id
+    }
+    val created = Seq(TimeSeriesMeta("3", "n3", "d3")).toDS()
+      .withColumn("externalId", boom($"externalId")).as[TimeSeriesMeta]
+    intercept[Exception](Catalog.save(Catalog.upsert(Catalog.load(spark, path), created), path))
+    unchanged()
+    // every row computes; the job dies committing its output
+    val key = "spark.sql.sources.commitProtocolClass"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[FailingCommitProtocol].getName)
+    try intercept[Exception](Catalog.save(Catalog.upsert(Catalog.load(spark, path),
+      Seq(TimeSeriesMeta("4", "n4", "d4")).toDS()), path))
+    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    unchanged()
   }
 
   test("postFile: <=1000 series per request, empty series skipped") {

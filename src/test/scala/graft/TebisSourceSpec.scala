@@ -49,6 +49,18 @@ class TebisSourceSpec extends AnyFunSuite {
     assert(names == Set("A", "B", "C"))
   }
 
+  test("load(paths*) keeps each root whole: a comma in a directory name splits nothing") {
+    val root = Files.createTempDirectory("tebis-roots")
+    val ab = Files.createDirectory(root.resolve("a,b"))
+    writeFile(ab, "TEBIS_FK_100.csv", tebisContent(Seq("33" -> "A"), 1000, 5))
+    val y = Files.createDirectory(root.resolve("y"))
+    writeFile(y, "TEBIS_FK_200.csv", tebisContent(Seq("34" -> "B"), 2000, 3))
+    val df = spark.read.format("tebis").load(ab.toString, y.toString)
+    assert(df.rdd.getNumPartitions == 2)
+    assert(df.groupBy("externalId").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("33" -> 5L, "34" -> 3L))
+  }
+
   test("one input partition per file — cluster-parallel by construction") {
     val df = spark.read.format("tebis").load(dir.toString)
     assert(df.rdd.getNumPartitions == 3, "3 csv files => 3 partitions (txt ignored)")
